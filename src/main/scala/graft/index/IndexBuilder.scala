@@ -90,6 +90,24 @@ final class GraftIndex(
     else docs.join(deletes.toDF("_del"), col("docId") === col("_del"), "left_anti")
       .as[DocRow](docs.encoder)
   }
+
+  /** Resident doc-range layouts by range count, built on first use and
+    * shared by every searcher over this index. Once this index is
+    * unreachable, Spark's ContextCleaner unpersists them. */
+  @transient private lazy val layouts =
+    new java.util.concurrent.ConcurrentHashMap[Int, graft.search.DocRangeLayout]()
+
+  /** The doc-range layout over `ranges` ranges (built by the first caller;
+    * concurrent callers wait for that build). */
+  private[graft] def docRangeLayout(ranges: Int): graft.search.DocRangeLayout =
+    layouts.computeIfAbsent(ranges, p => graft.search.DocRangeLayout.build(this, p))
+
+  /** Unpersists the resident layouts. The index stays usable: the next
+    * search lays it out again. */
+  def close(): Unit = {
+    layouts.values().forEach(_.release())
+    layouts.clear()
+  }
 }
 
 object IndexBuilder {
@@ -120,10 +138,22 @@ object IndexBuilder {
 
   /** Key-table rows up to which the docId attach broadcasts the ranked keys
     * instead of shuffle-hash-joining them (override with
-    * `spark.graft.docid.broadcastMaxRows`). ~60 B/key: 2M rows is a modest
+    * [[DOCID_BROADCAST_MAX_ROWS_KEY]]). ~60 B/key: 2M rows is a modest
     * broadcast; above it the content-preserving shuffle-hash path takes
     * over. */
   val DOCID_BROADCAST_MAX_ROWS = 2000000L
+
+  val DOCID_BROADCAST_MAX_ROWS_KEY = "spark.graft.docid.broadcastMaxRows"
+
+  /** The session's docId-attach broadcast cap: [[DOCID_BROADCAST_MAX_ROWS]]
+    * unless [[DOCID_BROADCAST_MAX_ROWS_KEY]] is set. A value that is not a
+    * whole number fails here, naming the key and the value. */
+  def docIdBroadcastMaxRows(spark: SparkSession): Long =
+    spark.conf.getOption(DOCID_BROADCAST_MAX_ROWS_KEY) match {
+      case None => DOCID_BROADCAST_MAX_ROWS
+      case Some(v) => v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$DOCID_BROADCAST_MAX_ROWS_KEY must be a whole number of rows, got '$v'"))
+    }
 
   /** Deterministic docId assignment: global rank in the total order of
     * (repo, path, commit) — independent of partition count, the distributed
@@ -163,6 +193,7 @@ object IndexBuilder {
       sortFields: Seq[String] = Nil): (Dataset[(CodeFile, Long)], () => Unit) = {
     val spark = files.sparkSession
     import spark.implicits._
+    val bcastMax = docIdBroadcastMaxRows(spark)
     val parts = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
     // one range sort of the keys projection, persisted; ranks are the
     // per-partition offsets (exact, partition order == range order)
@@ -203,8 +234,6 @@ object IndexBuilder {
         it.map { case (r, p, c) => val id = next; next += 1; (r, p, c, id) }
       }
       .toDF("_r", "_p", "_c", "_docId")
-    val bcastMax = spark.conf.getOption("spark.graft.docid.broadcastMaxRows")
-      .map(_.toLong).getOrElse(DOCID_BROADCAST_MAX_ROWS)
     val attach =
       if (total <= bcastMax) org.apache.spark.sql.functions.broadcast(keyIds)
       else keyIds.hint("shuffle_hash")

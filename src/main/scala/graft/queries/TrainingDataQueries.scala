@@ -175,8 +175,8 @@ object TrainingDataQueries {
     // ONE shuffle (keyed window on the signature hash) assigns every doc
     // its group representative; the persisted frame feeds the band join,
     // the intra-group expansion and the inter-group expansion without
-    // recomputing the shingle->minhash pipeline per consumer. The previous
-    // invocation's cache is released here (sequential-query contract).
+    // recomputing the shingle->minhash pipeline per consumer. It stays
+    // persisted on purpose: see the NOTE on persist() above.
     val withSig = sig
       .withColumn("fullsig", md5(concat(allH: _*)))
       .withColumn("rep", min("doc_id").over(Window.partitionBy("fullsig")))

@@ -1,0 +1,118 @@
+package graft.search
+
+import scala.reflect.ClassTag
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
+import org.apache.spark.storage.StorageLevel
+import graft.index.{BlockRow, GraftIndex}
+
+/** One doc range `[lo, hi)` of a [[DocRangeLayout]]: every posting block
+  * overlapping the range, grouped by term and docId-sorted (a block
+  * straddling a range boundary sits in every range it overlaps; the scorers
+  * clip it by `[lo, hi)`), plus the range's tombstones (null = none). */
+final class DocRange(
+    val lo: Long,
+    val hi: Long,
+    val blocks: Map[String, Array[BlockRow]],
+    val live: LiveDocs) extends Serializable {
+
+  /** The range's term dictionary, sorted: multi-term clauses seek it. */
+  private val terms: Array[String] = blocks.keys.toArray.sorted
+
+  /** The blocks a query touches in this range: its exact terms by lookup,
+    * its multi-term clauses by `matches` over this range's terms. */
+  def select(exact: Set[String], mts: Seq[MultiTermQ]): Map[String, Array[BlockRow]] = {
+    val out = Map.newBuilder[String, Array[BlockRow]]
+    exact.foreach(t => blocks.get(t).foreach(b => out += t -> b))
+    mts.foreach(mt => matching(mt).foreach(t => out += t -> blocks(t)))
+    out.result()
+  }
+
+  /** Terms of this range that `mt` matches. The scan starts at the clause's
+    * seek key (range lower bound or literal prefix) and stops when a term
+    * leaves that band, so a prefix clause reads only its own slice. */
+  private def matching(mt: MultiTermQ): Iterator[String] = {
+    val (from, inBand): (String, String => Boolean) = mt match {
+      case TermRangeQ(lower, upper, _, _) =>
+        (if (lower == null) "" else lower, t => upper == null || t.compareTo(upper) <= 0)
+      case _ =>
+        val p = Query.literalPrefix(mt)
+        (p, t => t.startsWith(p))
+    }
+    var lo = 0
+    var hi = terms.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (terms(mid).compareTo(from) < 0) lo = mid + 1 else hi = mid
+    }
+    terms.iterator.drop(lo).takeWhile(inBand).filter(mt.matches)
+  }
+}
+
+/** The resident doc-range layout of one index: the posting blocks laid out
+  * once by docId range, one [[DocRange]] record per range, persisted
+  * `MEMORY_AND_DISK` — Solr's document-partitioned shards held open
+  * (SURVEY.md §3.3). A search is then one map-only job over the records:
+  * no block scan, no shuffle, no per-query Catalyst plan. */
+final class DocRangeLayout private (val ranges: RDD[DocRange]) {
+
+  /** Runs `f` over the ranges in ascending docId order, inside ONE task, so
+    * each range's [[ScoreFloor]] hand-off to the next is deterministic. */
+  def serial[T: ClassTag](f: DocRange => Iterator[T]): RDD[T] =
+    ranges.coalesce(1, shuffle = false, Some(DocRangeLayout.InOrder)).mapPartitions(_.flatMap(f))
+
+  def release(): Unit = ranges.unpersist(blocking = false)
+}
+
+object DocRangeLayout {
+
+  /** Groups every range of the parent into one partition, in range order. */
+  private object InOrder extends PartitionCoalescer with Serializable {
+    override def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val g = new PartitionGroup()
+      g.partitions ++= parent.partitions
+      Array(g)
+    }
+  }
+
+  /** Range `pid` lives in partition `pid`. */
+  private final class ByRange(n: Int) extends Partitioner {
+    override def numPartitions: Int = n
+    override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  /** Lays `index` out over `p` aligned docId ranges of `ceil(maxDoc / p)`
+    * docs each, in one job: every block row is keyed by each range it
+    * overlaps, tombstones by their range, and both are cogrouped into one
+    * record per range (ranges without blocks still get an empty record, so
+    * MatchAll-anchored queries reach them). The index must hold a doc. */
+  def build(index: GraftIndex, p: Int): DocRangeLayout = {
+    val sc = index.spark.sparkContext
+    val maxDoc = index.fieldStats.maxDocId + 1
+    require(maxDoc > 0, "empty index has no doc ranges")
+    val span = math.max(1L, (maxDoc + p - 1) / p)
+    val nParts = ((maxDoc + span - 1) / span).toInt
+    val blocks = index.blocks.rdd.flatMap { blk =>
+      (blk.firstDocId / span to blk.lastDocId / span).iterator.map(pid => (pid.toInt, blk))
+    }
+    val deletes: RDD[(Int, Long)] =
+      if (!index.hasDeletes) sc.emptyRDD
+      else index.deletes.rdd.filter(_ < maxDoc).map(d => ((d / span).toInt, d))
+    val ranges = blocks.cogroup(deletes, new ByRange(nParts)).mapPartitionsWithIndex { (pid, it) =>
+      val rows = it.toArray
+      val byTerm = rows.iterator.flatMap(_._2._1).toArray.groupBy(_.term)
+        .map { case (t, arr) => t -> arr.sortBy(_.firstDocId) }
+      val deleted = rows.iterator.flatMap(_._2._2).toArray
+      val live = if (deleted.isEmpty) null else {
+        java.util.Arrays.sort(deleted)
+        new LiveDocs(deleted)
+      }
+      val lo = pid.toLong * span
+      Iterator.single(new DocRange(lo, math.min(lo + span, maxDoc), byTerm, live))
+    }
+    ranges.setName(s"graft doc-range layout ($nParts ranges)")
+    ranges.persist(StorageLevel.MEMORY_AND_DISK)
+    ranges.count()
+    new DocRangeLayout(ranges)
+  }
+}

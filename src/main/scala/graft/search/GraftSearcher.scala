@@ -1,5 +1,7 @@
 package graft.search
 
+import scala.reflect.ClassTag
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
@@ -288,8 +290,8 @@ object ScorerBuilder {
       if (tis.isEmpty) EmptyScorer
       else new ConstantScoreScorer(new DisjunctionSumScorer(tis.toArray), boost)
 
-    // multi-term queries expand IN-PARTITION against the terms whose blocks
-    // the block-scan predicate shipped here — distributed, uncapped
+    // multi-term queries expand IN-PARTITION against the terms the doc
+    // range selected for them (DocRange.select) — distributed, uncapped
     // (MultiTermQuery CONSTANT_SCORE rewrite; no 1024-term truncation, no
     // driver-side dictionary collect)
     case mt: MultiTermQ =>
@@ -438,17 +440,29 @@ object GraftSearcher {
       else 1f - d.toFloat / math.min(term.length, f.term.length).toFloat
     case _ => 1f
   }
+
+  /** The gather order: score desc, docId asc (equal scores, including
+    * 0.0 and -0.0, tie on docId). */
+  private def scoreDescDocAsc[T](score: T => Double, docId: T => Long): Ordering[T] =
+    (a, b) => {
+      val (sa, sb) = (score(a), score(b))
+      if (sa > sb) -1 else if (sa < sb) 1 else java.lang.Long.compare(docId(a), docId(b))
+    }
+
+  val bestFirst: Ordering[ScoreDoc] = scoreDescDocAsc(_.score.toDouble, _.docId)
+  val bestFirstD: Ordering[ScoreDocD] = scoreDescDocAsc(_.score, _.docId)
 }
 
 /** Query-side engine over a [[GraftIndex]].
   *
-  * Distributed execution shape (SURVEY.md §3.2): filter the block table to
-  * the query's terms (parquet min/max pushdown on the sorted term column =
-  * the term-dictionary seek), split the docId space into P aligned ranges
-  * (blocks straddling a boundary are sent to both sides and clipped), run
-  * the pruned top-k per range, then one global
-  * `orderBy(score desc, docId asc).limit(k)` over the tiny k·P union —
-  * exactly Solr's scatter-gather merge (`QueryComponent.mergeIds`).
+  * Distributed execution shape (SURVEY.md §3.2-3.3): the index is laid out
+  * once into P aligned docId ranges ([[DocRangeLayout]], resident and
+  * shared by every searcher over the index; blocks straddling a boundary
+  * sit in both ranges and are clipped). A query is one map-only job over
+  * that layout: each range picks the query's blocks from its own term
+  * dictionary and runs the pruned top-k, and the driver merges the ≤ k·P
+  * hits by (score desc, docId asc) — Solr's scatter-gather merge
+  * (`QueryComponent.mergeIds`) over document-partitioned shards.
   */
 final class GraftSearcher(
     val index: GraftIndex,
@@ -611,7 +625,7 @@ final class GraftSearcher(
   /** Rewrite + collect per-term df stats (the `termStatistics` lookup — a
     * few rows via parquet term pushdown). Multi-term queries are NOT
     * expanded here: their dictionary predicate executes distributed inside
-    * the block scan and the doc-range partitions (no driver-side term
+    * each doc range, over that range's own terms (no driver-side term
     * collection, no expansion cap). */
   /** Per-searcher term-stats cache — the in-RAM term-dictionary structure a
     * Lucene searcher holds open (and Solr's statsCache): the index a
@@ -679,12 +693,14 @@ final class GraftSearcher(
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     })
 
-  /** Release cached auxiliary tables (the delete-neighborhood index). The
-    * searcher stays usable — the index rebuilds lazily on the next fuzzy
-    * query. */
+  /** Release cached auxiliary tables (the delete-neighborhood index) and
+    * the index's resident doc-range layout, which other searchers over the
+    * same index share. The searcher stays usable — both rebuild lazily on
+    * the next query that needs them. */
   def close(): Unit = {
     deleteIndexes.values().forEach(df => df.unpersist(false))
     deleteIndexes.clear()
+    index.close()
   }
 
   /** The dictionary rows a fuzzy clause expands to, via the delete band:
@@ -780,14 +796,16 @@ final class GraftSearcher(
   }
 
   /** Every block row the query can touch — the distributed term-dictionary
-    * seek. Exact/prefix/range predicates filter the block scan directly
-    * (parquet min/max row-group pruning). Fuzzy/regexp/wildcard queries are
-    * DICTIONARY-FIRST: their predicate evaluates against `index.termStats`
-    * (ONE row per term) and the block table is narrowed by a semi-join on
-    * the matching terms — never by running `levenshtein`/regex over every
-    * block row (~128x more rows than the dictionary: one per term per
-    * 128-doc block per salt bucket). Both scans still get the cheap
-    * superset pre-filter ([[Query.blockPredicate]]) pushed down. */
+    * seek over the stored block table, independent of the resident layout
+    * (the input of [[bruteForce]]). Exact/prefix/range predicates filter
+    * the block scan directly (parquet min/max row-group pruning).
+    * Fuzzy/regexp/wildcard queries are DICTIONARY-FIRST: their predicate
+    * evaluates against `index.termStats` (ONE row per term) and the block
+    * table is narrowed by a semi-join on the matching terms — never by
+    * running `levenshtein`/regex over every block row (~128x more rows than
+    * the dictionary: one per term per 128-doc block per salt bucket). Both
+    * scans still get the cheap superset pre-filter
+    * ([[Query.blockPredicate]]) pushed down. */
   private[graft] def filteredBlocks(q: Query): Dataset[BlockRow] = {
     val pred = Query.blockPredicate(q)
     if (pred.isEmpty) return spark.emptyDataset[BlockRow]
@@ -827,69 +845,32 @@ final class GraftSearcher(
   def search(queryStr: String, k: Int): Array[ScoreDoc] = search(parse(queryStr), k, null)
 
   def search(q0: Query, k: Int, after: ScoreDoc = null, numPartitions: Int = 0): Array[ScoreDoc] = {
-    val ds = searchDS(q0, k, after, numPartitions)
-    try ds.orderBy(desc("score"), asc("docId")).limit(k).collect()
+    val hits = searchRDD(q0, k, after, numPartitions)
+    try hits.collect().sorted(GraftSearcher.bestFirst).take(k)
     finally ScoreFloor.clear(lastFloorId) // local mode: driver JVM == executor JVM
   }
 
-  /** Shared scatter stage: filter the block table to the query's terms
-    * (parquet min/max pushdown = the term-dictionary seek), assign blocks to
-    * P aligned docId ranges (straddlers go to every range they overlap and
-    * are clipped by [lo, hi) inside the scorer), and run `f` once per range.
-    * Every search surface (Float top-k, double top-k, match set) is this
-    * scatter + a different per-range collector. */
-  private def perRange[T: org.apache.spark.sql.Encoder](
+  /** Runs `f` once per doc range of the index's resident layout — the one
+    * map-only job behind every search surface (Float top-k, double top-k,
+    * match set, counting and index-order collection). Each range hands `f`
+    * the query's blocks from its own dictionary (exact terms by lookup,
+    * multi-term clauses by `matches`), its `[lo, hi)` and its tombstones.
+    * Every range runs, including ranges holding none of the query's blocks
+    * (a MatchAll-anchored query such as NOT matches there; any other query
+    * builds an empty scorer). Ranges run in ascending docId order inside
+    * one task, so the [[ScoreFloor]] hand-off between them is
+    * deterministic. P = `numPartitions`, or `defaultParallelism` when 0. */
+  private def perRange[T: ClassTag](
       q: Query,
       numPartitions: Int)(
-      f: (Query, Map[String, Array[BlockRow]], Long, Long, LiveDocs) => Iterator[T]): Dataset[T] = {
-    val maxDoc = fieldStats.maxDocId + 1
-    if (maxDoc <= 0) return spark.emptyDataset[T]
+      f: (Query, Map[String, Array[BlockRow]], Long, Long, LiveDocs) => Iterator[T]): RDD[T] = {
+    if (fieldStats.maxDocId < 0) return spark.sparkContext.emptyRDD[T]
     val p = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
-    val span = math.max(1L, (maxDoc + p - 1) / p)
-    val nParts = ((maxDoc + span - 1) / span).toInt
-
-    val filtered: Dataset[BlockRow] = filteredBlocks(q)
-
-    // blocks and tombstones ride the same scatter keyed by doc range
-    // (deletes are shipped only when the manifest has any — zero overhead
-    // on an append-only index)
-    val assigned: Dataset[(Int, BlockRow, Long)] = filtered.flatMap { blk =>
-      (blk.firstDocId / span to blk.lastDocId / span)
-        .map(pid => (pid.toInt, blk, -1L))
-    }
-    val payload =
-      if (!index.hasDeletes) assigned
-      else assigned.union(index.deletes.map(d => ((d / span).toInt, null: BlockRow, d)))
+    val exact = Query.terms(q)
+    val mts = Query.multiTerms(q)
     val qB = q
     val fB = f
-    def runRange(pid: Int, rowsIt: Iterator[(Int, BlockRow, Long)]): Iterator[T] = {
-      val rows = rowsIt.toArray
-      val termBlocks: Map[String, Array[BlockRow]] =
-        rows.collect { case (_, blk, _) if blk != null => blk }
-          .groupBy(_.term)
-          .map { case (t, arr) => t -> arr.sortBy(_.firstDocId) }
-      val deleted = rows.collect { case (_, blk, d) if blk == null && d >= 0 => d }
-      val live = if (deleted.isEmpty) null else {
-        java.util.Arrays.sort(deleted)
-        new LiveDocs(deleted)
-      }
-      val lo = pid.toLong * span
-      val hi = math.min(lo + span, maxDoc)
-      fB(qB, termBlocks, lo, hi, live)
-    }
-    if (!Query.containsMatchAll(q)) {
-      // ordinary queries match nothing in a range without posting blocks —
-      // one grouped scatter, no synthetic range driver
-      payload.groupByKey(_._1).flatMapGroups(runRange _)
-    } else {
-      // MatchAll-anchored queries (e.g. NOT) must visit EVERY doc range,
-      // including ranges that received no blocks: cogroup against the full
-      // range list so empty ranges still execute
-      val pids = spark.range(0, nParts.toLong).map(_.toInt)
-      pids.groupByKey(identity).cogroup(payload.groupByKey(_._1)) {
-        (pid, _, rowsIt) => runRange(pid, rowsIt)
-      }
-    }
+    index.docRangeLayout(p).serial(r => fB(qB, r.select(exact, mts), r.lo, r.hi, r.live))
   }
 
   /** Top-k with totalHits + relation (`TopScoreDocCollector` /
@@ -918,7 +899,7 @@ final class GraftSearcher(
     }.collect()
     val total = ranges.map(_.seen).sum
     val gte = ranges.exists(_.pruned)
-    val hits = ranges.flatMap(_.hits).sortBy(sd => (-sd.score, sd.docId)).take(k)
+    val hits = ranges.flatMap(_.hits).sorted(GraftSearcher.bestFirst).take(k)
     (hits, total, if (gte) "GTE" else "EQ")
   }
 
@@ -931,9 +912,12 @@ final class GraftSearcher(
     * Mints a [[ScoreFloor]] id so doc-range partitions share their k-th
     * score: partitions full of globally-non-competitive docs skip whole
     * block ranges instead of each redundantly collecting a local top-k. */
-  def searchDS(q0: Query, k: Int, after: ScoreDoc = null, numPartitions: Int = 0): Dataset[ScoreDoc] = {
+  def searchDS(q0: Query, k: Int, after: ScoreDoc = null, numPartitions: Int = 0): Dataset[ScoreDoc] =
+    spark.createDataset(searchRDD(q0, k, after, numPartitions))
+
+  private def searchRDD(q0: Query, k: Int, after: ScoreDoc, numPartitions: Int): RDD[ScoreDoc] = {
     val (q, ctx) = plan(q0)
-    if (q == MatchNoneQ) return spark.emptyDataset[ScoreDoc]
+    if (q == MatchNoneQ) return spark.sparkContext.emptyRDD[ScoreDoc]
     val floorId = {
       var id = 0L
       while (id == 0L) id = java.util.concurrent.ThreadLocalRandom.current().nextLong()
@@ -952,9 +936,12 @@ final class GraftSearcher(
     * same index, same iterators, textbook double BM25 on the quantized norm
     * lengths, rounded to 4 decimals BEFORE ranking — every score is exactly
     * recomputable by the DuckDB oracle. */
-  def searchDoubleDS(q0: Query, k: Int, after: ScoreDocD = null, numPartitions: Int = 0): Dataset[ScoreDocD] = {
+  def searchDoubleDS(q0: Query, k: Int, after: ScoreDocD = null, numPartitions: Int = 0): Dataset[ScoreDocD] =
+    spark.createDataset(searchDoubleRDD(q0, k, after, numPartitions))
+
+  private def searchDoubleRDD(q0: Query, k: Int, after: ScoreDocD, numPartitions: Int): RDD[ScoreDocD] = {
     val (q, ctx0) = plan(q0)
-    if (q == MatchNoneQ) return spark.emptyDataset[ScoreDocD]
+    if (q == MatchNoneQ) return spark.sparkContext.emptyRDD[ScoreDocD]
     val ctxB = ctx0.copy(doubleMode = true)
     val afterB = after
     val kB = k
@@ -964,11 +951,8 @@ final class GraftSearcher(
   }
 
   /** Global double-precision top-k, best-first. */
-  def searchDouble(q0: Query, k: Int, after: ScoreDocD = null): Array[ScoreDocD] = {
-    import spark.implicits._
-    searchDoubleDS(q0, k, after)
-      .orderBy(desc("score"), asc("docId")).limit(k).as[ScoreDocD].collect()
-  }
+  def searchDouble(q0: Query, k: Int, after: ScoreDocD = null): Array[ScoreDocD] =
+    searchDoubleRDD(q0, k, after, 0).collect().sorted(GraftSearcher.bestFirstD).take(k)
 
   /** DataFrame surface for the driver contract. */
   def searchDF(queryStr: String, k: Int): DataFrame =
@@ -992,7 +976,7 @@ final class GraftSearcher(
     val ctxB = ctx
     val kB = k
     val bases = index.sortRunBases.toArray.sorted
-    perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live) =>
+    spark.createDataset(perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live) =>
       // split [lo, hi) at sorted-run boundaries: docId order equals the index
       // sort only WITHIN a run (appends/merges concatenate runs unsorted)
       val cuts = (lo +: bases.filter(b => b > lo && b < hi).toSeq :+ hi).distinct.sorted
@@ -1008,7 +992,7 @@ final class GraftSearcher(
           }
         case _ => Iterator.empty[Long]
       }
-    }
+    })
   }
 
   /** All matching docIds, unranked — the boolean match-set surface
@@ -1018,7 +1002,7 @@ final class GraftSearcher(
     val (q, ctx) = plan(q0)
     if (q == MatchNoneQ) return spark.emptyDataset[Long]
     val ctxB = ctx
-    perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live) =>
+    spark.createDataset(perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live) =>
       val root = ScorerBuilder.build(qq, 1f, termBlocks, ctxB, lo, hi, live)
       if (root eq EmptyScorer) Iterator.empty[Long]
       else new Iterator[Long] {
@@ -1026,7 +1010,7 @@ final class GraftSearcher(
         override def hasNext: Boolean = d != DocScorer.NO_MORE
         override def next(): Long = { val r = d; d = root.nextDoc(); r }
       }
-    }
+    })
   }
 
   /** Every match with its double-precision score, round4'd like
@@ -1045,7 +1029,7 @@ final class GraftSearcher(
     val bc =
       if (docFilter == null) null
       else spark.sparkContext.broadcast(docFilter.sorted)
-    perRange[ScoreDocD](q, 0) { (qq, termBlocks, lo, hi, live) =>
+    spark.createDataset(perRange[ScoreDocD](q, 0) { (qq, termBlocks, lo, hi, live) =>
       val root = ScorerBuilder.build(qq, 1f, termBlocks, ctxB, lo, hi, live)
       if (root eq EmptyScorer) Iterator.empty[ScoreDocD]
       else if (bc == null) new Iterator[ScoreDocD] {
@@ -1077,7 +1061,7 @@ final class GraftSearcher(
           override def next(): ScoreDocD = { val r = nextHit; nextHit = fetch(); r }
         }
       }
-    }
+    })
   }
 
   /** Driver-side exhaustive oracle: same scorer tree, zero pruning, one

@@ -105,11 +105,12 @@ final case class BoostQ(q: Query, boost: Float) extends Query
   * lucene/core/src/java/org/apache/lucene/search/MultiTermQuery.java:68,94).
   *
   * Expansion is DISTRIBUTED and uncapped (Lucene never truncates
-  * CONSTANT_SCORE rewrites): `matches` runs inside each doc-range partition
-  * against the terms shipped there, and the equivalent Column predicate
-  * ([[Query.blockPredicate]]) filters the block scan — prefix/range
-  * predicates reach the parquet reader as min/max row-group pruning (the
-  * term-dictionary seek), regex/fuzzy evaluate in the scan stage. */
+  * CONSTANT_SCORE rewrites): `matches` runs inside each doc range of the
+  * resident layout against that range's sorted terms, from the clause's
+  * seek key ([[Query.literalPrefix]]). Scans of the stored block table
+  * use the equivalent Column predicate ([[Query.blockPredicate]]) — there
+  * prefix/range predicates reach the parquet reader as min/max row-group
+  * pruning, regex/fuzzy evaluate in the scan stage. */
 sealed trait MultiTermQ extends Query {
   def matches(term: String): Boolean
 }
@@ -295,16 +296,6 @@ object Query {
     case _ => false
   }
 
-  /** Does the tree contain MatchAll (e.g. a NOT anchor)? Such queries must
-    * visit every doc range, even ranges holding no posting blocks. */
-  def containsMatchAll(q: Query): Boolean = q match {
-    case MatchAllQ => true
-    case BoolQ(m, s, n, _) => (m ++ s ++ n).exists(containsMatchAll)
-    case DisMaxQ(ds, _) => ds.exists(containsMatchAll)
-    case BoostQ(sub, _) => containsMatchAll(sub)
-    case _ => false
-  }
-
   /** All multi-term (dictionary-predicate) sub-queries. */
   def multiTerms(q: Query): Seq[MultiTermQ] = q match {
     case mt: MultiTermQ => Seq(mt)
@@ -476,13 +467,25 @@ object Query {
     all
   }
 
+  /** The literal prefix every term `mt` matches starts with ("" = none):
+    * the dictionary seek key of a prefix, wildcard, regexp or
+    * prefix-anchored fuzzy clause. Term ranges seek their lower bound
+    * instead and return "". */
+  def literalPrefix(mt: MultiTermQ): String = mt match {
+    case PrefixQ(p) => p
+    case w: WildcardQ => w.pattern.takeWhile(c => c != '*' && c != '?')
+    case r: RegexpQ => regexLiteralPrefix(r.pattern)
+    case f: FuzzyQ => f.term.substring(0, math.min(f.prefixLength, f.term.length))
+    case _: TermRangeQ => ""
+  }
+
   def scanPrefilter(mt: MultiTermQ): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
     val term = col("term")
     mt match {
       case PrefixQ(p) => term.startsWith(p)
       case w: WildcardQ =>
-        val litPrefix = w.pattern.takeWhile(c => c != '*' && c != '?')
+        val litPrefix = literalPrefix(w)
         if (litPrefix.nonEmpty) term.startsWith(litPrefix) else lit(true)
       case f: FuzzyQ =>
         val q16 = f.term.length
@@ -491,10 +494,10 @@ object Query {
         // the exact-prefix anchor pushes down as a range seek (parquet
         // min/max pruning on the sorted term column), like PrefixQ
         if (f.prefixLength > 0)
-          lenGuard && term.startsWith(f.term.substring(0, math.min(f.prefixLength, f.term.length)))
+          lenGuard && term.startsWith(literalPrefix(f))
         else lenGuard
       case r: RegexpQ =>
-        val lp = regexLiteralPrefix(r.pattern)
+        val lp = literalPrefix(r)
         if (lp.nonEmpty) term.startsWith(lp) else lit(true)
       case tr: TermRangeQ =>
         var c = lit(true)

@@ -24,6 +24,18 @@ class IndexBuildSpec extends AnyFunSuite {
     docs.foreach(d => assert(alt((d.repo, d.path, d.commit)) == d.docId))
   }
 
+  test("a malformed docId broadcast cap fails naming the key and the value") {
+    // a session of its own: the conf change cannot leak into other tests
+    val s2 = spark.newSession()
+    s2.conf.set(IndexBuilder.DOCID_BROADCAST_MAX_ROWS_KEY, "2M")
+    val e = intercept[IllegalArgumentException](
+      IndexBuilder.assignDocIds(s2.createDataset(tiny)))
+    assert(e.getMessage.contains("spark.graft.docid.broadcastMaxRows"), e.getMessage)
+    assert(e.getMessage.contains("'2M'"), e.getMessage)
+    s2.conf.set(IndexBuilder.DOCID_BROADCAST_MAX_ROWS_KEY, " 5 ")
+    assert(IndexBuilder.docIdBroadcastMaxRows(s2) == 5L)
+  }
+
   test("termStatsOfAnalyzed == termStatsOf(blocks) row for row (r06)") {
     // the build now writes stats from the persisted analysis; prove it
     // equals the blocks-derived aggregation the resume path still uses

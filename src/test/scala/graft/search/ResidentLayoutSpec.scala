@@ -1,0 +1,181 @@
+package graft.search
+
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark
+import graft.fixtures.CodeCorpus
+import graft.index._
+
+/** The resident doc-range layout behind every search surface: results on a
+  * two-segment index with tombstones equal the exhaustive oracle at every
+  * range count, pruning counters repeat exactly, and a search over a built
+  * layout is one map-only job shared by every searcher of the index. */
+class ResidentLayoutSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  /** Two segments (250 + 150 docs plus 3 docs holding `zebra`, so that term
+    * lives only in the second segment's doc ranges), sorted by `lang`,
+    * with every 9th docId tombstoned. */
+  private lazy val dir: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft-resident-").toString
+    val cfg = IndexConfig(numPartitions = 2, sortFields = Seq("lang"))
+    val all = CodeCorpus.files(400)
+    val zebras = (0 until 3).map { i =>
+      val c = s"zebra quokka if buffer $i"
+      CodeFile("repo-z", s"z/Zebra$i.scala", "c0", "scala", c, IndexBuilder.sha256Hex(c))
+    }
+    IndexStore.buildAndCommit(spark.createDataset(all.take(250)), d, cfg)
+    IndexStore.buildAndCommit(spark.createDataset(all.drop(250) ++ zebras), d, cfg)
+    IndexStore.deleteDocs(spark, d, spark.range(0, 403, 9).as[Long])
+    d
+  }
+  private lazy val index = IndexStore.open(spark, dir)
+  private lazy val searcher = new GraftSearcher(index)
+
+  private val parser = new QueryParser(graft.analysis.Analyzers.standard)
+  private val queries: Seq[(String, Query)] = Seq(
+    "term" -> parser.parse("indexwriter"),
+    "and" -> parser.parse("mergepolicy AND buffer"),
+    "or" -> parser.parse("if OR segment OR zebra"),
+    "phrase" -> parser.parse("\"if return\""),
+    "prefix" -> PrefixQ("merge"),
+    "wildcard" -> WildcardQ("s?gm*t"),
+    "fuzzy" -> FuzzyQ("buffr", 1),
+    "not" -> parser.parse("NOT zebra"),
+    "and-not" -> parser.parse("indexwriter NOT buffer"))
+
+  /** Every live match, from the exhaustive single-range oracle. */
+  private def exhaustive(q: Query): Set[Long] = searcher.bruteForce(q, 1000).map(_.docId).toSet
+
+  test("fixture: two segments, tombstones, zebra only in the second segment") {
+    assert(IndexStore.readManifest(dir).get.segments.size == 2)
+    assert(index.hasDeletes)
+    val zebra = exhaustive(TermQ("zebra"))
+    assert(zebra.nonEmpty && zebra.forall(_ >= 250L))
+  }
+
+  for (p <- Seq(0, 2, 8); (name, q) <- queries) {
+    test(s"$name at $p ranges: every surface equals the exhaustive oracle") {
+      val all = exhaustive(q)
+      assert(all.nonEmpty, s"$name matches nothing")
+      val top = searcher.bruteForce(q, 10).toSeq
+      assert(searcher.search(q, 10, null, p).toSeq == top)
+      assert(searcher.searchDS(q, 10, null, p).collect().sorted(GraftSearcher.bestFirst)
+        .take(10).toSeq == top)
+      val (hits, total, rel) = searcher.searchWithTotal(q, 10, Long.MaxValue, p)
+      assert(hits.toSeq == top)
+      assert(total == all.size.toLong && rel == "EQ")
+      assert(searcher.matchesDS(q, p).collect().toSet == all)
+      val scored = searcher.scoreAllDoubleDS(q).collect()
+      assert(scored.map(_.docId).toSet == all)
+      assert(searcher.searchDoubleDS(q, 10, null, p).collect().sorted(GraftSearcher.bestFirstD)
+        .take(10).toSeq == scored.sorted(GraftSearcher.bestFirstD).take(10).toSeq)
+      // index order: each sorted run's 5 smallest matches are collected
+      val ordered = searcher.searchByIndexOrder(q, 5, p).collect().toSet
+      assert(ordered.subsetOf(all))
+      val bases = index.sortRunBases.sorted :+ Long.MaxValue
+      bases.sliding(2).foreach { case Seq(lo, hi) =>
+        val first = all.filter(d => d >= lo && d < hi).toSeq.sorted.take(5)
+        assert(first.forall(ordered.contains), s"run [$lo, $hi) lost its first matches")
+      }
+    }
+  }
+
+  test("NOT reaches doc ranges that hold none of the query's blocks") {
+    val notZebra = searcher.matchesDS(searcher.parse("NOT zebra"), 8).collect().toSet
+    // the first segment's ranges hold no zebra block, yet their live docs match
+    assert(notZebra.exists(_ < 250L))
+    assert(notZebra == exhaustive(searcher.parse("NOT zebra")))
+    assert(notZebra.forall(_ % 9 != 0), "a tombstoned doc matched NOT")
+  }
+
+  test("per-query decoded/skipped counts repeat exactly on fresh searchers") {
+    def deltas(s: GraftSearcher): Seq[(Long, Long)] = queries.map { case (_, q) =>
+      val d0 = s.counters.decoded.value: Long
+      val k0 = s.counters.skipped.value: Long
+      s.search(q, 3)
+      ((s.counters.decoded.value: Long) - d0, (s.counters.skipped.value: Long) - k0)
+    }
+    val a = deltas(new GraftSearcher(index))
+    // the second searcher opens the index again: a freshly built layout
+    val b = deltas(new GraftSearcher(IndexStore.open(spark, dir)))
+    assert(a == b)
+    assert(a.map(_._1).sum > 0)
+  }
+
+  /** Jobs, stages that ran, and shuffle bytes written by `body`'s jobs. */
+  private def jobShape(body: => Unit): (Int, Int, Long) = {
+    val sc = spark.sparkContext
+    val group = s"resident-${System.nanoTime()}"
+    val jobs = new AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffled = new AtomicLong
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val markerGroup = group + "-marker"
+    def inGroup(props: java.util.Properties, g: String): Boolean =
+      props != null && props.getProperty("spark.jobGroup.id") == g
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (inGroup(e.properties, group)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        if (inGroup(e.properties, group)) stages.add(e.stageInfo.stageId)
+        if (inGroup(e.properties, markerGroup)) marker.countDown()
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job shape")
+      try body finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job's stage is
+      // seen, every event of `body` has been delivered
+      sc.setJobGroup(markerGroup, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    (jobs.get.toInt, stages.size, shuffled.get)
+  }
+
+  private def layoutRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.values
+      .filter(r => r.name != null && r.name.startsWith("graft doc-range layout")).map(_.id).toSet
+
+  test("a search over a built layout is one job, one stage, no shuffle") {
+    val idx = IndexStore.open(spark, dir)
+    val s = new GraftSearcher(idx)
+    val q = s.parse("if OR segment")
+    s.search(q, 10) // builds the layout and fills the stats cache
+    val (jobs, stages, shuffled) = jobShape(s.search(q, 10))
+    assert((jobs, stages, shuffled) == (1, 1, 0L))
+    val not = s.parse("NOT zebra")
+    s.plan(not) // stats cache
+    val (nJobs, nStages, nShuffled) = jobShape(s.matchesDS(not).collect())
+    assert((nJobs, nStages, nShuffled) == (1, 1, 0L))
+  }
+
+  test("searchers over one index share its layout; close releases it") {
+    val idx = IndexStore.open(spark, dir)
+    val s1 = new GraftSearcher(idx)
+    val q = s1.parse("mergepolicy OR buffer")
+    val before = layoutRdds
+    val hits = s1.search(q, 10)
+    val built = layoutRdds -- before
+    assert(built.size == 1)
+    // a second searcher, a similarity copy: no new layout
+    val s2 = new GraftSearcher(idx)
+    assert(s2.search(q, 10).toSeq == hits.toSeq)
+    s1.withSimilarity(ClassicSim).search(q, 10)
+    assert(layoutRdds -- before == built)
+    s1.close()
+    assert((layoutRdds intersect built).isEmpty, "close() left the layout persisted")
+    // still answers, laying the index out again
+    assert(s2.search(q, 10).toSeq == hits.toSeq)
+    val rebuilt = layoutRdds -- before
+    assert(rebuilt.size == 1 && rebuilt != built)
+    idx.close()
+  }
+}
