@@ -27,7 +27,7 @@ object FulltextQueries {
   private val TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 
   /** The ASCIIFolding oracle token stream: the SAME deterministic accenting
-    * `DocsIndex.getFolded` applies (NFD-decomposable diacritics only), then
+    * `DocsIndex.Folded` applies (NFD-decomposable diacritics only), then
     * DuckDB `strip_accents` plays the filter's role. */
   private val ACC_TOKS =
     "regexp_extract_all(strip_accents(lower(" +
@@ -36,7 +36,7 @@ object FulltextQueries {
       "'\\bvalue\\b', 'vàlue', 'g'), '\\bhash\\b', 'hâsh', 'g'))), '[a-z0-9]+')"
 
   /** The HTMLStrip oracle token stream: the SAME deterministic markup wrap
-    * `DocsIndex.getHtml` applies, then tags and entities removed in SQL. */
+    * `DocsIndex.Html` applies, then tags and entities removed in SQL. */
   private val HTML_TOKS =
     "regexp_extract_all(lower(regexp_replace(regexp_replace(" +
       "'<html><body class=\"corpus\">' || " +
@@ -59,14 +59,14 @@ object FulltextQueries {
        |                    << (length(format('{:b}', len(tk) - 24)) - 4)) END AS dlq
        |  FROM toks)""".stripMargin
 
-  /** PRELUDE over the BM25F virtual combined field (DocsIndex.getCombined:
+  /** PRELUDE over the BM25F virtual combined field (DocsIndex.Combined:
     * title = source label at weight 2, then the body) — same collection
     * stats / SmallFloat shape, combined token stream. */
   private val CMB_PRELUDE = PRELUDE.replace(TOKS,
     "regexp_extract_all(lower(source || ' ' || source || ' ' || text), '[a-z0-9]+')")
 
   /** The deterministic pluralization applied before the stemmed index is
-    * built (`DocsIndex.getStemmed`) — same patterns, DuckDB 'g' flag. */
+    * built (`DocsIndex.Stemmed`) — same patterns, DuckDB 'g' flag. */
   private val STEM_TXT =
     "regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
       "text, '\\btable\\b', 'tables', 'g'), '\\bquery\\b', 'queries', 'g'), " +
@@ -98,7 +98,7 @@ object FulltextQueries {
        |  FROM toks)""".stripMargin
 
   /** The deterministic inflection applied before the Porter index is built
-    * (`DocsIndex.getPorter`) — same patterns, DuckDB 'g' flag. */
+    * (`DocsIndex.Porter`) — same patterns, DuckDB 'g' flag. */
   private val PORTER_TXT =
     "regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
       "regexp_replace(regexp_replace(" +
@@ -137,7 +137,7 @@ object FulltextQueries {
   private val PORTER_PRELUDE = PRELUDE.replace(TOKS, PORTER_TOKS)
 
   /** The deterministic Han injection applied before the CJK index is built
-    * (`DocsIndex.getCjk`) — same patterns, DuckDB 'g' flag. */
+    * (`DocsIndex.Cjk`) — same patterns, DuckDB 'g' flag. */
   private val CJK_TXT =
     "regexp_replace(regexp_replace(text, '\\bstream\\b', '数据流', 'g'), " +
       "'\\bkey\\b', '键', 'g')"
@@ -160,7 +160,7 @@ object FulltextQueries {
   private val CJK_PRELUDE = PRELUDE.replace(TOKS, CJK_TOKS)
 
   /** The longer Han injections behind the dictionary segmenter
-    * (`DocsIndex.getCjkDict`) — same patterns, 'g'-flagged. */
+    * (`DocsIndex.CjkDict`) — same patterns, 'g'-flagged. */
   private val CJKD_TXT =
     "regexp_replace(regexp_replace(text, '\\bstream\\b', '数据流处理', 'g'), " +
       "'\\bkey\\b', '键值对存储器', 'g')"
@@ -180,7 +180,7 @@ object FulltextQueries {
   private val CJKD_PRELUDE = PRELUDE.replace(TOKS, CJKD_TOKS)
 
   /** The accent/width injection applied before the ICU-folding index is
-    * built (`DocsIndex.getIcu`) — the SAME substitution list, 'g'-flagged. */
+    * built (`DocsIndex.Icu`) — the SAME substitution list, 'g'-flagged. */
   private val ICU_TXT = DocsIndex.ICU_SUBS.foldLeft("text") {
     case (acc, (p, r)) => s"regexp_replace($acc, '$p', '$r', 'g')"
   }
@@ -198,7 +198,7 @@ object FulltextQueries {
   private val ICU_PRELUDE = PRELUDE.replace(TOKS, ICU_TOKS)
 
   /** The per-language injections applied before the lang-stem index is
-    * built (`DocsIndex.getLangStem`) — same lists, 'g'-flagged. */
+    * built (`DocsIndex.LangStem`) — same lists, 'g'-flagged. */
   private val DE_TXT = DocsIndex.DE_SUBS.foldLeft("text") {
     case (acc, (p, r)) => s"regexp_replace($acc, '$p', '$r', 'g')"
   }
@@ -647,7 +647,7 @@ object FulltextQueries {
     // over genuinely stored bytes
     "ft_payload_delimited" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, _) = DocsIndex.getPayload(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.Payload)
       val decoded = index.blocks.filter($"term" === "merge").as[BlockRow]
         .flatMap { b =>
           val eb = b.toEncodedBlock
@@ -670,7 +670,7 @@ object FulltextQueries {
     // whose payload is exactly 9 (the rewritten 'batch' occurrences)
     "ft_payload_delimited_check" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, _) = DocsIndex.getPayload(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.Payload)
       val decoded = index.blocks.filter($"term" === "merge").as[BlockRow]
         .flatMap { b =>
           val eb = b.toEncodedBlock
@@ -864,7 +864,7 @@ object FulltextQueries {
     // docId order = (lang, doc_id) order, so each doc-range partition stops
     // after its first 10 matches instead of scoring every match
     "ft_index_sort" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getSorted(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Sorted)
       searcher.searchByIndexOrder(graft.search.TermQ("vector"), 10).toDF("docId")
         .join(index.docs.toDF().select(col("docId"), col("lang")), "docId")
         .join(DocsIndex.docIdMap(index), "docId")
@@ -877,7 +877,7 @@ object FulltextQueries {
     // generations rewrite slices of it WITHOUT reindexing; sort-by-docvalue
     // over a match set reads the latest generation
     "ft_dv_update" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWithDocValues(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WithDocValues)
       searcher.matchesDS(graft.search.TermQ("vector")).toDF("docId")
         .join(index.docValues.toDF().filter(col("field") === "popularity")
           .select(col("docId"), col("value").as("popularity")), "docId")
@@ -895,7 +895,7 @@ object FulltextQueries {
     // gen-stacked dv table (latest generation wins, like ft_dv_update).
     // The dv join is keyed on docId — a verify-per-candidate, never a scan.
     "ft_dv_range" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWithDocValues(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WithDocValues)
       searcher.matchesDS(graft.search.TermQ("merge")).toDF("docId")
         .join(index.docValues.toDF().filter(col("field") === "popularity")
           .select(col("docId"), col("value")), "docId")
@@ -911,7 +911,7 @@ object FulltextQueries {
     // match-set∙dv join; mean and sample variance are shared expression
     // text (identical IEEE sequence on identical exact operands).
     "ft_dv_stats" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWithDocValues(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WithDocValues)
       searcher.matchesDS(graft.search.TermQ("merge")).toDF("docId")
         .join(index.docValues.toDF().filter(col("field") === "popularity")
           .select(col("docId"), col("value")), "docId")
@@ -930,7 +930,7 @@ object FulltextQueries {
     // the corpus's highest-df term): BM25 over the gram's real tf/df with
     // the unigram doc length (grams are stacked, discountOverlaps).
     "ft_commongrams" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getCommonGrams(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.CommonGrams)
       searcher.searchDoubleDS(graft.search.TermQ("the_table"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1047,7 +1047,7 @@ object FulltextQueries {
     // as Lucene keeps one postings list per (field, term).
     "ft_edismax" -> ((spark, sfDir) => {
       val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val (sIdx, sSearcher) = DocsIndex.getSourceField(spark, sfDir)
+      val (sIdx, sSearcher) = DocsIndex.get(spark, sfDir, DocsIndex.SourceField)
       def fieldScores(sr: graft.search.GraftSearcher,
                       idx: graft.index.GraftIndex, t: String): DataFrame =
         sr.scoreAllDoubleDS(sr.parse(t)).toDF("docId", "s")
@@ -1151,21 +1151,21 @@ object FulltextQueries {
     // query shape immediately — term sets, NOT/MatchAll anchors, and scored
     // top-k all honor the .liv-analog tombstones ----
     "ft_delete_match" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWithDeletes(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WithDeletes)
       searcher.matchesDS(searcher.parse("vector OR customer")).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id"))
         .orderBy("doc_id")
     }),
     "ft_delete_not" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWithDeletes(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WithDeletes)
       searcher.matchesDS(searcher.parse("NOT vector")).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id"))
         .orderBy("doc_id")
     }),
     "ft_delete_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWithDeletes(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WithDeletes)
       searcher.searchDoubleDS(searcher.parse("vector"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id"))
@@ -1382,7 +1382,7 @@ object FulltextQueries {
     // BM25 top-10 over the ShingleFilter bigram index: the posting term is
     // 'big_table', doc length/norms/avgdl are all over the shingle stream
     "ft_shingle_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getShingled(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Shingled)
       searcher.searchDoubleDS(graft.search.TermQ("big_table"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id"))
@@ -1397,7 +1397,7 @@ object FulltextQueries {
     // surfaces exactly once, as a part or bare) + any compound whose concat
     // equals the term; dl = discountOverlaps length = raw token count
     "ft_wd_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWordDelim(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WordDelim)
       searcher.searchDoubleDS(graft.search.TermQ("vector"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id"))
@@ -1407,7 +1407,7 @@ object FulltextQueries {
     // BM25 for the PRESERVED ORIGINAL: 'fasthash' matches only where the
     // raw pair ('fast','hash') landed on a pair boundary (odd 1-indexed i)
     "ft_wd_compound" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWordDelim(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WordDelim)
       searcher.searchDoubleDS(graft.search.TermQ("fasthash"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id"))
@@ -1418,7 +1418,7 @@ object FulltextQueries {
     // so "fast hash" matches every raw adjacency — inside one compound
     // (fastHash) AND across two compounds (…Fast hash…) alike
     "ft_wd_phrase" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWordDelim(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WordDelim)
       searcher.matchesDS(graft.search.PhraseQ(Seq("fast", "hash"), Seq(0, 1))).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id"))
@@ -1532,7 +1532,7 @@ object FulltextQueries {
     // 29 docs here vs 24 for the adjacent phrase, so a gap-less
     // implementation provably fails this row
     "ft_stop_phrase" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getEnglish(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.English)
       searcher.matchesDS(searcher.parse("\"big the table\"")).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id"))
@@ -1541,7 +1541,7 @@ object FulltextQueries {
     // stopwords are dropped at BOTH index and query time: 'the' analyzes to
     // nothing, so "the OR value" degenerates to the 'value' term query
     "ft_stop_count" -> ((spark, sfDir) => {
-      val (_, searcher) = DocsIndex.getEnglish(spark, sfDir)
+      val (_, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.English)
       searcher.matchesDS(searcher.parse("the OR value")).toDF("docId")
         .agg(count(lit(1)).as("total_hits"))
     }),
@@ -1550,7 +1550,7 @@ object FulltextQueries {
     // [a-z0-9 ] text, so tokenization — and therefore df/avgdl/norms/tf and
     // every score — must agree with the SQL-expressible simple analyzer
     "ft_uax_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getStandard(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Standard)
       searcher.searchDoubleDS(searcher.parse("vector"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1564,7 +1564,7 @@ object FulltextQueries {
     // posting list with BM25 stats identical to the unaccented corpus —
     // the oracle re-accents in SQL and folds with DuckDB strip_accents.
     "ft_ascii_fold" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getFolded(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Folded)
       searcher.searchDoubleDS(searcher.parse("table"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1578,7 +1578,7 @@ object FulltextQueries {
     // 'html'/'body'/'class'/'b'/'amp' token would inflate doc lengths and
     // shift every norm; the oracle strips the same markup in SQL.
     "ft_html_strip" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getHtml(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Html)
       searcher.searchDoubleDS(searcher.parse("table"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1588,7 +1588,7 @@ object FulltextQueries {
     // index + query analysis both stem, so searching the plural 'tables'
     // reads the 'table' posting list; BM25 stats (df/tf) are post-stem
     "ft_stem_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getStemmed(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Stemmed)
       searcher.searchDoubleDS(searcher.parse("tables"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1597,7 +1597,7 @@ object FulltextQueries {
     // the ies->y stemmer arm on both sides: 'queries' -> 'query' at query
     // time, and every pluralized 'queries' token in the corpus stems back
     "ft_stem_match" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getStemmed(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Stemmed)
       searcher.matchesDS(searcher.parse("queries")).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id")).orderBy("doc_id")
@@ -1606,7 +1606,7 @@ object FulltextQueries {
     // term whose postings exist only where the injected Han run 数据流
     // produced the 数据+据流 bigrams; BM25 stats over the bigrammed stream
     "ft_cjk_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getCjk(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Cjk)
       searcher.searchDoubleDS(searcher.parse("数据"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1614,7 +1614,7 @@ object FulltextQueries {
     }),
     // a lone ideograph (键) is NOT bigrammed — unigram postings
     "ft_cjk_unigram" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getCjk(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Cjk)
       searcher.matchesDS(searcher.parse("键")).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id")).orderBy("doc_id")
@@ -1626,7 +1626,7 @@ object FulltextQueries {
     // BIGRAM (储器); both posting lists exist only because segmentation
     // split the injected runs exactly there
     "ft_cjk_dict_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getCjkDict(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.CjkDict)
       searcher.searchDoubleDS(searcher.parse("数据流 OR 储器"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1637,7 +1637,7 @@ object FulltextQueries {
     // hand-derived run map surfaces here
     "ft_cjk_dict_terms" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, _) = DocsIndex.getCjkDict(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.CjkDict)
       index.termStats
         .select($"term", $"docFreq".as("doc_freq"),
           $"totalTermFreq".as("total_term_freq"))
@@ -1661,7 +1661,7 @@ object FulltextQueries {
     // only where the graph matched consecutive big/table positions; tf =
     // pair count, doc length unchanged (stacked token, discountOverlaps)
     "ft_syn_graph_term" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getSynGraph(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.SynGraph)
       searcher.searchDoubleDS(searcher.parse("bigtable"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1672,7 +1672,7 @@ object FulltextQueries {
     // phrase freq with the +1-per-expansion doc length the inserted
     // position creates
     "ft_syn_graph_phrase" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getSynGraphExpand(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.SynGraphExpand)
       searcher.searchDoubleDS(searcher.parse("\"merge join\""), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1683,7 +1683,7 @@ object FulltextQueries {
     // batch") and on natural adjacent join/batch pairs — both only line up
     // if the flatten shift is applied
     "ft_syn_graph_shift" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getSynGraphExpand(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.SynGraphExpand)
       searcher.matchesDS(searcher.parse("\"join batch\"")).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id")).orderBy("doc_id")
@@ -1694,7 +1694,7 @@ object FulltextQueries {
     // (<- 'oscillating') list only through the stemmer; BM25 stats are
     // post-stop post-stem
     "ft_porter_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getPorter(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Porter)
       searcher.searchDoubleDS(searcher.parse("relates OR oscillator"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1703,7 +1703,7 @@ object FulltextQueries {
     // 'generalize' -> step3 ALIZE->AL -> step4 AL-> = 'gener', the stem of
     // the corpus form 'generalizations' (the paper's own worked example)
     "ft_porter_match" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getPorter(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Porter)
       searcher.matchesDS(searcher.parse("generalize")).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id")).orderBy("doc_id")
@@ -1713,7 +1713,7 @@ object FulltextQueries {
     // oracle's hand-derived paper map surfaces here
     "ft_porter_terms" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, _) = DocsIndex.getPorter(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.Porter)
       index.termStats
         .select($"term", $"docFreq".as("doc_freq"),
           $"totalTermFreq".as("total_term_freq"))
@@ -1727,7 +1727,7 @@ object FulltextQueries {
     // from the oracle's hand-derived per-character fold surfaces here.
     "ft_icu_fold" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, _) = DocsIndex.getIcu(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.Icu)
       index.termStats
         .select($"term", $"docFreq".as("doc_freq"),
           $"totalTermFreq".as("total_term_freq"))
@@ -1738,20 +1738,20 @@ object FulltextQueries {
     // exists only because NFKC width folding + case fold + accent strip
     // ran at index time; stats (df/tf/norms) are post-fold
     "ft_icu_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getIcu(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Icu)
       searcher.searchDoubleDS(searcher.parse("table OR vector"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
         .select(col("doc_id"), col("score"))
     }),
-    // Snowball German chain over the per-language index (DocsIndex.
-    // getLangStem): the query surfaces 'hauses'/'wanderungen' appear in NO
+    // Snowball German chain over the per-language index
+    // (DocsIndex.LangStem): the query surfaces 'hauses'/'wanderungen' appear in NO
     // document — they reach the 'haus'/'wander' posting lists (from
     // injected 'häusern'/'wanderung' in de docs) only through the German
     // stemmer, including its umlaut postlude. BM25 stats are corpus-wide
     // (one index, per-language analysis — the Solr text_de field pattern).
     "ft_stem_de_search" -> ((spark, sfDir) => {
-      val (index, _) = DocsIndex.getLangStem(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.LangStem)
       val searcher = new graft.search.GraftSearcher(index, graft.analysis.Analyzers.german)
       searcher.searchDoubleDS(searcher.parse("hauses OR wanderungen"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
@@ -1762,7 +1762,7 @@ object FulltextQueries {
     // posting lists fed by injected 'données'/'portes' in fr docs (é-drop +
     // undouble and plural-s + final-e cascades)
     "ft_stem_fr_search" -> ((spark, sfDir) => {
-      val (index, _) = DocsIndex.getLangStem(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.LangStem)
       val searcher = new graft.search.GraftSearcher(index, graft.analysis.Analyzers.frenchMinimal)
       searcher.searchDoubleDS(searcher.parse("donner OR porter"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
@@ -1774,7 +1774,7 @@ object FulltextQueries {
     // oracle's hand-derived per-language vocabulary maps surfaces here
     "ft_stem_lang_terms" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, _) = DocsIndex.getLangStem(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.LangStem)
       index.termStats
         .select($"term", $"docFreq".as("doc_freq"),
           $"totalTermFreq".as("total_term_freq"))
@@ -1785,7 +1785,7 @@ object FulltextQueries {
     // score identically to the single-shot build (same oracle SQL as
     // ft_search_term)
     "ft_incr_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getIncremental(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Incremental)
       searcher.searchDoubleDS(searcher.parse("vector"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1842,14 +1842,14 @@ object FulltextQueries {
         .orderBy(desc("fscore"), asc("doc_id")).limit(10)
         .select(col("doc_id"), col("fscore"))
     }),
-    // CombinedFieldQuery / BM25F (see DocsIndex.getCombined scaladoc): the
+    // CombinedFieldQuery / BM25F (see DocsIndex.Combined scaladoc): the
     // title field (source label, weight 2) and the body score as ONE virtual
     // field — per-term tf and the norm both accumulate across fields, which
     // is NOT expressible as a bool-over-fields query (dismax/sum change both
     // idf and length normalization). 'src7' matches only via the title legs;
     // 'table' via the body — one ranked list across both.
     "ft_combined" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getCombined(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Combined)
       searcher.searchDoubleDS(searcher.parse("table OR src7"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1904,7 +1904,7 @@ object FulltextQueries {
     // and BM25 stats all reflect the merged surface forms — querying the
     // single term 'fast' ranks docs that only say 'slow'
     "ft_syn_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getSynonyms(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Synonyms)
       searcher.searchDoubleDS(searcher.parse("fast"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -1914,7 +1914,7 @@ object FulltextQueries {
     // position, so "fast table" matches "slow table" — SynonymGraphFilter's
     // defining positional property
     "ft_syn_phrase" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getSynonyms(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Synonyms)
       searcher.matchesDS(searcher.parse("\"fast table\"")).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id")).orderBy("doc_id")
@@ -2697,7 +2697,7 @@ object FulltextQueries {
     // corpus words vanish, shrinking doc length/avgdl — BM25 for
     // 'customer' over the filtered stream
     "ft_length_filter_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getLengthFiltered(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.LengthFiltered)
       searcher.searchDoubleDS(searcher.parse("customer"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -2846,7 +2846,7 @@ object FulltextQueries {
     // dictionary with independent df/ttf
     "ft_keyword_repeat" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, _) = DocsIndex.getStemKeepOrig(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.StemKeepOrig)
       val terms = Seq("table", "tables", "query", "queries",
         "value", "values", "hash", "hashes")
       index.termStats.filter($"term".isin(terms: _*))
@@ -2864,7 +2864,7 @@ object FulltextQueries {
     "ft_free_text_suggest" -> ((spark, sfDir) => {
       import spark.implicits._
       val (base, _) = DocsIndex.get(spark, sfDir)
-      val (sh, _) = DocsIndex.getShingled(spark, sfDir)
+      val (sh, _) = DocsIndex.get(spark, sfDir, DocsIndex.Shingled)
       val ctx = "big"
       val total = base.fieldStats.sumTotalTermFreq
       val ctxTtf = base.termStats.filter($"term" === ctx)
@@ -3040,7 +3040,7 @@ object FulltextQueries {
     // latest commit — both recomputable from raw text
     "ft_snapshot" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (_, latest) = DocsIndex.getWithDeletes(spark, sfDir)
+      val (_, latest) = DocsIndex.get(spark, sfDir, DocsIndex.WithDeletes)
       val dir = DocsIndex.deletesDir(spark, sfDir)
       val old = new graft.search.GraftSearcher(
         graft.index.IndexStore.openAt(spark, dir, 0L), graft.analysis.Analyzers.simple)
@@ -3275,7 +3275,7 @@ object FulltextQueries {
     // the ngram store; the dictionary walk is a parquet prefix range seek.
     "ft_freetext" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, _) = DocsIndex.getShingled(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.Shingled)
       index.termStats.toDF()
         .filter($"term".startsWith("big_"))
         .select(expr("substring(term, 5)").as("suggestion"),
@@ -3534,7 +3534,7 @@ object FulltextQueries {
     // initial checkpoint does; pull 2 runs against HEAD and emits only the
     // matches beyond the checkpoint.
     "q_topic" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getIncremental(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Incremental)
       val dir = DocsIndex.incrementalDir(spark, sfDir)
       val idx0 = graft.index.IndexStore.openAt(spark, dir, 0L)
       val s0 = new graft.search.GraftSearcher(idx0, graft.analysis.Analyzers.simple)
@@ -4022,7 +4022,7 @@ object FulltextQueries {
     // length-sorted index; on disk the sorted segment's parquet row-group
     // min/max on the sort column IS the binary search.
     "ft_sorted_range" -> ((spark, sfDir) => {
-      val (index, _) = DocsIndex.getSorted(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.Sorted)
       index.docs.toDF()
         .filter(col("len") >= 50 && col("len") <= 80)
         .join(DocsIndex.docIdMap(index), "docId")
@@ -4138,7 +4138,7 @@ object FulltextQueries {
     // rewritten stream, which the oracle recomputes from the same
     // regexp_replace.
     "ft_mapping_charfilter" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getMapped(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Mapped)
       searcher.searchDoubleDS(graft.search.TermQ("large"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -4224,7 +4224,7 @@ object FulltextQueries {
     // 'table'), key = source label, to-core = the main corpus further
     // filtered by 'merge'. The from-side key set is distinct + broadcast.
     "ft_join_from_index" -> ((spark, sfDir) => {
-      val (sIdx, sSearcher) = DocsIndex.getStemmed(spark, sfDir)
+      val (sIdx, sSearcher) = DocsIndex.get(spark, sfDir, DocsIndex.Stemmed)
       val (index, searcher) = DocsIndex.get(spark, sfDir)
       val fromKeys = sSearcher.matchesDS(sSearcher.parse("tables")).toDF("docId")
         .join(sIdx.docs.toDF().select(col("docId"), col("commit")), "docId")
@@ -4243,7 +4243,7 @@ object FulltextQueries {
     // table IS the match iterator — one aggregate over it, one anti-join
     // for the missing side.
     "ft_dv_exists" -> ((spark, sfDir) => {
-      val (index, _) = DocsIndex.getAtomic(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.Atomic)
       val boost = index.docValues.toDF().filter(col("field") === "boost")
         .select(col("docId"), col("value"))
       val ex = boost.agg(count(lit(1)).as("cnt"), sum("value").as("sum_boost"))
@@ -4260,7 +4260,7 @@ object FulltextQueries {
     // dv descending, docs WITHOUT the field sorting last (missing → -1 on
     // both engines — avoids cross-engine null canon), docId tiebreak.
     "ft_dv_sort_missing" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getAtomic(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Atomic)
       val boost = index.docValues.toDF().filter(col("field") === "boost")
         .select(col("docId"), col("value").as("b"))
       searcher.matchesDS(graft.search.TermQ("merge")).toDF("docId")
@@ -4391,11 +4391,11 @@ object FulltextQueries {
     // Atomic updates (solr/core/src/java/org/apache/solr/update/processor/
     // AtomicUpdateDocumentMerger.java:100-124,435,480 — set/inc merged
     // against the CURRENT stored document): popularity taken through a set
-    // batch then an inc batch (DocsIndex.getAtomic), read back through a
+    // batch then an inc batch (DocsIndex.Atomic), read back through a
     // real 'merge' query. Latest-generation resolution is the same
     // gen-stacked docvalues path as ft_dv_update.
     "ft_atomic_update" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getAtomic(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Atomic)
       searcher.matchesDS(graft.search.TermQ("merge")).toDF("docId")
         .join(index.docValues.toDF().filter(col("field") === "popularity")
           .select(col("docId"), col("value").as("popularity")), "docId")
@@ -4497,7 +4497,7 @@ object FulltextQueries {
     "ft_phrases_ident" -> ((spark, sfDir) => {
       val words = Seq("table", "hash", "value")
       val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val (shIndex, _) = DocsIndex.getShingled(spark, sfDir)
+      val (shIndex, _) = DocsIndex.get(spark, sfDir, DocsIndex.Shingled)
       val ttf = index.termStats.filter(col("term").isin(words: _*))
         .collect().map(t => t.term -> t.totalTermFreq).toMap
       val bigrams = words.sliding(2).map(_.mkString("_")).toSeq
@@ -4615,7 +4615,7 @@ object FulltextQueries {
     // doc-values (only %3∈{0,1} docs carry one), if(exists(payload),
     // payload, 42) per 'vector' match — a docId-keyed verify, never a scan.
     "ft_func_def" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWithVersionedUpdates(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WithVersionedUpdates)
       val payload = index.docValues.toDF().filter(col("field") === "payload")
         .select(col("docId").as("pd"), col("value").as("pv"))
       searcher.matchesDS(graft.search.TermQ("vector")).toDF("docId")
@@ -4626,12 +4626,12 @@ object FulltextQueries {
           coalesce(col("pv"), lit(42L)).as("def_payload"))
         .orderBy("doc_id")
     }),
-    // DocBasedVersionConstraints upserts (DocsIndex.getWithVersionedUpdates
+    // DocBasedVersionConstraints upserts (DocsIndex.WithVersionedUpdates
     // scaladoc): batch 1 versions %3==0 docs; batch 2 replays %6==0 docs
     // with STALE versions (dropped) and versions %3==1 docs fresh (applied).
     // Final (version, payload) doc-values prove per-doc gating.
     "ft_version_upsert" -> ((spark, sfDir) => {
-      val (index, _) = DocsIndex.getWithVersionedUpdates(spark, sfDir)
+      val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.WithVersionedUpdates)
       val dv = index.docValues.toDF()
       dv.filter(col("field") === "version")
         .select(col("docId"), col("value").as("version"))
@@ -4662,7 +4662,7 @@ object FulltextQueries {
     // docs), here the merge PURGES the %7 tombstones, so docCount/avgdl/df
     // all shift to the survivor set and the BM25 scores move with them.
     "ft_merged_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getMergedDeletes(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.MergedDeletes)
       searcher.searchDoubleDS(searcher.parse("vector"), 10).toDF()
         .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
@@ -4691,7 +4691,7 @@ object FulltextQueries {
     // real query ('slow AND hash') against the committed index, tombstoned
     // through the same .liv-analog path; a subsequent search honors them.
     "ft_delete_by_query" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.getWithQueryDeletes(spark, sfDir)
+      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WithQueryDeletes)
       searcher.matchesDS(searcher.parse("table OR vector")).toDF("docId")
         .join(DocsIndex.docIdMap(index), "docId")
         .select(col("doc_id"))

@@ -328,9 +328,10 @@ object TrainingDataQueries {
     "td_length_buckets" -> ((spark, sfDir) => {
       import spark.implicits._
       docs(spark, sfDir)
-        // n_tok > 0 <=> text contains an alphanumeric char: the cheap text
-        // predicate filters BEFORE the tokenize instead of inlining it
-        .filter($"text".rlike("[a-zA-Z0-9]"))
+        // n_tok > 0 <=> lower(text) contains an [a-z0-9] char: the cheap
+        // text predicate filters BEFORE the tokenize instead of inlining it
+        // (over lower(text), as TOKS is: U+212A KELVIN SIGN lowers to 'k')
+        .filter(lower($"text").rlike("[a-z0-9]"))
         .select($"doc_id", expr(s"size($TOKS)").cast("long").as("n_tok"))
         .withColumn("bin", expr(
           "CAST(power(CAST(2 AS DOUBLE), CAST(ceil(ln(CAST(n_tok AS DOUBLE)) / ln(CAST(2 AS DOUBLE))) AS BIGINT)) AS BIGINT)"))
@@ -941,10 +942,11 @@ object TrainingDataQueries {
     // list, never an explode+shuffle.
     "td_quality_gopher" -> ((spark, sfDir) => {
       docs(spark, sfDir)
-        // size(tk) >= 2 <=> two alphanumeric runs separated by a non-alnum
-        // gap: cheap text predicate BEFORE the tokenize instead of a
-        // pushable tokenize-referencing filter (r06)
-        .filter(col("text").rlike("[a-zA-Z0-9][^a-zA-Z0-9]+[a-zA-Z0-9]"))
+        // size(tk) >= 2 <=> lower(text) has two [a-z0-9] runs separated by
+        // a gap: cheap text predicate BEFORE the tokenize instead of a
+        // pushable tokenize-referencing filter (r06); over lower(text), as
+        // TOKS is, since lowercasing can create or join runs
+        .filter(lower(col("text")).rlike("[a-z0-9][^a-z0-9]+[a-z0-9]"))
         .select(col("doc_id"), expr(TOKS).as("tk"))
         .select(col("doc_id"),
           size(col("tk")).cast("long").as("n_toks"),
@@ -2147,9 +2149,9 @@ object TrainingDataQueries {
     // no float appears. Map-only at any scale.
     "td_quality_gopher2" -> ((spark, sfDir) => {
       docs(spark, sfDir)
-        // size(tk) >= 1 <=> text contains an alphanumeric char: cheap text
-        // predicate BEFORE the tokenize instead of inlining it (r06)
-        .filter(col("text").rlike("[a-zA-Z0-9]"))
+        // size(tk) >= 1 <=> lower(text) contains an [a-z0-9] char: cheap
+        // text predicate BEFORE the tokenize instead of inlining it (r06)
+        .filter(lower(col("text")).rlike("[a-z0-9]"))
         .selectExpr("doc_id", s"$TOKS AS tk")
         .selectExpr("doc_id",
           "CAST(size(tk) AS BIGINT) AS n_toks",

@@ -622,11 +622,6 @@ final class GraftSearcher(
       should = high.map(TermQ.apply)))
   }
 
-  /** Rewrite + collect per-term df stats (the `termStatistics` lookup — a
-    * few rows via parquet term pushdown). Multi-term queries are NOT
-    * expanded here: their dictionary predicate executes distributed inside
-    * each doc range, over that range's own terms (no driver-side term
-    * collection, no expansion cap). */
   /** Per-searcher term-stats cache — the in-RAM term-dictionary structure a
     * Lucene searcher holds open (and Solr's statsCache): the index a
     * searcher wraps is immutable (updates open a new GraftIndex + searcher),
@@ -641,6 +636,11 @@ final class GraftSearcher(
           size() > 100000
       })
 
+  /** Rewrite + collect per-term df stats (the `termStatistics` lookup — a
+    * few rows via parquet term pushdown). Multi-term queries are NOT
+    * expanded here: their dictionary predicate executes distributed inside
+    * each doc range, over that range's own terms (no driver-side term
+    * collection, no expansion cap). */
   def plan(q0: Query): (Query, SearchContext) = {
     val q = Query.rewrite(q0)
     val terms = Query.terms(q).toSeq
