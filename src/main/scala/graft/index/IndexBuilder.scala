@@ -528,10 +528,29 @@ object IndexBuilder {
     }
   }
 
-  /** Full in-memory build (tests / small scale). The write path for real
-    * scale is [[IndexStore.buildAndWrite]] which checkpoints each stage. */
+  /** The scratch dirs [[build]] staged in this JVM and not deleted yet. One
+    * shutdown hook deletes them all, so test runs, `graft.Verify` and the
+    * `DocsIndex` variant builds leave no segment files behind. */
+  private val staged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() => deleteStaged(), "graft-index-cleanup"))
+
+  private[graft] def stagedDirs: Seq[String] = staged.toArray(Array.empty[String]).toSeq
+
+  /** Deletes `dirs` (default: every staged dir) recursively and drops them
+    * from the record. */
+  private[graft] def deleteStaged(dirs: Seq[String] = stagedDirs): Unit = dirs.foreach { d =>
+    staged.remove(d)
+    val root = java.nio.file.Paths.get(d)
+    if (java.nio.file.Files.exists(root)) {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
+  }
+
   /** One-call build: stages a single-segment index under a scratch dir via
-    * [[IndexStore.buildAndCommit]] and opens it.
+    * [[IndexStore.buildAndCommit]] and opens it. The dir lives until the
+    * JVM exits.
     *
     * Storage choice: segment tables are parquet, NOT Dataset cache. The
     * columnar in-memory cache degrades badly on the block table's
@@ -541,6 +560,7 @@ object IndexBuilder {
     * dictionary seek — for free. */
   def build(files: Dataset[CodeFile], cfg: IndexConfig = IndexConfig()): GraftIndex = {
     val dir = java.nio.file.Files.createTempDirectory("graft-index-").toString
+    staged.add(dir)
     IndexStore.buildAndCommit(files, dir, cfg)
     IndexStore.open(files.sparkSession, dir)
   }

@@ -56,10 +56,16 @@ final class DocRange(
   * no block scan, no shuffle, no per-query Catalyst plan. */
 final class DocRangeLayout private (val ranges: RDD[DocRange]) {
 
-  /** Runs `f` over the ranges in ascending docId order, inside ONE task, so
-    * each range's [[ScoreFloor]] hand-off to the next is deterministic. */
-  def serial[T: ClassTag](f: DocRange => Iterator[T]): RDD[T] =
-    ranges.coalesce(1, shuffle = false, Some(DocRangeLayout.InOrder)).mapPartitions(_.flatMap(f))
+  /** Runs `f` over the ranges in ascending docId order, inside ONE task,
+    * handing every range the task's one [[TopKFloor]]. The floor is made
+    * inside the task, so each range starts from the k-th score the ranges
+    * before it left, and every run of the job — a retry, or a Dataset
+    * collected twice — starts from an empty floor. */
+  def serial[T: ClassTag](f: (DocRange, TopKFloor) => Iterator[T]): RDD[T] =
+    ranges.coalesce(1, shuffle = false, Some(DocRangeLayout.InOrder)).mapPartitions { it =>
+      val floor = new TopKFloor
+      it.flatMap(f(_, floor))
+    }
 
   def release(): Unit = ranges.unpersist(blocking = false)
 }

@@ -22,9 +22,6 @@ final case class SearchContext(
     doubleMode: Boolean = false,
     /** Optional block decode/skip accumulators (pruning evidence). */
     counters: ScorerCounters = null,
-    /** Non-zero enables the cross-partition [[ScoreFloor]] under this query
-      * id (production Float path only; minted per query on the driver). */
-    floorId: Long = 0L,
     /** Per-term collection frequencies (totalTermFreq), collected alongside
       * docFreq; language-model similarities need them
       * (LMSimilarity.computeProbability). Empty for BM25/Classic queries
@@ -75,281 +72,18 @@ object ScorerBuilder {
       ctx: SearchContext,
       lo: Long,
       hi: Long,
-      live: LiveDocs = null): DocScorer = q match {
-
-    case TermQ(t) =>
-      (ctx.docFreq.get(t), termBlocks.get(t)) match {
-        case (Some(df), Some(blocks)) if df > 0 =>
-          val dScorer =
-            if (ctx.doubleMode) ctx.sim.doubleScorer(boost.toDouble, df, ctx.ttfOf(t), ctx.stats)
-            else null
-          new TermIterator(blocks, ctx.sim.scorer(boost, df, ctx.ttfOf(t), ctx.stats),
-            lo, hi, dScorer, ctx.counters, live)
-        case _ => EmptyScorer
-      }
-
-    case PhraseQ(terms, positions, slop) =>
-      val iters = terms.map(t => (t, termBlocks.get(t), ctx.docFreq.get(t)))
-      if (iters.exists(x => x._2.isEmpty || x._3.isEmpty)) EmptyScorer
-      else {
-        val scorer = ctx.sim.multiTermScorer(boost, terms.map(ctx.freqsOf), ctx.stats)
-        val dScorer =
-          if (ctx.doubleMode)
-            ctx.sim.multiTermDoubleScorer(boost.toDouble, terms.map(ctx.freqsOf), ctx.stats)
-          else null
-        // a dummy per-term scorer for iteration bounds (weight unused for final score)
-        val tis = iters.map { case (t, Some(blocks), Some(df)) =>
-          new TermIterator(blocks, ctx.sim.scorer(1f, df, ctx.ttfOf(t), ctx.stats),
-            lo, hi, null, ctx.counters, live)
-        case _ => throw new IllegalStateException
-        }.toArray
-        new PhraseScorer(tis, positions.toArray, scorer, dScorer, slop,
-          noRepeats = terms.distinct.size == terms.size)
-      }
-
-    case SpanNearQ(ts, slop, inOrder) =>
-      val iters = ts.map(t => (t, termBlocks.get(t), ctx.docFreq.get(t)))
-      if (iters.exists(x => x._2.isEmpty || x._3.isEmpty)) EmptyScorer
-      else {
-        val scorer = ctx.sim.multiTermScorer(boost, ts.map(ctx.freqsOf), ctx.stats)
-        val dScorer =
-          if (ctx.doubleMode)
-            ctx.sim.multiTermDoubleScorer(boost.toDouble, ts.map(ctx.freqsOf), ctx.stats)
-          else null
-        val tis = iters.map { case (t, Some(blocks), Some(df)) =>
-          new TermIterator(blocks, ctx.sim.scorer(1f, df, ctx.ttfOf(t), ctx.stats),
-            lo, hi, null, ctx.counters, live)
-        case _ => throw new IllegalStateException
-        }.toArray
-        // repeated terms force the ordered path: the unordered window sweep
-        // could bind one occurrence to two slots (SpanNearQ scaladoc)
-        new SpanNearScorer(tis, slop, inOrder || ts.distinct.size != ts.size, scorer, dScorer)
-      }
-
-    case SpanNotQ(inc, excl) =>
-      val ts = inc.spanTerms
-      val iters = ts.map(t => (t, termBlocks.get(t), ctx.docFreq.get(t)))
-      if (iters.exists(x => x._2.isEmpty || x._3.isEmpty)) EmptyScorer
-      else {
-        // exclude-term stats absent -> nothing to exclude: plain span-near
-        val exclIter = (termBlocks.get(excl), ctx.docFreq.get(excl)) match {
-          case (Some(blocks), Some(df)) if df > 0 =>
-            new TermIterator(blocks, ctx.sim.scorer(1f, df, ctx.ttfOf(excl), ctx.stats),
-              lo, hi, null, ctx.counters, live)
-          case _ => null
-        }
-        val scorer = ctx.sim.multiTermScorer(boost, ts.map(ctx.freqsOf), ctx.stats)
-        val dScorer =
-          if (ctx.doubleMode)
-            ctx.sim.multiTermDoubleScorer(boost.toDouble, ts.map(ctx.freqsOf), ctx.stats)
-          else null
-        val tis = iters.map { case (t, Some(blocks), Some(df)) =>
-          new TermIterator(blocks, ctx.sim.scorer(1f, df, ctx.ttfOf(t), ctx.stats),
-            lo, hi, null, ctx.counters, live)
-        case _ => throw new IllegalStateException
-        }.toArray
-        new SpanNearScorer(tis, inc.slop, inc.inOrder || ts.distinct.size != ts.size,
-          scorer, dScorer, exclIter)
-      }
-
-    case SpanContainingQ(big, little) =>
-      val ts = big.spanTerms
-      val iters = ts.map(t => (t, termBlocks.get(t), ctx.docFreq.get(t)))
-      // the little term absent from the index -> nothing can be contained
-      if (iters.exists(x => x._2.isEmpty || x._3.isEmpty) ||
-        !termBlocks.contains(little) || !ctx.docFreq.contains(little)) EmptyScorer
-      else {
-        val contIter = new TermIterator(termBlocks(little),
-          ctx.sim.scorer(1f, ctx.docFreq(little), ctx.ttfOf(little), ctx.stats),
-          lo, hi, null, ctx.counters, live)
-        val scorer = ctx.sim.multiTermScorer(boost, ts.map(ctx.freqsOf), ctx.stats)
-        val dScorer =
-          if (ctx.doubleMode)
-            ctx.sim.multiTermDoubleScorer(boost.toDouble, ts.map(ctx.freqsOf), ctx.stats)
-          else null
-        val tis = iters.map { case (t, Some(blocks), Some(df)) =>
-          new TermIterator(blocks, ctx.sim.scorer(1f, df, ctx.ttfOf(t), ctx.stats),
-            lo, hi, null, ctx.counters, live)
-        case _ => throw new IllegalStateException
-        }.toArray
-        new SpanNearScorer(tis, big.slop, big.inOrder || ts.distinct.size != ts.size,
-          scorer, dScorer, null, contIter)
-      }
-
-    case SpanOrNearQ(slots, slop, inOrder) =>
-      // a term absent from the index just drops out of its slot; a slot
-      // with no surviving term can never match (SpanOrQuery of nothing)
-      val slotIters = slots.map(_.flatMap { t =>
-        (termBlocks.get(t), ctx.docFreq.get(t)) match {
-          case (Some(blocks), Some(df)) if df > 0 =>
-            Some(new TermIterator(blocks, ctx.sim.scorer(1f, df, ctx.ttfOf(t), ctx.stats),
-              lo, hi, null, ctx.counters, live))
-          case _ => None
-        }
-      })
-      if (slotIters.exists(_.isEmpty)) EmptyScorer
-      else {
-        val present = slots.flatten.filter(ctx.docFreq.contains)
-        val scorer = ctx.sim.multiTermScorer(boost, present.map(ctx.freqsOf), ctx.stats)
-        val dScorer =
-          if (ctx.doubleMode)
-            ctx.sim.multiTermDoubleScorer(boost.toDouble, present.map(ctx.freqsOf), ctx.stats)
-          else null
-        val flat = slots.flatten
-        new SpanOrNearScorer(slotIters.map(_.toArray).toArray, slop,
-          inOrder || flat.distinct.size != flat.size, scorer, dScorer)
-      }
-
-    case sq @ (_: SpanFirstQ | _: SpanPosRangeQ) =>
-      val (t, start, end) = sq match {
-        case SpanFirstQ(t0, e) => (t0, 0, e)
-        case SpanPosRangeQ(t0, s0, e) => (t0, s0, e)
-      }
-      (ctx.docFreq.get(t), termBlocks.get(t)) match {
-        case (Some(df), Some(blocks)) if df > 0 =>
-          val scorer = ctx.sim.scorer(boost, df, ctx.ttfOf(t), ctx.stats)
-          val dScorer =
-            if (ctx.doubleMode) ctx.sim.doubleScorer(boost.toDouble, df, ctx.ttfOf(t), ctx.stats)
-            else null
-          new SpanFirstScorer(
-            new TermIterator(blocks, ctx.sim.scorer(1f, df, ctx.ttfOf(t), ctx.stats),
-              lo, hi, null, ctx.counters, live),
-            start, end, scorer, dScorer)
-        case _ => EmptyScorer
-      }
-
-    case DisMaxQ(disjuncts, tieBreak) =>
-      val subs = disjuncts.map(build(_, boost, termBlocks, ctx, lo, hi, live))
-        .filterNot(_ eq EmptyScorer)
-      if (subs.isEmpty) EmptyScorer
-      else if (subs.size == 1) subs.head
-      else new DisMaxScorer(subs.toArray, tieBreak)
-
-    case SynonymQ(terms) =>
-      val present = terms.filter(t => termBlocks.contains(t) && ctx.docFreq.contains(t))
-      if (present.isEmpty) EmptyScorer
-      else {
-        // SynonymQuery stats: docFreq = min(sum of clause dfs, docCount)
-        // (reference: lucene/core/src/java/org/apache/lucene/search/SynonymQuery.java:199-218)
-        val df = math.min(present.map(ctx.docFreq).sum, ctx.stats.docCount)
-        val ttf = present.map(ctx.ttfOf).sum // summed collection freq, same blending
-        val scorer = ctx.sim.scorer(boost, df, ttf, ctx.stats)
-        val dScorer =
-          if (ctx.doubleMode) ctx.sim.doubleScorer(boost.toDouble, df, ttf, ctx.stats)
-          else null
-        val tis = present.map(t => new TermIterator(termBlocks(t),
-          ctx.sim.scorer(1f, ctx.docFreq(t), ctx.ttfOf(t), ctx.stats),
-          lo, hi, null, ctx.counters, live)).toArray
-        new SynonymScorer(tis, scorer, dScorer)
-      }
-
-    case SynonymBoostQ(termBoosts) =>
-      val present = termBoosts.filter { case (t, _) =>
-        termBlocks.contains(t) && ctx.docFreq.contains(t) }
-      if (present.isEmpty) EmptyScorer
-      else {
-        // same pseudo-term stats as SynonymQ (SynonymQuery.java:199-218);
-        // the boosts only blend the per-doc frequency
-        val df = math.min(present.map(p => ctx.docFreq(p._1)).sum, ctx.stats.docCount)
-        val ttf = present.map(p => ctx.ttfOf(p._1)).sum
-        val scorer = ctx.sim.scorer(boost, df, ttf, ctx.stats)
-        val dScorer =
-          if (ctx.doubleMode) ctx.sim.doubleScorer(boost.toDouble, df, ttf, ctx.stats)
-          else null
-        val tis = present.map { case (t, _) => new TermIterator(termBlocks(t),
-          ctx.sim.scorer(1f, ctx.docFreq(t), ctx.ttfOf(t), ctx.stats),
-          lo, hi, null, ctx.counters, live) }.toArray
-        new SynonymBoostScorer(tis, present.map(_._2).toArray, scorer, dScorer)
-      }
-
-    case BlendedTermQ(terms, tieBreak) =>
-      val present = terms.filter(t => termBlocks.contains(t) && ctx.docFreq.contains(t))
-      if (present.isEmpty) EmptyScorer
-      else {
-        // BlendedTermQuery.adjustFrequencies: every clause scored with the
-        // MAX df / ttf across the group, then DisjunctionMax(tieBreak)
-        // (reference: lucene/core/src/java/org/apache/lucene/search/
-        // BlendedTermQuery.java:281-306)
-        val df = present.map(ctx.docFreq).max
-        val ttf = present.map(ctx.ttfOf).max
-        val subs = present.map { t =>
-          val dScorer =
-            if (ctx.doubleMode) ctx.sim.doubleScorer(boost.toDouble, df, ttf, ctx.stats)
-            else null
-          new TermIterator(termBlocks(t), ctx.sim.scorer(boost, df, ttf, ctx.stats),
-            lo, hi, dScorer, ctx.counters, live): DocScorer
-        }
-        if (subs.size == 1) subs.head
-        else new DisMaxScorer(subs.toArray, tieBreak)
-      }
-
-    case ConstSetQ(terms) =>
-      val tis = terms.flatMap(t => termBlocks.get(t).map(blocks =>
-        new TermIterator(blocks, ctx.sim.scorer(1f, ctx.docFreq.getOrElse(t, 1L), ctx.ttfOf(t), ctx.stats),
-          lo, hi, null, ctx.counters, live): DocScorer))
-      if (tis.isEmpty) EmptyScorer
-      else new ConstantScoreScorer(new DisjunctionSumScorer(tis.toArray), boost)
-
-    // multi-term queries expand IN-PARTITION against the terms the doc
-    // range selected for them (DocRange.select) — distributed, uncapped
-    // (MultiTermQuery CONSTANT_SCORE rewrite; no 1024-term truncation, no
-    // driver-side dictionary collect)
-    case mt: MultiTermQ =>
-      val tis = termBlocks.iterator.collect {
-        case (t, blocks) if mt.matches(t) =>
-          new TermIterator(blocks, ctx.sim.scorer(1f, ctx.docFreq.getOrElse(t, 1L), ctx.ttfOf(t), ctx.stats),
-            lo, hi, null, ctx.counters, live): DocScorer
-      }.toArray
-      if (tis.isEmpty) EmptyScorer
-      else new ConstantScoreScorer(new DisjunctionSumScorer(tis), boost)
-
-    case BoolQ(must, should, mustNot, msm) =>
-      val reqs = must.map(build(_, boost, termBlocks, ctx, lo, hi, live))
-      if (must.nonEmpty && reqs.exists(_ eq EmptyScorer)) return EmptyScorer
-      val opts = should.map(build(_, boost, termBlocks, ctx, lo, hi, live)).filterNot(_ eq EmptyScorer)
-      val base: DocScorer =
-        if (must.nonEmpty) {
-          if (msm > 0 && should.nonEmpty) {
-            // minShouldMatch with MUST clauses present: the opt union becomes
-            // a REQUIRED clause constrained to >= msm matching disjuncts
-            // (Boolean2ScorerSupplier routes msm>0 through req, reference:
-            // lucene/core/src/java/org/apache/lucene/search/Boolean2ScorerSupplier.java:118-137)
-            if (opts.size < msm) return EmptyScorer
-            val msmScorer =
-              new MinShouldMatchScorer(new DisjunctionSumScorer(opts.toArray), msm)
-            new ConjunctionScorer((reqs :+ msmScorer).toArray)
-          } else {
-            val req = if (reqs.size == 1) reqs.head else new ConjunctionScorer(reqs.toArray)
-            if (opts.isEmpty) req
-            else new ReqOptSumScorer(req,
-              if (opts.size == 1) opts.head else new DisjunctionSumScorer(opts.toArray))
-          }
-        } else {
-          if (opts.isEmpty) return EmptyScorer
-          else if (opts.size == 1 && msm <= 1) opts.head
-          else {
-            val union = new DisjunctionSumScorer(opts.toArray)
-            if (msm > 1) new MinShouldMatchScorer(union, msm) else union
-          }
-        }
-      val negs = mustNot.map(build(_, 0f, termBlocks, ctx, lo, hi, live)).filterNot(_ eq EmptyScorer)
-      if (negs.isEmpty) base
-      else new ReqExclScorer(base,
-        if (negs.size == 1) negs.head else new DisjunctionSumScorer(negs.toArray))
-
-    case BoostQ(sub, bst) => build(sub, boost * bst, termBlocks, ctx, lo, hi, live)
-    case MatchAllQ => new MatchAllScorer(lo, hi, boost, live)
-    case MatchNoneQ => EmptyScorer
-  }
+      live: LiveDocs = null): DocScorer =
+    new Clauses(termBlocks, ctx, lo, hi, live).scorer(q, boost)
 
   /** Root-level execution, Lucene's scorer selection by shape
     * (`Boolean2ScorerSupplier`): single terms feed the collector floor into
     * the iterator's impact skipping; disjunctions run block-max WAND (with
     * MUST_NOT riding the candidate stream); ANY conjunction-rooted query —
     * mixed term/phrase/nested children, with or without SHOULD / MUST_NOT /
-    * minShouldMatch — runs the generalized block-max conjunction; phrases
-    * prune through their inner term conjunction; only msm>1 pure-should and
-    * boosted roots iterate exhaustively. */
+    * minShouldMatch — runs the generalized block-max conjunction over the
+    * very scorer tree [[build]] makes; phrases prune through their inner
+    * term conjunction; only msm>1 pure-should and boosted roots iterate
+    * exhaustively. `floor` is the search task's [[TopKFloor]] (null = none). */
   def topK(
       q: Query,
       termBlocks: Map[String, Array[BlockRow]],
@@ -359,57 +93,33 @@ object ScorerBuilder {
       k: Int,
       after: ScoreDoc,
       live: LiveDocs = null,
-      tc: TotalCounter = null): Array[ScoreDoc] = q match {
-    case BoolQ(Nil, should, mustNot, msm) if msm <= 1 && should.nonEmpty =>
-      val subs = should.map(build(_, 1f, termBlocks, ctx, lo, hi, live)).filterNot(_ eq EmptyScorer)
-      val negs = mustNot.map(build(_, 0f, termBlocks, ctx, lo, hi, live)).filterNot(_ eq EmptyScorer)
-      val excl: DocScorer =
-        if (negs.isEmpty) null
-        else if (negs.size == 1) negs.head
-        else new DisjunctionSumScorer(negs.toArray)
-      TopK.disjunction(subs.toArray, k, after, ctx.counters, tc, excl, ctx.floorId)
-    case BoolQ(must, should, mustNot, msm) if must.nonEmpty =>
-      // mirror build()'s composition EXACTLY (same scorer objects, same
-      // float accumulation as the exhaustive path), with the pruning hooks
-      // installed on the required conjunction
-      val reqs = must.map(build(_, 1f, termBlocks, ctx, lo, hi, live))
-      if (reqs.exists(_ eq EmptyScorer)) return Array.empty
-      val opts = should.map(build(_, 1f, termBlocks, ctx, lo, hi, live)).filterNot(_ eq EmptyScorer)
-      val (base: DocScorer, conj: ConjunctionScorer) =
-        if (msm > 0 && should.nonEmpty) {
-          if (opts.size < msm) return Array.empty
-          val msmScorer =
-            new MinShouldMatchScorer(new DisjunctionSumScorer(opts.toArray), msm)
-          val c = new ConjunctionScorer((reqs :+ msmScorer).toArray)
-          (c, c)
-        } else {
-          val c = new ConjunctionScorer(reqs.toArray)
-          if (opts.isEmpty) (c, c)
-          else (new ReqOptSumScorer(c,
-            if (opts.size == 1) opts.head else new DisjunctionSumScorer(opts.toArray)), c)
+      tc: TotalCounter = null,
+      floor: TopKFloor = null): Array[ScoreDoc] = {
+    val c = new Clauses(termBlocks, ctx, lo, hi, live)
+    q match {
+      case BoolQ(Nil, should, mustNot, msm) if msm <= 1 && should.nonEmpty =>
+        TopK.disjunction(c.clauses(should, 1f).toArray, k, after, ctx.counters, tc,
+          c.anyOf(c.clauses(mustNot, 0f)), floor)
+      case bq: BoolQ if bq.must.nonEmpty =>
+        val (root, conj) = c.bool(bq, 1f)
+        if (root eq EmptyScorer) Array.empty
+        else TopK.conjunctionTopK(root, conj, k, after, ctx.counters, tc, floor)
+      case _: TermQ =>
+        c.scorer(q, 1f) match {
+          case ti: TermIterator => TopK.singleTerm(ti, k, after, tc, floor)
+          case _ => Array.empty
         }
-      val negs = mustNot.map(build(_, 0f, termBlocks, ctx, lo, hi, live)).filterNot(_ eq EmptyScorer)
-      val root: DocScorer =
-        if (negs.isEmpty) base
-        else new ReqExclScorer(base,
-          if (negs.size == 1) negs.head else new DisjunctionSumScorer(negs.toArray))
-      TopK.conjunctionTopK(root, conj, k, after, ctx.counters, tc, ctx.floorId)
-    case t: TermQ =>
-      build(t, 1f, termBlocks, ctx, lo, hi, live) match {
-        case ti: TermIterator => TopK.singleTerm(ti, k, after, tc, ctx.floorId)
-        case _ => Array.empty
-      }
-    case p: PhraseQ =>
-      build(p, 1f, termBlocks, ctx, lo, hi, live) match {
-        case ps: PhraseScorer =>
-          TopK.conjunctionTopK(ps, ps.innerConjunction, k, after,
-            ctx.counters, tc, ctx.floorId)
-        case _ => Array.empty
-      }
-    case other =>
-      val root = build(other, 1f, termBlocks, ctx, lo, hi, live)
-      if (root eq EmptyScorer) Array.empty
-      else TopK.iterate(root, k, after, tc)
+      case _: PhraseQ =>
+        c.scorer(q, 1f) match {
+          case ps: PhraseScorer =>
+            TopK.conjunctionTopK(ps, ps.innerConjunction, k, after, ctx.counters, tc, floor)
+          case _ => Array.empty
+        }
+      case _ =>
+        val root = c.scorer(q, 1f)
+        if (root eq EmptyScorer) Array.empty
+        else TopK.iterate(root, k, after, tc)
+    }
   }
 
   /** Double-precision top-k (oracle-facing family): exhaustive collector on
@@ -426,6 +136,218 @@ object ScorerBuilder {
     val root = build(q, 1f, termBlocks, ctx, lo, hi, live)
     if (root eq EmptyScorer) Array.empty
     else TopK.iterateD(root, k, after)
+  }
+
+  /** The scorer factory of one doc range `[lo, hi)`: every clause iterates
+    * the range's blocks through [[postings]], and every weight gets its
+    * double twin on the double path only. */
+  private final class Clauses(
+      termBlocks: Map[String, Array[BlockRow]],
+      ctx: SearchContext,
+      lo: Long,
+      hi: Long,
+      live: LiveDocs) {
+
+    private def postings(blocks: Array[BlockRow], sim: SimScorer,
+        dSim: DoubleSimScorer = null): TermIterator =
+      new TermIterator(blocks, sim, lo, hi, dSim, ctx.counters, live)
+
+    private def double(dSim: => DoubleSimScorer): DoubleSimScorer =
+      if (ctx.doubleMode) dSim else null
+
+    private def weights(boost: Float, df: Long, ttf: Long): (SimScorer, DoubleSimScorer) =
+      (ctx.sim.scorer(boost, df, ttf, ctx.stats),
+        double(ctx.sim.doubleScorer(boost.toDouble, df, ttf, ctx.stats)))
+
+    private def multiWeights(boost: Float, ts: Seq[String]): (SimScorer, DoubleSimScorer) = {
+      val freqs = ts.map(ctx.freqsOf)
+      (ctx.sim.multiTermScorer(boost, freqs, ctx.stats),
+        double(ctx.sim.multiTermDoubleScorer(boost.toDouble, freqs, ctx.stats)))
+    }
+
+    /** The range holds blocks of `t` and the index has its stats. */
+    private def present(t: String): Boolean =
+      termBlocks.contains(t) && ctx.docFreq.contains(t)
+
+    /** `t`'s postings at weight 1: the composite or constant score owning
+      * the iterator prices its matches (multi-term expansions carry no
+      * collected stats and weigh as df 1). */
+    private def unweighted(t: String, blocks: Array[BlockRow]): TermIterator =
+      postings(blocks, ctx.sim.scorer(1f, ctx.docFreq.getOrElse(t, 1L), ctx.ttfOf(t), ctx.stats))
+
+    private def unit(t: String): Option[TermIterator] =
+      if (present(t)) Some(unweighted(t, termBlocks(t))) else None
+
+    private def repeats(ts: Seq[String]): Boolean = ts.distinct.size != ts.size
+
+    /** A positional composite over `ts`, scored as one multi-term weight;
+      * EmptyScorer when any of the terms is absent. */
+    private def positional(ts: Seq[String], boost: Float)(
+        make: (Array[TermIterator], SimScorer, DoubleSimScorer) => DocScorer): DocScorer = {
+      val tis = ts.flatMap(unit)
+      if (tis.size < ts.size) EmptyScorer
+      else {
+        val (s, ds) = multiWeights(boost, ts)
+        make(tis.toArray, s, ds)
+      }
+    }
+
+    // repeated terms force the ordered path: the unordered window sweep
+    // could bind one occurrence to two slots (SpanNearQ scaladoc)
+    private def spanNear(near: SpanNearQ, boost: Float, exclude: TermIterator = null,
+        contain: TermIterator = null): DocScorer =
+      positional(near.spanTerms, boost)((tis, s, ds) => new SpanNearScorer(tis, near.slop,
+        near.inOrder || repeats(near.spanTerms), s, ds, exclude, contain))
+
+    /** A synonym group scores as one pseudo-term: docFreq = min(sum of
+      * clause dfs, docCount), collection freqs summed the same way
+      * (reference: lucene/core/src/java/org/apache/lucene/search/SynonymQuery.java:199-218). */
+    private def synonym(ts: Seq[String], boost: Float)(
+        make: (Array[TermIterator], SimScorer, DoubleSimScorer) => DocScorer): DocScorer =
+      if (ts.isEmpty) EmptyScorer
+      else {
+        val df = math.min(ts.map(ctx.docFreq).sum, ctx.stats.docCount)
+        val (s, ds) = weights(boost, df, ts.map(ctx.ttfOf).sum)
+        make(ts.map(t => unweighted(t, termBlocks(t))).toArray, s, ds)
+      }
+
+    private def constant(tis: Seq[DocScorer], boost: Float): DocScorer =
+      if (tis.isEmpty) EmptyScorer
+      else new ConstantScoreScorer(new DisjunctionSumScorer(tis.toArray), boost)
+
+    def clauses(qs: Seq[Query], boost: Float): Seq[DocScorer] =
+      qs.map(scorer(_, boost)).filterNot(_ eq EmptyScorer)
+
+    /** The union of `scorers`; null when there are none. */
+    def anyOf(scorers: Seq[DocScorer]): DocScorer =
+      if (scorers.isEmpty) null
+      else if (scorers.size == 1) scorers.head
+      else new DisjunctionSumScorer(scorers.toArray)
+
+    /** A BoolQ's scorer plus its required conjunction — the clauses every
+      * match needs, where the pruned top-k installs its hooks (null without
+      * MUST clauses). A one-clause conjunction scores exactly like its
+      * clause: it sums in double, then casts to float. */
+    def bool(bq: BoolQ, boost: Float): (DocScorer, ConjunctionScorer) = {
+      val BoolQ(must, should, mustNot, msm) = bq
+      val none = (EmptyScorer, null)
+      val reqs = must.map(scorer(_, boost))
+      if (reqs.exists(_ eq EmptyScorer)) return none
+      val opts = clauses(should, boost)
+      val (base, conj): (DocScorer, ConjunctionScorer) =
+        if (must.isEmpty) {
+          if (opts.isEmpty) return none
+          if (opts.size == 1 && msm <= 1) (opts.head, null)
+          else {
+            val union = new DisjunctionSumScorer(opts.toArray)
+            (if (msm > 1) new MinShouldMatchScorer(union, msm) else union, null)
+          }
+        } else if (msm > 0 && should.nonEmpty) {
+          // minShouldMatch with MUST clauses present: the opt union becomes
+          // a REQUIRED clause constrained to >= msm matching disjuncts
+          // (Boolean2ScorerSupplier routes msm>0 through req, reference:
+          // lucene/core/src/java/org/apache/lucene/search/Boolean2ScorerSupplier.java:118-137)
+          if (opts.size < msm) return none
+          val c = new ConjunctionScorer(
+            (reqs :+ new MinShouldMatchScorer(new DisjunctionSumScorer(opts.toArray), msm)).toArray)
+          (c, c)
+        } else {
+          val c = new ConjunctionScorer(reqs.toArray)
+          (if (opts.isEmpty) c else new ReqOptSumScorer(c, anyOf(opts)), c)
+        }
+      val excl = anyOf(clauses(mustNot, 0f))
+      (if (excl == null) base else new ReqExclScorer(base, excl), conj)
+    }
+
+    def scorer(q: Query, boost: Float): DocScorer = q match {
+      case TermQ(t) =>
+        if (!present(t)) EmptyScorer
+        else {
+          val (s, ds) = weights(boost, ctx.docFreq(t), ctx.ttfOf(t))
+          postings(termBlocks(t), s, ds)
+        }
+
+      case PhraseQ(terms, positions, slop) =>
+        positional(terms, boost)((tis, s, ds) =>
+          new PhraseScorer(tis, positions.toArray, s, ds, slop, noRepeats = !repeats(terms)))
+
+      case near: SpanNearQ => spanNear(near, boost)
+
+      // exclude-term stats absent -> nothing to exclude: plain span-near
+      case SpanNotQ(inc, excl) => spanNear(inc, boost, exclude = unit(excl).orNull)
+
+      // the little term absent from the index -> nothing can be contained
+      case SpanContainingQ(big, little) =>
+        unit(little).fold[DocScorer](EmptyScorer)(c => spanNear(big, boost, contain = c))
+
+      case SpanOrNearQ(slots, slop, inOrder) =>
+        // a term absent from the index just drops out of its slot; a slot
+        // with no surviving term can never match (SpanOrQuery of nothing)
+        val slotIters = slots.map(_.flatMap(unit))
+        if (slotIters.exists(_.isEmpty)) EmptyScorer
+        else {
+          val flat = slots.flatten
+          val (s, ds) = multiWeights(boost, flat.filter(ctx.docFreq.contains))
+          new SpanOrNearScorer(slotIters.map(_.toArray).toArray, slop,
+            inOrder || repeats(flat), s, ds)
+        }
+
+      case sq @ (_: SpanFirstQ | _: SpanPosRangeQ) =>
+        val (t, start, end) = sq match {
+          case SpanFirstQ(t0, e) => (t0, 0, e)
+          case SpanPosRangeQ(t0, s0, e) => (t0, s0, e)
+        }
+        if (!present(t)) EmptyScorer
+        else {
+          val (s, ds) = weights(boost, ctx.docFreq(t), ctx.ttfOf(t))
+          new SpanFirstScorer(unweighted(t, termBlocks(t)), start, end, s, ds)
+        }
+
+      case DisMaxQ(disjuncts, tieBreak) =>
+        val subs = clauses(disjuncts, boost)
+        if (subs.isEmpty) EmptyScorer
+        else if (subs.size == 1) subs.head
+        else new DisMaxScorer(subs.toArray, tieBreak)
+
+      case SynonymQ(terms) =>
+        synonym(terms.filter(present), boost)(new SynonymScorer(_, _, _))
+
+      case SynonymBoostQ(termBoosts) =>
+        // the boosts only blend the per-doc frequency
+        val kept = termBoosts.filter(tb => present(tb._1))
+        synonym(kept.map(_._1), boost)(new SynonymBoostScorer(_, kept.map(_._2).toArray, _, _))
+
+      case BlendedTermQ(terms, tieBreak) =>
+        val kept = terms.filter(present)
+        if (kept.isEmpty) EmptyScorer
+        else {
+          // BlendedTermQuery.adjustFrequencies: every clause scored with the
+          // MAX df / ttf across the group, then DisjunctionMax(tieBreak)
+          // (reference: lucene/core/src/java/org/apache/lucene/search/
+          // BlendedTermQuery.java:281-306)
+          val (s, ds) = weights(boost, kept.map(ctx.docFreq).max, kept.map(ctx.ttfOf).max)
+          val subs = kept.map(t => postings(termBlocks(t), s, ds): DocScorer)
+          if (subs.size == 1) subs.head
+          else new DisMaxScorer(subs.toArray, tieBreak)
+        }
+
+      case ConstSetQ(terms) =>
+        constant(terms.flatMap(t => termBlocks.get(t).map(unweighted(t, _))), boost)
+
+      // multi-term queries expand IN-PARTITION against the terms the doc
+      // range selected for them (DocRange.select) — distributed, uncapped
+      // (MultiTermQuery CONSTANT_SCORE rewrite; no 1024-term truncation, no
+      // driver-side dictionary collect)
+      case mt: MultiTermQ =>
+        constant(termBlocks.iterator.collect {
+          case (t, blocks) if mt.matches(t) => unweighted(t, blocks)
+        }.toSeq, boost)
+
+      case bq: BoolQ => bool(bq, boost)._1
+      case BoostQ(sub, bst) => scorer(sub, boost * bst)
+      case MatchAllQ => new MatchAllScorer(lo, hi, boost, live)
+      case MatchNoneQ => EmptyScorer
+    }
   }
 }
 
@@ -845,32 +767,32 @@ final class GraftSearcher(
   def search(queryStr: String, k: Int): Array[ScoreDoc] = search(parse(queryStr), k, null)
 
   def search(q0: Query, k: Int, after: ScoreDoc = null, numPartitions: Int = 0): Array[ScoreDoc] = {
-    val hits = searchRDD(q0, k, after, numPartitions)
-    try hits.collect().sorted(GraftSearcher.bestFirst).take(k)
-    finally ScoreFloor.clear(lastFloorId) // local mode: driver JVM == executor JVM
+    searchRDD(q0, k, after, numPartitions).collect().sorted(GraftSearcher.bestFirst).take(k)
   }
 
   /** Runs `f` once per doc range of the index's resident layout — the one
     * map-only job behind every search surface (Float top-k, double top-k,
     * match set, counting and index-order collection). Each range hands `f`
     * the query's blocks from its own dictionary (exact terms by lookup,
-    * multi-term clauses by `matches`), its `[lo, hi)` and its tombstones.
-    * Every range runs, including ranges holding none of the query's blocks
-    * (a MatchAll-anchored query such as NOT matches there; any other query
-    * builds an empty scorer). Ranges run in ascending docId order inside
-    * one task, so the [[ScoreFloor]] hand-off between them is
-    * deterministic. P = `numPartitions`, or `defaultParallelism` when 0. */
+    * multi-term clauses by `matches`), its `[lo, hi)`, its tombstones and
+    * the task's [[TopKFloor]]. Every range runs, including ranges holding
+    * none of the query's blocks (a MatchAll-anchored query such as NOT
+    * matches there; any other query builds an empty scorer). Ranges run in
+    * ascending docId order inside one task, so the floor each range starts
+    * from is the same on every run of the job. P = `numPartitions`, or
+    * `defaultParallelism` when 0. */
   private def perRange[T: ClassTag](
       q: Query,
       numPartitions: Int)(
-      f: (Query, Map[String, Array[BlockRow]], Long, Long, LiveDocs) => Iterator[T]): RDD[T] = {
+      f: (Query, Map[String, Array[BlockRow]], Long, Long, LiveDocs, TopKFloor) => Iterator[T]): RDD[T] = {
     if (fieldStats.maxDocId < 0) return spark.sparkContext.emptyRDD[T]
     val p = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
     val exact = Query.terms(q)
     val mts = Query.multiTerms(q)
     val qB = q
     val fB = f
-    index.docRangeLayout(p).serial(r => fB(qB, r.select(exact, mts), r.lo, r.hi, r.live))
+    index.docRangeLayout(p).serial((r, floor) =>
+      fB(qB, r.select(exact, mts), r.lo, r.hi, r.live, floor))
   }
 
   /** Top-k with totalHits + relation (`TopScoreDocCollector` /
@@ -892,7 +814,7 @@ final class GraftSearcher(
     val ctxB = ctx
     val kB = k
     val th = totalHitsThreshold
-    val ranges = perRange[RangeHits](q, numPartitions) { (qq, termBlocks, lo, hi, live) =>
+    val ranges = perRange[RangeHits](q, numPartitions) { (qq, termBlocks, lo, hi, live, _) =>
       val tc = new TotalCounter(th)
       val hits = ScorerBuilder.topK(qq, termBlocks, ctxB, lo, hi, kB, null, live, tc)
       Iterator.single(RangeHits(hits, tc.seen, tc.countedEnough))
@@ -903,32 +825,23 @@ final class GraftSearcher(
     (hits, total, if (gte) "GTE" else "EQ")
   }
 
-  /** Most recent production-path floor id (cleared by [[search]]; entries
-    * not cleared here age out of [[ScoreFloor]]'s FIFO cap). */
-  @transient private var lastFloorId: Long = 0L
-  private[search] def lastFloorIdForTest: Long = lastFloorId
-
-  /** The per-partition top-k hits as a Dataset (k rows per doc-range).
-    * Mints a [[ScoreFloor]] id so doc-range partitions share their k-th
-    * score: partitions full of globally-non-competitive docs skip whole
-    * block ranges instead of each redundantly collecting a local top-k. */
+  /** The per-range top-k hits as a Dataset: up to k rows per doc range,
+    * whose k best rows are the global top-k. Each range starts from the
+    * k-th score the ranges before it in the task left ([[TopKFloor]]) and
+    * may drop docs scoring below it (they cannot make the global top-k), so
+    * a range full of non-competitive docs skips whole block ranges. Every
+    * collect returns the same rows. */
   def searchDS(q0: Query, k: Int, after: ScoreDoc = null, numPartitions: Int = 0): Dataset[ScoreDoc] =
     spark.createDataset(searchRDD(q0, k, after, numPartitions))
 
   private def searchRDD(q0: Query, k: Int, after: ScoreDoc, numPartitions: Int): RDD[ScoreDoc] = {
     val (q, ctx) = plan(q0)
     if (q == MatchNoneQ) return spark.sparkContext.emptyRDD[ScoreDoc]
-    val floorId = {
-      var id = 0L
-      while (id == 0L) id = java.util.concurrent.ThreadLocalRandom.current().nextLong()
-      id
-    }
-    lastFloorId = floorId
-    val ctxB = ctx.copy(floorId = floorId)
+    val ctxB = ctx
     val afterB = after
     val kB = k
-    perRange[ScoreDoc](q, numPartitions) { (qq, termBlocks, lo, hi, live) =>
-      ScorerBuilder.topK(qq, termBlocks, ctxB, lo, hi, kB, afterB, live).iterator
+    perRange[ScoreDoc](q, numPartitions) { (qq, termBlocks, lo, hi, live, floor) =>
+      ScorerBuilder.topK(qq, termBlocks, ctxB, lo, hi, kB, afterB, live, floor = floor).iterator
     }
   }
 
@@ -945,7 +858,7 @@ final class GraftSearcher(
     val ctxB = ctx0.copy(doubleMode = true)
     val afterB = after
     val kB = k
-    perRange[ScoreDocD](q, numPartitions) { (qq, termBlocks, lo, hi, live) =>
+    perRange[ScoreDocD](q, numPartitions) { (qq, termBlocks, lo, hi, live, _) =>
       ScorerBuilder.topKD(qq, termBlocks, ctxB, lo, hi, kB, afterB, live).iterator
     }
   }
@@ -976,7 +889,7 @@ final class GraftSearcher(
     val ctxB = ctx
     val kB = k
     val bases = index.sortRunBases.toArray.sorted
-    spark.createDataset(perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live) =>
+    spark.createDataset(perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live, _) =>
       // split [lo, hi) at sorted-run boundaries: docId order equals the index
       // sort only WITHIN a run (appends/merges concatenate runs unsorted)
       val cuts = (lo +: bases.filter(b => b > lo && b < hi).toSeq :+ hi).distinct.sorted
@@ -1002,7 +915,7 @@ final class GraftSearcher(
     val (q, ctx) = plan(q0)
     if (q == MatchNoneQ) return spark.emptyDataset[Long]
     val ctxB = ctx
-    spark.createDataset(perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live) =>
+    spark.createDataset(perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live, _) =>
       val root = ScorerBuilder.build(qq, 1f, termBlocks, ctxB, lo, hi, live)
       if (root eq EmptyScorer) Iterator.empty[Long]
       else new Iterator[Long] {
@@ -1029,7 +942,7 @@ final class GraftSearcher(
     val bc =
       if (docFilter == null) null
       else spark.sparkContext.broadcast(docFilter.sorted)
-    spark.createDataset(perRange[ScoreDocD](q, 0) { (qq, termBlocks, lo, hi, live) =>
+    spark.createDataset(perRange[ScoreDocD](q, 0) { (qq, termBlocks, lo, hi, live, _) =>
       val root = ScorerBuilder.build(qq, 1f, termBlocks, ctxB, lo, hi, live)
       if (root eq EmptyScorer) Iterator.empty[ScoreDocD]
       else if (bc == null) new Iterator[ScoreDocD] {

@@ -1182,12 +1182,6 @@ final class HitQueue(k: Int) {
   }
 }
 
-/** Top-k collectors: the generic exhaustive one, and the dynamically pruned
-  * disjunction one (MaxScore essential/non-essential split + impact-derived
-  * per-term upper bounds — the WAND family, reference:
-  * lucene/core/src/java/org/apache/lucene/search/WANDScorer.java:45-588).
-  * Score-only pruning (`bound <= theta` skips) is sound because docs are
-  * visited in docId order: an equal-score later doc loses the tie-break. */
 /** Per-partition totalHits counter (`TotalHits` + `TOTAL_HITS_THRESHOLD`,
   * reference: lucene/core/src/java/org/apache/lucene/search/TotalHits.java,
   * IndexSearcher.java:105): collectors count every match they observe; once
@@ -1200,69 +1194,36 @@ final class TotalCounter(val threshold: Long) {
   @inline def countedEnough: Boolean = seen >= threshold
 }
 
-/** Cross-partition minCompetitive floor — the analog of Lucene's
-  * `MaxScoreAccumulator` shared across leaf slices (reference:
+/** The k-th-best score handed from doc range to doc range inside one search
+  * task — Lucene's `MaxScoreAccumulator`, which likewise lives for one
+  * search only (reference:
   * lucene/core/src/java/org/apache/lucene/search/MaxScoreAccumulator.java:26;
-  * consumed in TopScoreDocCollector.java:303-318). Each doc-range partition
-  * publishes its local k-th-best score once its heap fills; every partition
-  * in the SAME JVM reads the max published floor and prunes docs scoring
+  * consumed in TopScoreDocCollector.java:303-318). A range raises it with
+  * its full heap's k-th score; the ranges after it prune docs scoring
   * STRICTLY below it (a tie could still win the global docId tie-break, so
-  * consumers compare against `nextDown(floor)`). Scope: one JVM — exactly
-  * what Lucene's accumulator shares between searcher threads; on a
-  * multi-executor cluster each executor shares its own floor and local mode
-  * shares globally. Keyed by a per-query id minted on the driver; entries
-  * are evicted FIFO past 4096 so executor JVMs never accumulate state. */
-object ScoreFloor {
-  private val floors =
-    new java.util.concurrent.ConcurrentHashMap[Long, java.util.concurrent.atomic.AtomicInteger]()
-  private val order = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+  * consumers compare against `nextDown(floor)`). Plain mutable state: the
+  * ranges of a task run one after another ([[DocRangeLayout.serial]]). */
+final class TopKFloor {
+  private var floor: Float = Float.NegativeInfinity
 
-  def publish(id: Long, score: Float): Unit = {
-    if (id == 0L || !(score > 0f)) return
-    val bits = java.lang.Float.floatToIntBits(score) // monotonic for score > 0
-    val boxed = java.lang.Long.valueOf(id)
-    val created = new Array[Boolean](1)
-    val c = floors.computeIfAbsent(boxed, _ => {
-      created(0) = true // side effect on a local only — the mapping function
-      new java.util.concurrent.atomic.AtomicInteger(-1) // must not touch the map
-    })
-    if (created(0)) {
-      // FIFO eviction OUTSIDE the mapping function — ConcurrentHashMap
-      // forbids mutating the map from inside computeIfAbsent
-      order.add(boxed)
-      while (floors.size > 4096) {
-        val old = order.poll()
-        if (old == null) return publishBits(c, bits)
-        if (old != boxed) floors.remove(old)
-      }
-    }
-    publishBits(c, bits)
-  }
+  /** Raises the floor to `kth`; zero and negative scores never prune. */
+  def raise(kth: Float): Unit = if (kth > 0f && kth > floor) floor = kth
 
-  @inline private def publishBits(
-      c: java.util.concurrent.atomic.AtomicInteger, bits: Int): Unit = {
-    var cur = c.get()
-    while (bits > cur && !c.compareAndSet(cur, bits)) cur = c.get()
-  }
-
-  /** Highest published floor for this query, or -inf. */
-  def get(id: Long): Float = {
-    if (id == 0L) return Float.NegativeInfinity
-    val c = floors.get(id)
-    if (c == null) return Float.NegativeInfinity
-    val bits = c.get()
-    if (bits < 0) Float.NegativeInfinity else java.lang.Float.intBitsToFloat(bits)
-  }
-
-  /** Strict-compare form: `bound <= strictBound(id)` iff `bound < floor`. */
-  def strictBound(id: Long): Double = {
-    val f = get(id)
-    if (f == Float.NegativeInfinity) Double.NegativeInfinity else Math.nextDown(f).toDouble
-  }
-
-  def clear(id: Long): Unit = if (id != 0L) floors.remove(id)
+  /** Strict-compare form: `bound <= strictBound` iff `bound < floor`
+    * (-inf until a range raises it). */
+  def strictBound: Double = Math.nextDown(floor).toDouble
 }
 
+/** Top-k collectors: the generic exhaustive one, and the dynamically pruned
+  * disjunction one (MaxScore essential/non-essential split + impact-derived
+  * per-term upper bounds — the WAND family, reference:
+  * lucene/core/src/java/org/apache/lucene/search/WANDScorer.java:45-588).
+  * Score-only pruning (`bound <= theta` skips) is sound because docs are
+  * visited in docId order: an equal-score later doc loses the tie-break.
+  * The pruned collectors start from the task's [[TopKFloor]] (null = none)
+  * and raise it once their heap is full. While one runs, only it can raise
+  * the floor, and its own heap already holds that value, so each reads the
+  * floor once, at its start. */
 object TopK {
 
   /** searchAfter predicate: hit must sort strictly after the marker. */
@@ -1308,17 +1269,14 @@ object TopK {
 
   /** Single-term top-k with impacts pruning: the collector feeds its floor
     * into the iterator (`setMinCompetitiveScore` -> `ImpactsDISI`), which
-    * then skips non-competitive blocks without decoding them. The
-    * cross-partition [[ScoreFloor]] (strict compare via nextDown) folds in
-    * every 128 docs. */
+    * then skips non-competitive blocks without decoding them. The task's
+    * floor seeds it, so a range whose blocks are all sub-floor decodes
+    * nothing. */
   def singleTerm(it: TermIterator, k: Int, after: ScoreDoc = null,
-      tc: TotalCounter = null, floorId: Long = 0L): Array[ScoreDoc] = {
+      tc: TotalCounter = null, floor: TopKFloor = null): Array[ScoreDoc] = {
     val pq = new HitQueue(k)
-    var n = 0L
-    // seed from any floor another partition already published — a partition
-    // whose blocks are all sub-floor never decodes anything
-    if (floorId != 0L && (tc == null || tc.countedEnough)) {
-      val g = Math.nextDown(ScoreFloor.get(floorId))
+    if (floor != null && (tc == null || tc.countedEnough)) {
+      val g = floor.strictBound.toFloat
       if (g > it.minCompetitive) it.minCompetitive = g
     }
     var doc = it.nextDoc()
@@ -1331,13 +1289,8 @@ object TopK {
         if (pq.insert(doc, s) && pq.isFull && (tc == null || tc.countedEnough)) {
           val kth = pq.topScore.toFloat
           if (kth > it.minCompetitive) it.minCompetitive = kth
-          ScoreFloor.publish(floorId, kth)
+          if (floor != null) floor.raise(kth)
         }
-      }
-      n += 1
-      if (floorId != 0L && (n & 127L) == 0L && (tc == null || tc.countedEnough)) {
-        val g = Math.nextDown(ScoreFloor.get(floorId))
-        if (g > it.minCompetitive) it.minCompetitive = g
       }
       doc = it.nextDoc()
     }
@@ -1361,13 +1314,14 @@ object TopK {
       after: ScoreDoc = null,
       counters: ScorerCounters = null,
       tc: TotalCounter = null,
-      floorId: Long = 0L): Array[ScoreDoc] = {
+      floor: TopKFloor = null): Array[ScoreDoc] = {
     val pq = new HitQueue(k)
+    val seed = if (floor == null) Double.NegativeInfinity else floor.strictBound
     if (conj != null) conj.enablePruning(new ConjunctionScorer.PruneContext {
       override def theta: Double = {
         if (tc != null && !tc.countedEnough) return Double.NegativeInfinity
         val local = if (pq.isFull) pq.topScore else Double.NegativeInfinity
-        math.max(local, ScoreFloor.strictBound(floorId))
+        math.max(local, seed)
       }
       // the ROOT's compositional bound prices every shape correctly:
       // ReqOpt folds in the optional clauses, ReqExcl ignores the excluded
@@ -1381,8 +1335,8 @@ object TopK {
       if (tc != null) tc.count()
       val s = root.score()
       if (after == null || isAfter(after, doc, s)) {
-        if (pq.insert(doc, s) && pq.isFull && (tc == null || tc.countedEnough))
-          ScoreFloor.publish(floorId, pq.topScore.toFloat)
+        if (pq.insert(doc, s) && pq.isFull && (tc == null || tc.countedEnough) &&
+            floor != null) floor.raise(pq.topScore.toFloat)
       }
       doc = root.nextDoc()
     }
@@ -1401,7 +1355,7 @@ object TopK {
       counters: ScorerCounters = null,
       tc: TotalCounter = null,
       excl: DocScorer = null,
-      floorId: Long = 0L): Array[ScoreDoc] = {
+      floor: TopKFloor = null): Array[ScoreDoc] = {
     // zero-weight clauses can never score but they DO match: Lucene returns
     // docs matching only a boost-0 clause (score 0), so they stay in on BOTH
     // the counting and the production path. Sorted first by maxScore, they
@@ -1411,7 +1365,7 @@ object TopK {
     val n = subs.length
     if (n == 0) return Array.empty
     if (n == 1 && excl == null) return subs(0) match {
-      case t: TermIterator => singleTerm(t, k, after, tc, floorId)
+      case t: TermIterator => singleTerm(t, k, after, tc, floor)
       case s => iterate(s, k, after, tc)
     }
     val prefix = new Array[Double](n) // prefix(i) = sum of maxScore of subs[0..i]
@@ -1420,13 +1374,11 @@ object TopK {
 
     val pq = new HitQueue(k)
     var essStart = 0
-    // cross-partition floor, refreshed every 128 candidates (strict-compare
-    // form: bound <= gFloor iff bound < published floor)
-    var gFloor: Double = ScoreFloor.strictBound(floorId)
-    var seenCands = 0L
+    // strict-compare form: bound <= gFloor iff bound < the task's floor
+    val gFloor = if (floor == null) Double.NegativeInfinity else floor.strictBound
 
     // local floor prunes with <= (docId-ordered ties lose the tie-break
-    // INSIDE a partition); the global floor is already strict
+    // INSIDE a partition); the task's floor is already strict
     def theta: Double = {
       if (tc != null && !tc.countedEnough) return Double.NegativeInfinity
       val local = if (pq.isFull) pq.topScore else Double.NegativeInfinity
@@ -1451,10 +1403,6 @@ object TopK {
     while (running) {
       if (essStart >= n) { running = false }
       else {
-        if (floorId != 0L && { seenCands += 1; (seenCands & 127L) == 0L }) {
-          val g = ScoreFloor.strictBound(floorId)
-          if (g > gFloor) { gFloor = g; updateEssential() }
-        }
         // candidate = min docId among essential clauses
         var cand = DocScorer.NO_MORE
         var i = essStart
@@ -1520,8 +1468,8 @@ object TopK {
                 val s = DocScorer.sumScores(partial)
                 if (after == null || isAfter(after, cand, s)) {
                   if (pq.insert(cand, s)) {
-                    if (pq.isFull && (tc == null || tc.countedEnough))
-                      ScoreFloor.publish(floorId, pq.topScore.toFloat)
+                    if (pq.isFull && (tc == null || tc.countedEnough) && floor != null)
+                      floor.raise(pq.topScore.toFloat)
                     updateEssential()
                   }
                 }

@@ -24,6 +24,18 @@ class IndexBuildSpec extends AnyFunSuite {
     docs.foreach(d => assert(alt((d.repo, d.path, d.commit)) == d.docId))
   }
 
+  test("build records its scratch dir and the cleanup deletes it") {
+    val before = IndexBuilder.stagedDirs.toSet
+    IndexBuilder.build(spark.createDataset(tiny.take(8)), IndexConfig(numPartitions = 2))
+    val dirs = IndexBuilder.stagedDirs.filterNot(before)
+    assert(dirs.size == 1, s"expected one new staged dir, got $dirs")
+    val dir = java.nio.file.Paths.get(dirs.head)
+    assert(dir.toFile.list().nonEmpty)
+    IndexBuilder.deleteStaged(dirs)
+    assert(!java.nio.file.Files.exists(dir))
+    assert(!IndexBuilder.stagedDirs.contains(dirs.head))
+  }
+
   test("a malformed docId broadcast cap fails naming the key and the value") {
     // a session of its own: the conf change cannot leak into other tests
     val s2 = spark.newSession()

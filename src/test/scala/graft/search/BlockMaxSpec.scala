@@ -4,15 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.index._
 
-/** Mixed-shape block-max execution + the cross-partition score floor:
+/** Mixed-shape block-max execution + the per-task top-k floor:
   *  - phrase-AND-term / must+should / NOT-carrying queries run the
   *    generalized block-max conjunction ([[TopK.conjunctionTopK]]) and the
   *    exclusion-aware WAND disjunction, rank-identical to the exhaustive
   *    oracle, with the skip counters proving ranges were jumped on impact
   *    metadata alone.
-  *  - [[ScoreFloor]] shares the k-th-best score across doc-range partitions
-  *    (the `MaxScoreAccumulator` analog); a published floor makes weak
-  *    partitions skip whole block ranges without changing the global top-k.
+  *  - [[TopKFloor]] hands the k-th-best score from doc range to doc range
+  *    inside one search task (the `MaxScoreAccumulator` analog); a raised
+  *    floor makes weak ranges skip whole block ranges without changing the
+  *    global top-k, and every run of a search starts from an empty floor.
   */
 class BlockMaxSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -88,26 +89,6 @@ class BlockMaxSpec extends AnyFunSuite {
     assert(searcher.search(q, 10).toSeq == searcher.bruteForce(q, 10).toSeq)
   }
 
-  test("ScoreFloor publishes monotonically, strict-compares, clears") {
-    val id = 987654321L
-    assert(ScoreFloor.get(id) == Float.NegativeInfinity)
-    assert(ScoreFloor.strictBound(id) == Double.NegativeInfinity)
-    ScoreFloor.publish(id, 2.5f)
-    ScoreFloor.publish(id, 1.0f) // lower publish never lowers the floor
-    assert(ScoreFloor.get(id) == 2.5f)
-    ScoreFloor.publish(id, 3.75f)
-    assert(ScoreFloor.get(id) == 3.75f)
-    // strict bound: bound <= strictBound iff bound < floor
-    assert(3.75f.toDouble > ScoreFloor.strictBound(id))
-    assert(Math.nextDown(3.75f).toDouble <= ScoreFloor.strictBound(id))
-    // zero/negative scores and the disabled id are ignored
-    ScoreFloor.publish(id, 0f)
-    ScoreFloor.publish(0L, 99f)
-    assert(ScoreFloor.get(0L) == Float.NegativeInfinity)
-    ScoreFloor.clear(id)
-    assert(ScoreFloor.get(id) == Float.NegativeInfinity)
-  }
-
   test("a published floor makes weak partitions skip; results unchanged") {
     // manual single-term collector driven with a pre-published global floor:
     // floor above every score -> everything pruned locally (those docs could
@@ -117,29 +98,48 @@ class BlockMaxSpec extends AnyFunSuite {
     val blocks = index.blocks.filter($"term" === t).as[BlockRow]
       .collect().sortBy(_.firstDocId)
     val maxDoc = index.fieldStats.maxDocId + 1
-    def run(floorId: Long): Array[ScoreDoc] = {
+    def run(floor: TopKFloor): Array[ScoreDoc] = {
       val it = new TermIterator(blocks,
         Bm25.scorer(1f, Bm25.DEFAULT_K1, Bm25.DEFAULT_B, ctx.docFreq(t), ctx.stats),
         0L, maxDoc)
-      TopK.singleTerm(it, 10, null, null, floorId)
+      TopK.singleTerm(it, 10, null, null, floor)
     }
-    val base = run(0L)
+    def floorAt(score: Float): TopKFloor = {
+      val f = new TopKFloor
+      f.raise(score)
+      f
+    }
+    // the floor only rises, ignores non-positive scores, and compares
+    // strictly: bound <= strictBound iff bound < floor
+    val f = floorAt(2.5f)
+    f.raise(1.0f)
+    f.raise(0f)
+    assert(new TopKFloor().strictBound == Double.NegativeInfinity)
+    assert(2.5f.toDouble > f.strictBound)
+    assert(Math.nextDown(2.5f).toDouble <= f.strictBound)
+    val base = run(null)
     assert(base.nonEmpty)
-
-    val lowId = 555001L
-    ScoreFloor.publish(lowId, Math.nextUp(0f)) // floor below every real score
-    assert(run(lowId).toSeq == base.toSeq)
-    ScoreFloor.clear(lowId)
-
-    val highId = 555002L
-    ScoreFloor.publish(highId, base.head.score * 4f) // floor above every score
-    assert(run(highId).isEmpty,
+    assert(run(new TopKFloor).toSeq == base.toSeq)
+    // floor below every real score
+    assert(run(floorAt(Math.nextUp(0f))).toSeq == base.toSeq)
+    // floor above every score
+    assert(run(floorAt(base.head.score * 4f)).isEmpty,
       "a floor above all scores must prune the whole partition")
-    ScoreFloor.clear(highId)
   }
 
-  test("search() clears its floor id") {
-    searcher.search("merge AND writer", 5)
-    assert(ScoreFloor.get(searcher.lastFloorIdForTest) == Float.NegativeInfinity)
+  test("a searchDS Dataset collected twice returns the same rows and the same decoded/skipped deltas") {
+    // each range starts from the floor the ranges before it left in the
+    // same run, never from one a previous collect left
+    for (q <- Seq("alpha", "policy AND alpha", "merge")) {
+      val ds = searcher.searchDS(searcher.parse(q), 5, null, 6)
+      def collect(): (Seq[ScoreDoc], Long, Long) = {
+        val (d0, s0) = (searcher.counters.decoded.value: Long, searcher.counters.skipped.value: Long)
+        val rows = ds.collect().toSeq.sorted(GraftSearcher.bestFirst)
+        (rows, (searcher.counters.decoded.value: Long) - d0,
+          (searcher.counters.skipped.value: Long) - s0)
+      }
+      val first = collect()
+      assert(collect() == first, s"$q: the second collect diverged")
+    }
   }
 }
