@@ -528,11 +528,20 @@ object IndexBuilder {
     }
   }
 
-  /** The scratch dirs [[build]] staged in this JVM and not deleted yet. One
-    * shutdown hook deletes them all, so test runs, `graft.Verify` and the
-    * `DocsIndex` variant builds leave no segment files behind. */
+  /** The scratch dirs [[scratchDir]] made in this JVM and not deleted yet.
+    * One shutdown hook deletes them all, so test runs, `graft.Verify` and
+    * the `DocsIndex` variant builds leave no segment files behind. */
   private val staged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   Runtime.getRuntime.addShutdownHook(new Thread(() => deleteStaged(), "graft-index-cleanup"))
+
+  /** A fresh dir under the JVM temp dir, named `prefix` + a random suffix,
+    * recorded for the shutdown hook: every main-code scratch dir is made
+    * here. */
+  private[graft] def scratchDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    staged.add(dir)
+    dir
+  }
 
   private[graft] def stagedDirs: Seq[String] = staged.toArray(Array.empty[String]).toSeq
 
@@ -559,8 +568,7 @@ object IndexBuilder {
     * parquet gives the query path term min/max row-group pruning — the term
     * dictionary seek — for free. */
   def build(files: Dataset[CodeFile], cfg: IndexConfig = IndexConfig()): GraftIndex = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-index-").toString
-    staged.add(dir)
+    val dir = scratchDir("graft-index-")
     IndexStore.buildAndCommit(files, dir, cfg)
     IndexStore.open(files.sparkSession, dir)
   }

@@ -106,7 +106,7 @@ object DocsIndex {
 
   private def commit(spark: SparkSession, sfDir: String, v: Committed,
       key: String): (GraftIndex, GraftSearcher) = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-docs${v.key}-").toString
+    val dir = IndexBuilder.scratchDir(s"graft-docs${v.key}-")
     v.write match {
       case Some(write) => write(spark, sfDir, dir)
       case None => IndexStore.buildAndCommit(files(spark, sfDir), dir, SimpleConfig)

@@ -3621,7 +3621,7 @@ object FulltextQueries {
     // text — replication fidelity under the hard signal.
     "ft_replica_search" -> ((spark, sfDir) => {
       val src = DocsIndex.committedDir(spark, sfDir)
-      val dst = java.nio.file.Files.createTempDirectory("graft-replica-").toString
+      val dst = graft.index.IndexBuilder.scratchDir("graft-replica-")
       graft.index.IndexStore.replicate(src, dst)
       val idx = graft.index.IndexStore.open(spark, dst)
       val searcher = new graft.search.GraftSearcher(idx, graft.analysis.Analyzers.simple)
@@ -3662,7 +3662,7 @@ object FulltextQueries {
     // scored match set. fscore = BM25 * eff.
     "ft_external_file" -> ((spark, sfDir) => {
       val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val effDir = java.nio.file.Files.createTempDirectory("graft-eff-").toString
+      val effDir = graft.index.IndexBuilder.scratchDir("graft-eff-")
       DocsIndex.documents(spark, sfDir).select(col("doc_id"))
         .withColumn("eff", (col("doc_id") * 7 % 13 + 1).cast("double"))
         .coalesce(1).write.mode("overwrite").option("header", "true").csv(effDir)

@@ -2440,7 +2440,7 @@ object RelationalQueries {
     "q_partition_prune" -> ((spark, sfDir) => {
       val key = s"parted#$sfDir#${System.identityHashCode(spark)}"
       bucketStaged.computeIfAbsent(key, _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graft-parted-").toString
+        val dir = graft.index.IndexBuilder.scratchDir("graft-parted-")
         partedDirs.put(key, dir)
         t(spark, sfDir, "events").write.mode("overwrite")
           .partitionBy("event_type").parquet(dir)

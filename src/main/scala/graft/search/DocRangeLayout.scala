@@ -1,7 +1,7 @@
 package graft.search
 
 import scala.reflect.ClassTag
-import org.apache.spark.Partitioner
+import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.storage.StorageLevel
 import graft.index.{BlockRow, GraftIndex}
@@ -53,24 +53,52 @@ final class DocRange(
   * once by docId range, one [[DocRange]] record per range, persisted
   * `MEMORY_AND_DISK` — Solr's document-partitioned shards held open
   * (SURVEY.md §3.3). A search is then one map-only job over the records:
-  * no block scan, no shuffle, no per-query Catalyst plan. */
+  * no block scan, no shuffle, no per-query Catalyst plan.
+  *
+  * Every job this class submits runs a function declared here, through the
+  * 4-argument `SparkContext.runJob`. Spark's closure cleaner reads and
+  * parses the bytecode of the class that declared a job's function on every
+  * job, uncached: `RDD.collect()`/`count()` hand it lambdas declared in
+  * `RDD` and `SparkContext` (~390 KB of bytecode per job); this class and
+  * its companion are 8 KB and 14 KB. */
 final class DocRangeLayout private (val ranges: RDD[DocRange]) {
 
-  /** Runs `f` over the ranges in ascending docId order, inside ONE task,
-    * handing every range the task's one [[TopKFloor]]. The floor is made
-    * inside the task, so each range starts from the k-th score the ranges
-    * before it left, and every run of the job — a retry, or a Dataset
-    * collected twice — starts from an empty floor. */
+  /** The ranges in one partition, in ascending docId order. */
+  private def inOrder: RDD[DocRange] =
+    ranges.coalesce(1, shuffle = false, Some(DocRangeLayout.InOrder))
+
+  /** The search task as an RDD, for the Dataset surfaces: runs `f` over the
+    * ranges in ascending docId order, inside ONE task, handing every range
+    * the task's one [[TopKFloor]] ([[DocRangeLayout.inTask]]). Every run of
+    * the job — a retry, or a Dataset collected twice — starts from an empty
+    * floor. Collecting it pays Spark's per-job parse of `RDD`'s bytecode;
+    * driver-side gathers use [[collect]]. */
   def serial[T: ClassTag](f: (DocRange, TopKFloor) => Iterator[T]): RDD[T] =
-    ranges.coalesce(1, shuffle = false, Some(DocRangeLayout.InOrder)).mapPartitions { it =>
-      val floor = new TopKFloor
-      it.flatMap(f(_, floor))
-    }
+    inOrder.mapPartitions(it => DocRangeLayout.inTask(it, f))
+
+  /** The same task as [[serial]], run as one job whose results come back to
+    * the driver: one stage, one task, the ranges' output in range order. */
+  def collect[T: ClassTag](f: (DocRange, TopKFloor) => Iterator[T]): Array[T] = {
+    var out: Array[T] = Array.empty[T]
+    ranges.sparkContext.runJob(inOrder,
+      (_: TaskContext, it: Iterator[DocRange]) => DocRangeLayout.inTask(it, f).toArray,
+      Seq(0), (_: Int, rows: Array[T]) => out = rows)
+    out
+  }
 
   def release(): Unit = ranges.unpersist(blocking = false)
 }
 
 object DocRangeLayout {
+
+  /** The body of the one search task: one [[TopKFloor]], made inside the
+    * task, handed to `f` for every range in turn, so each range starts from
+    * the k-th score the ranges before it left. */
+  private def inTask[T](ranges: Iterator[DocRange],
+      f: (DocRange, TopKFloor) => Iterator[T]): Iterator[T] = {
+    val floor = new TopKFloor
+    ranges.flatMap(f(_, floor))
+  }
 
   /** Groups every range of the parent into one partition, in range order. */
   private object InOrder extends PartitionCoalescer with Serializable {
@@ -118,7 +146,8 @@ object DocRangeLayout {
     }
     ranges.setName(s"graft doc-range layout ($nParts ranges)")
     ranges.persist(StorageLevel.MEMORY_AND_DISK)
-    ranges.count()
+    sc.runJob(ranges, (_: TaskContext, it: Iterator[DocRange]) => it.foreach(_ => ()),
+      0 until nParts, (_: Int, _: Unit) => ())
     new DocRangeLayout(ranges)
   }
 }

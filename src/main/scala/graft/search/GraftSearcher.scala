@@ -766,13 +766,31 @@ final class GraftSearcher(
   /** Distributed top-k. Returns hits best-first (score desc, docId asc). */
   def search(queryStr: String, k: Int): Array[ScoreDoc] = search(parse(queryStr), k, null)
 
-  def search(q0: Query, k: Int, after: ScoreDoc = null, numPartitions: Int = 0): Array[ScoreDoc] = {
-    searchRDD(q0, k, after, numPartitions).collect().sorted(GraftSearcher.bestFirst).take(k)
+  /** Top-k best-first: one job over the resident layout whose ≤ k·P hits
+    * come back through [[DocRangeLayout.collect]], merged on the driver. */
+  def search(q0: Query, k: Int, after: ScoreDoc = null, numPartitions: Int = 0): Array[ScoreDoc] =
+    searchJob(q0, k, after, numPartitions).gather().sorted(GraftSearcher.bestFirst).take(k)
+
+  /** One query's search task over the index's resident layout, run either
+    * way: [[rdd]] for the Dataset surfaces, [[gather]] for the driver-side
+    * merges (its one job runs a closure [[DocRangeLayout]] declares, so
+    * Spark's closure cleaner does not parse `RDD`'s bytecode per query).
+    * A null layout is a job with no ranges: the index holds no doc, or the
+    * query rewrote to MatchNone. */
+  private final class RangeJob[T: ClassTag](
+      layout: DocRangeLayout,
+      f: (DocRange, TopKFloor) => Iterator[T]) {
+    def rdd: RDD[T] = if (layout == null) spark.sparkContext.emptyRDD[T] else layout.serial(f)
+    def gather(): Array[T] = if (layout == null) Array.empty[T] else layout.collect(f)
   }
 
-  /** Runs `f` once per doc range of the index's resident layout — the one
-    * map-only job behind every search surface (Float top-k, double top-k,
-    * match set, counting and index-order collection). Each range hands `f`
+  private def noRanges[T: ClassTag]: RangeJob[T] = new RangeJob[T](null, null)
+
+  /** The search task that runs `f` once per doc range of the index's
+    * resident layout — the one map-only job behind every search surface
+    * (Float top-k, double top-k, match set, counting and index-order
+    * collection), as a [[RangeJob]] the caller runs as an RDD or gathers to
+    * the driver. Each range hands `f`
     * the query's blocks from its own dictionary (exact terms by lookup,
     * multi-term clauses by `matches`), its `[lo, hi)`, its tombstones and
     * the task's [[TopKFloor]]. Every range runs, including ranges holding
@@ -784,14 +802,14 @@ final class GraftSearcher(
   private def perRange[T: ClassTag](
       q: Query,
       numPartitions: Int)(
-      f: (Query, Map[String, Array[BlockRow]], Long, Long, LiveDocs, TopKFloor) => Iterator[T]): RDD[T] = {
-    if (fieldStats.maxDocId < 0) return spark.sparkContext.emptyRDD[T]
+      f: (Query, Map[String, Array[BlockRow]], Long, Long, LiveDocs, TopKFloor) => Iterator[T]): RangeJob[T] = {
+    if (fieldStats.maxDocId < 0) return noRanges[T]
     val p = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
     val exact = Query.terms(q)
     val mts = Query.multiTerms(q)
     val qB = q
     val fB = f
-    index.docRangeLayout(p).serial((r, floor) =>
+    new RangeJob[T](index.docRangeLayout(p), (r, floor) =>
       fB(qB, r.select(exact, mts), r.lo, r.hi, r.live, floor))
   }
 
@@ -803,7 +821,9 @@ final class GraftSearcher(
     * TOTAL_HITS_THRESHOLD = 1000, per leaf — same approximation here, per
     * doc-range). Returns (hits best-first, totalHits, "EQ" | "GTE"): EQ =
     * no partition crossed its threshold, the count is exact; GTE = the
-    * count is a lower bound because pruning may have skipped matches. */
+    * count is a lower bound because pruning may have skipped matches. The
+    * per-range counts come back through [[DocRangeLayout.collect]]: one
+    * job, one stage, one task. */
   def searchWithTotal(
       q0: Query,
       k: Int,
@@ -818,7 +838,7 @@ final class GraftSearcher(
       val tc = new TotalCounter(th)
       val hits = ScorerBuilder.topK(qq, termBlocks, ctxB, lo, hi, kB, null, live, tc)
       Iterator.single(RangeHits(hits, tc.seen, tc.countedEnough))
-    }.collect()
+    }.gather()
     val total = ranges.map(_.seen).sum
     val gte = ranges.exists(_.pruned)
     val hits = ranges.flatMap(_.hits).sorted(GraftSearcher.bestFirst).take(k)
@@ -832,11 +852,11 @@ final class GraftSearcher(
     * a range full of non-competitive docs skips whole block ranges. Every
     * collect returns the same rows. */
   def searchDS(q0: Query, k: Int, after: ScoreDoc = null, numPartitions: Int = 0): Dataset[ScoreDoc] =
-    spark.createDataset(searchRDD(q0, k, after, numPartitions))
+    spark.createDataset(searchJob(q0, k, after, numPartitions).rdd)
 
-  private def searchRDD(q0: Query, k: Int, after: ScoreDoc, numPartitions: Int): RDD[ScoreDoc] = {
+  private def searchJob(q0: Query, k: Int, after: ScoreDoc, numPartitions: Int): RangeJob[ScoreDoc] = {
     val (q, ctx) = plan(q0)
-    if (q == MatchNoneQ) return spark.sparkContext.emptyRDD[ScoreDoc]
+    if (q == MatchNoneQ) return noRanges[ScoreDoc]
     val ctxB = ctx
     val afterB = after
     val kB = k
@@ -850,11 +870,12 @@ final class GraftSearcher(
     * lengths, rounded to 4 decimals BEFORE ranking — every score is exactly
     * recomputable by the DuckDB oracle. */
   def searchDoubleDS(q0: Query, k: Int, after: ScoreDocD = null, numPartitions: Int = 0): Dataset[ScoreDocD] =
-    spark.createDataset(searchDoubleRDD(q0, k, after, numPartitions))
+    spark.createDataset(searchDoubleJob(q0, k, after, numPartitions).rdd)
 
-  private def searchDoubleRDD(q0: Query, k: Int, after: ScoreDocD, numPartitions: Int): RDD[ScoreDocD] = {
+  private def searchDoubleJob(q0: Query, k: Int, after: ScoreDocD,
+      numPartitions: Int): RangeJob[ScoreDocD] = {
     val (q, ctx0) = plan(q0)
-    if (q == MatchNoneQ) return spark.sparkContext.emptyRDD[ScoreDocD]
+    if (q == MatchNoneQ) return noRanges[ScoreDocD]
     val ctxB = ctx0.copy(doubleMode = true)
     val afterB = after
     val kB = k
@@ -865,7 +886,7 @@ final class GraftSearcher(
 
   /** Global double-precision top-k, best-first. */
   def searchDouble(q0: Query, k: Int, after: ScoreDocD = null): Array[ScoreDocD] =
-    searchDoubleRDD(q0, k, after, 0).collect().sorted(GraftSearcher.bestFirstD).take(k)
+    searchDoubleJob(q0, k, after, 0).gather().sorted(GraftSearcher.bestFirstD).take(k)
 
   /** DataFrame surface for the driver contract. */
   def searchDF(queryStr: String, k: Int): DataFrame =
@@ -905,7 +926,7 @@ final class GraftSearcher(
           }
         case _ => Iterator.empty[Long]
       }
-    })
+    }.rdd)
   }
 
   /** All matching docIds, unranked — the boolean match-set surface
@@ -923,7 +944,7 @@ final class GraftSearcher(
         override def hasNext: Boolean = d != DocScorer.NO_MORE
         override def next(): Long = { val r = d; d = root.nextDoc(); r }
       }
-    })
+    }.rdd)
   }
 
   /** Every match with its double-precision score, round4'd like
@@ -974,7 +995,7 @@ final class GraftSearcher(
           override def next(): ScoreDocD = { val r = nextHit; nextHit = fetch(); r }
         }
       }
-    })
+    }.rdd)
   }
 
   /** Driver-side exhaustive oracle: same scorer tree, zero pruning, one

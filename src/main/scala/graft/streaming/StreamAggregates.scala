@@ -24,7 +24,7 @@ object StreamAggregates {
     val p = java.nio.file.Paths.get(path)
     if (java.nio.file.Files.isDirectory(p)) path
     else staged.computeIfAbsent(path, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-stream-src-")
+      val dir = java.nio.file.Paths.get(graft.index.IndexBuilder.scratchDir("graft-stream-src-"))
       java.nio.file.Files.copy(p, dir.resolve(p.getFileName))
       dir.toString
     })
@@ -32,7 +32,7 @@ object StreamAggregates {
 
   private def runToMemory(spark: SparkSession, df: DataFrame, mode: OutputMode): DataFrame = {
     val name = "mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
+    val ckpt = graft.index.IndexBuilder.scratchDir("graft-ckpt-")
     val q = df.writeStream
       .format("memory")
       .queryName(name)

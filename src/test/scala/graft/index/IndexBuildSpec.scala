@@ -36,6 +36,18 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(!IndexBuilder.stagedDirs.contains(dirs.head))
   }
 
+  test("scratchDir records the dir it makes and the cleanup deletes it") {
+    val d = IndexBuilder.scratchDir("graft-scratch-probe-")
+    val dir = java.nio.file.Paths.get(d)
+    assert(java.nio.file.Files.isDirectory(dir))
+    assert(dir.getFileName.toString.startsWith("graft-scratch-probe-"))
+    assert(IndexBuilder.stagedDirs.contains(d))
+    java.nio.file.Files.write(dir.resolve("part-0"), Array[Byte](1, 2, 3))
+    IndexBuilder.deleteStaged(Seq(d))
+    assert(!java.nio.file.Files.exists(dir))
+    assert(!IndexBuilder.stagedDirs.contains(d))
+  }
+
   test("a malformed docId broadcast cap fails naming the key and the value") {
     // a session of its own: the conf change cannot leak into other tests
     val s2 = spark.newSession()

@@ -140,6 +140,78 @@ class ResidentLayoutSpec extends AnyFunSuite {
     (jobs.get.toInt, stages.size, shuffled.get)
   }
 
+  /** What Spark's closure cleaner is handed while `body` runs, read off its
+    * DEBUG lines: the implementation method of a Scala lambda (`Cleaning
+    * indylambda closure: $anonfun$collect$1`; Spark 4 names no class for
+    * these) or the class of any other closure (`+++ Cleaning closure <f>
+    * (<class>) +++`). The cleaner parses the bytecode of the class that
+    * declared each closure, on every job. */
+  private def cleanedClosures(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val name = "org.apache.spark.util.ClosureCleaner"
+    val Lambda = """Cleaning indylambda closure: (\S+)""".r
+    val Other = """\+\+\+ Cleaning closure .* \((\S+)\) \+\+\+""".r
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new AbstractAppender("closure-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = e.getMessage.getFormattedMessage match {
+        case Lambda(method) => seen.add(method)
+        case Other(cls) => seen.add(cls)
+        case _ =>
+      }
+    }
+    probe.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    val prev = Option(cfg.getLoggers.get(name))
+    prev.foreach(_ => cfg.removeLogger(name))
+    val debug = new LoggerConfig(name, Level.DEBUG, false)
+    debug.addAppender(probe, null, null)
+    cfg.addLogger(name, debug)
+    ctx.updateLoggers()
+    try body
+    finally {
+      cfg.removeLogger(name)
+      prev.foreach(cfg.addLogger(name, _))
+      ctx.updateLoggers()
+      probe.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("warm driver-side searches hand Spark's cleaner only closures declared in graft") {
+    val s = new GraftSearcher(index).withSimilarity(new StackProbeSim)
+    val q = s.parse("mergepolicy OR buffer")
+    def all(): Unit = { s.search(q, 10); s.searchWithTotal(q, 10); s.searchDouble(q, 10) }
+    all() // builds the layout and fills the stats cache
+    StackProbeSim.ran.clear()
+    val cleaned = cleanedClosures(all())
+    val ran = StackProbeSim.ran.toArray(Array.empty[String]).toSet
+    assert(cleaned.size >= 3, s"the probe saw fewer closures than jobs: $cleaned")
+    // a lambda's class: the class whose frame of that method ran in the task
+    val declaredBy = cleaned.distinct.map { c =>
+      c -> (if (!c.startsWith("$anonfun$")) Set(c)
+        else ran.filter(_.endsWith("." + c)).map(_.stripSuffix("." + c)))
+    }
+    assert(declaredBy.forall { case (_, cls) => cls.nonEmpty && cls.forall(_.startsWith("graft.")) },
+      s"closures declared outside graft: $declaredBy")
+  }
+
+  test("a zero-doc index answers every driver-side search with no hits") {
+    val empty = IndexBuilder.build(spark.emptyDataset[CodeFile], IndexConfig(numPartitions = 2))
+    assert(empty.fieldStats.maxDocId < 0)
+    val s = new GraftSearcher(empty)
+    for (q <- Seq(s.parse("indexwriter"), s.parse("NOT zebra"), PrefixQ("merge"))) {
+      assert(s.search(q, 10).isEmpty)
+      assert(s.searchDouble(q, 10).isEmpty)
+      val (hits, total, rel) = s.searchWithTotal(q, 10)
+      assert(hits.isEmpty && total == 0L && rel == "EQ")
+      assert(s.searchDS(q, 10).collect().isEmpty)
+    }
+  }
+
   private def layoutRdds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.values
       .filter(r => r.name != null && r.name.startsWith("graft doc-range layout")).map(_.id).toSet
@@ -151,6 +223,8 @@ class ResidentLayoutSpec extends AnyFunSuite {
     s.search(q, 10) // builds the layout and fills the stats cache
     val (jobs, stages, shuffled) = jobShape(s.search(q, 10))
     assert((jobs, stages, shuffled) == (1, 1, 0L))
+    assert(jobShape(s.searchWithTotal(q, 10)) == (1, 1, 0L))
+    assert(jobShape(s.searchDouble(q, 10)) == (1, 1, 0L))
     val not = s.parse("NOT zebra")
     s.plan(not) // stats cache
     val (nJobs, nStages, nShuffled) = jobShape(s.matchesDS(not).collect())
@@ -178,4 +252,37 @@ class ResidentLayoutSpec extends AnyFunSuite {
     assert(rebuilt.size == 1 && rebuilt != built)
     idx.close()
   }
+}
+
+/** BM25 that records, whenever a search task builds a scorer, the Scala
+  * lambda bodies (`Class.$anonfun$...` frames) running above Spark's
+  * `ResultTask.runTask`: the job's closures and what they call. Tasks run
+  * in this JVM (`local[4]`), so the record is a JVM-wide queue. */
+final class StackProbeSim extends Similarity {
+  private val bm25 = Bm25Sim(Bm25.DEFAULT_K1, Bm25.DEFAULT_B)
+
+  private def record(): Unit = {
+    val frames = Thread.currentThread.getStackTrace
+    val task = frames.indexWhere(_.getClassName == "org.apache.spark.scheduler.ResultTask")
+    if (task >= 0) frames.take(task).filter(_.getMethodName.startsWith("$anonfun$"))
+      .foreach(f => StackProbeSim.ran.add(f.getClassName + "." + f.getMethodName))
+  }
+
+  def scorer(boost: Float, df: Long, ttf: Long, stats: CollectionStats): SimScorer = {
+    record(); bm25.scorer(boost, df, ttf, stats)
+  }
+  def doubleScorer(boost: Double, df: Long, ttf: Long, stats: CollectionStats): DoubleSimScorer = {
+    record(); bm25.doubleScorer(boost, df, ttf, stats)
+  }
+  def multiTermScorer(boost: Float, freqs: Seq[(Long, Long)], stats: CollectionStats): SimScorer = {
+    record(); bm25.multiTermScorer(boost, freqs, stats)
+  }
+  def multiTermDoubleScorer(boost: Double, freqs: Seq[(Long, Long)],
+      stats: CollectionStats): DoubleSimScorer = {
+    record(); bm25.multiTermDoubleScorer(boost, freqs, stats)
+  }
+}
+
+object StackProbeSim {
+  val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
