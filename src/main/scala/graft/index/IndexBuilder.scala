@@ -491,23 +491,6 @@ object IndexBuilder {
     }
   }
 
-  /** Per-term stats straight from the analyzed docs — one flatMap of
-    * (term, tf) pairs with map-side partial aggregation (the shuffle is
-    * vocabulary-sized), used by the build while the analyzed frame is still
-    * persisted so the just-written blocks parquet is not re-read. Provably
-    * equal to [[termStatsOf]] over the encoded blocks: docFreq counts
-    * (term, doc) posting rows = Σ block counts, ttf sums tf = Σ blockTtf. */
-  def termStatsOfAnalyzed(analyzed: Dataset[AnalyzedDoc]): Dataset[TermStatsRow] = {
-    val spark = analyzed.sparkSession
-    import spark.implicits._
-    analyzed
-      .flatMap(a => a.terms.indices.iterator.map(i => (a.terms(i), a.tfs(i).toLong)))
-      .toDF("term", "tf")
-      .groupBy($"term")
-      .agg(count(lit(1)).as("docFreq"), sum($"tf").as("totalTermFreq"))
-      .as[TermStatsRow]
-  }
-
   /** Per-term stats aggregated over blocks (128x fewer rows than postings;
     * map-side partials keep the shuffle tiny). */
   def termStatsOf(blocks: Dataset[BlockRow]): Dataset[TermStatsRow] = {

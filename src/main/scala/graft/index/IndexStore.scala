@@ -42,9 +42,11 @@ final case class Manifest(
 }
 
 /** Parquet-backed index storage with stage-level checkpointing: every stage
-  * output (docmeta / postings / termstats) is a parquet dir whose `_SUCCESS`
-  * marker makes a restart skip completed work — the north rule's
-  * resumability. The manifest commit is last and atomic. */
+  * output of a segment (docmeta / termvectors / postings / buildmetrics /
+  * termstats) is a parquet dir whose `_SUCCESS` marker makes a restart skip
+  * completed work — the north rule's resumability. One writer
+  * ([[IndexStore.writeSegment]]) owns those stages for the build, its resume
+  * and the merge. The manifest commit is last and atomic. */
 object IndexStore {
 
   // -------- manifest JSON (hand-rolled: no extra deps) --------
@@ -143,11 +145,70 @@ object IndexStore {
     Manifest(gen, segs, delGen, indexSort, sortRuns, dvGen)
   }
 
-  private def isComplete(path: String): Boolean =
+  /** A stage table is complete once its `_SUCCESS` marker exists. */
+  private[index] def isComplete(path: String): Boolean =
     Files.exists(Paths.get(path, "_SUCCESS"))
 
-  /** Build one segment from `files`, checkpointing each stage; skips stages
-    * whose parquet output already exists (restart-safe). Returns its meta. */
+  /** The one segment writer: the build, its resume and the merge write a
+    * segment's tables here, in this order, each skipped when its `_SUCCESS`
+    * marker already exists (a restart redoes only the missing stages) and
+    * each zstd-compressed — measured 21% smaller postings and 37% smaller
+    * docmeta than snappy, and merges/scans are I/O-bound long before they
+    * are CPU-bound:
+    *  - `docmeta` from `docs`;
+    *  - `termvectors` from `termVectors` when given, in the doc-keyed layout
+    *    (range-partitioned and sorted by docId, so a per-document fetch is
+    *    row-group min/max pruning on the key);
+    *  - `postings` from `postings`, block-encoded with the (maxDoc,
+    *    sumTokens) that `encodeBounds` takes from the written docmeta's field
+    *    stats, and `buildmetrics` beside it when `metrics` is given;
+    *  - `termstats` from the written postings ([[IndexBuilder.termStatsOf]],
+    *    the derivation [[CheckIndex]] checks against), sorted by term within
+    *    partitions so the row groups' term min/max ranges stay narrow.
+    * An input is forced only when a stage it feeds is missing. Returns the
+    * field stats of the written docmeta, computed once. */
+  private[index] def writeSegment(
+      spark: SparkSession,
+      segDir: String,
+      cfg: IndexConfig,
+      docs: => Dataset[DocRow],
+      termVectors: Option[() => Dataset[TermVectorRow]],
+      postings: => Dataset[PostingRow],
+      encodeBounds: FieldStatsRow => (Long, Long),
+      metrics: BuildMetricsAcc = null,
+      forcePayloads: Boolean = false): FieldStatsRow = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    def write(stage: String, table: => Dataset[_]): Unit =
+      if (!isComplete(s"$segDir/$stage"))
+        table.write.mode("overwrite").option("compression", "zstd").parquet(s"$segDir/$stage")
+    write("docmeta", docs)
+    termVectors.foreach(tv => write("termvectors",
+      tv().repartitionByRange(math.max(spark.sparkContext.defaultParallelism, cfg.numPartitions),
+        col("docId")).sortWithinPartitions("docId", "term")))
+    val fs = IndexBuilder.fieldStatsOf(spark.read.parquet(s"$segDir/docmeta").as[DocRow])
+    if (!isComplete(s"$segDir/postings")) {
+      val (maxDoc, sumTokens) = encodeBounds(fs)
+      write("postings",
+        IndexBuilder.encodeBlocks(postings, cfg, maxDoc, sumTokens, metrics, forcePayloads))
+      // per-task lineage + postings/sec, kept with the segment: a resume
+      // that skips the postings keeps the original run's records
+      if (metrics != null) write("buildmetrics", spark.createDataset(metrics.value))
+    }
+    write("termstats", IndexBuilder.termStatsOf(spark.read.parquet(s"$segDir/postings").as[BlockRow])
+      .sortWithinPartitions("term"))
+    fs
+  }
+
+  /** Builds segment `segName` of `indexDir` from `files`, its docIds from
+    * `docBase`, through [[writeSegment]]. The docId assignment and the
+    * analysis (sha256 + tokenize, the most expensive map work of the build)
+    * run only when a stage they feed — docmeta, postings, or term vectors
+    * when `cfg.storeTermVectors` — is missing, and then once: the analyzed
+    * frame is persisted for every such stage and released at the end. A
+    * resume that lacks only the term vectors re-analyzes; docIds are
+    * deterministic, so its rows are the ones a fresh build writes. Returns
+    * the segment's meta. */
   def buildSegment(
       files: Dataset[CodeFile],
       indexDir: String,
@@ -155,116 +216,60 @@ object IndexStore {
       cfg: IndexConfig = IndexConfig(),
       docBase: Long = 0L): SegmentMeta = {
     val spark = files.sparkSession
-    import spark.implicits._
-    val segDir = s"$indexDir/$segName"
-    val docsPath = s"$segDir/docmeta"
-    val blocksPath = s"$segDir/postings"
-    val statsPath = s"$segDir/termstats"
-    val tvPath = s"$segDir/termvectors"
-
-    def writeTermVectors(tv: Dataset[TermVectorRow]): Unit = {
-      val parts = math.max(spark.sparkContext.defaultParallelism,
-        cfg.numPartitions)
-      // doc-keyed layout: range-partition + sort by docId so a per-document
-      // fetch is row-group min/max pruning on the key
-      tv.repartitionByRange(parts, tv("docId"))
-        .sortWithinPartitions("docId", "term")
-        .write.mode("overwrite").option("compression", "zstd").parquet(tvPath)
-    }
-
-    if (!isComplete(docsPath) || !isComplete(blocksPath)) {
-      // ONE analysis pass: the sha256+tokenize inversion is the most
-      // expensive map work of the build, and both the docmeta write and the
-      // encode shuffle consume it — persist the analyzed frame so it is
-      // computed once instead of once per sink (measured ~1s/pass at 100k
-      // docs; at corpus scale the recompute is a full second tokenize of
-      // the corpus). Released in the finally.
+    var release: () => Unit = () => ()
+    lazy val analyzed = {
       val (numbered, releaseKeys) = IndexBuilder
         .assignDocIdsManaged(files, cfg.numPartitions, docBase, cfg.sortFields)
-      val analyzed = IndexBuilder.analyze(numbered, cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // zstd over snappy for segment tables: measured 21% smaller postings
-        // and 37% smaller docmeta — at cluster scale that is a quarter less
-        // segment I/O + storage for abundant-CPU decode, and merges/scans are
-        // I/O-bound long before they are CPU-bound
-        val docsWritten = !isComplete(docsPath)
-        if (docsWritten)
-          IndexBuilder.docsOf(analyzed).write.mode("overwrite")
-            .option("compression", "zstd").parquet(docsPath)
-        // the ranked-keys cache only feeds the analyze stage; once analyzed
-        // is materialized (first sink above or the encode below) it is dead
-        // weight — but only release it early when a sink has actually run
-        if (docsWritten) releaseKeys()
-        if (cfg.storeTermVectors && !isComplete(tvPath))
-          writeTermVectors(IndexBuilder.termVectorsOf(analyzed))
-        if (!isComplete(blocksPath)) {
-          // field stats come from the persisted analysis when this run wrote
-          // it (no parquet re-read); from the committed docmeta on resume
-          val fs =
-            if (docsWritten) IndexBuilder.fieldStatsOf(IndexBuilder.docsOf(analyzed))
-            else IndexBuilder.fieldStatsOf(spark.read.parquet(docsPath).as[DocRow])
-          // per-task lineage + postings/sec telemetry, persisted with the
-          // segment (the north rule's per-task metrics; a resumed build that
-          // skips this stage keeps the original run's records)
-          val metrics = new BuildMetricsAcc
-          spark.sparkContext.register(metrics, s"buildmetrics:$segName")
-          IndexBuilder.encodeBlocks(IndexBuilder.postingsOf(analyzed), cfg,
-              fs.maxDocId + 1, fs.sumTotalTermFreq, metrics)
-            .write.mode("overwrite").option("compression", "zstd").parquet(blocksPath)
-          spark.createDataset(metrics.value)
-            .write.mode("overwrite").parquet(s"$segDir/buildmetrics")
-        }
-        // term stats from the still-persisted analysis (vocab-sized shuffle)
-        // instead of re-reading the blocks parquet just written; the blocks
-        // fallback below still serves resumed builds
-        if (!isComplete(statsPath))
-          IndexBuilder.termStatsOfAnalyzed(analyzed).write.mode("overwrite")
-            .option("compression", "zstd").parquet(statsPath)
-      } finally {
-        analyzed.unpersist(blocking = false)
-        releaseKeys()
-      }
+      val a = IndexBuilder.analyze(numbered, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+      release = () => { a.unpersist(blocking = false); releaseKeys() }
+      a
     }
-    if (!isComplete(statsPath)) {
-      IndexBuilder.termStatsOf(spark.read.parquet(blocksPath).as[BlockRow])
-        .write.mode("overwrite").option("compression", "zstd").parquet(statsPath)
-    }
-    // resume path: docs/blocks checkpointed by an earlier run that did not
-    // store term vectors — backfill once from the committed blocks (the
-    // one-time reindex cost, NOT a per-query uninvert)
-    if (cfg.storeTermVectors && !isComplete(tvPath)) {
-      writeTermVectors(
-        SegmentMerger.decodeToPostings(spark.read.parquet(blocksPath).as[BlockRow])
-          .map(p => TermVectorRow(p.docId, p.term, p.tf)))
-    }
-    val docs = spark.read.parquet(docsPath).as[DocRow]
-    val fs = IndexBuilder.fieldStatsOf(docs)
+    val metrics = new BuildMetricsAcc
+    spark.sparkContext.register(metrics, s"buildmetrics:$segName")
+    val fs =
+      try writeSegment(spark, s"$indexDir/$segName", cfg,
+        IndexBuilder.docsOf(analyzed),
+        if (cfg.storeTermVectors) Some(() => IndexBuilder.termVectorsOf(analyzed)) else None,
+        IndexBuilder.postingsOf(analyzed),
+        fs => (fs.maxDocId + 1, fs.sumTotalTermFreq),
+        metrics)
+      finally release()
     SegmentMeta(segName, docBase, fs.docCount, fs.sumTotalTermFreq, fs.maxDocId)
+  }
+
+  /** The one append step, shared by [[buildAndCommit]] and the NRT batch
+    * commit ([[graft.streaming.IncrementalIndexer.commitBatch]]): reads the
+    * previous manifest and returns it unchanged when it already lists the
+    * segment (a replayed append); otherwise refuses an index sort other than
+    * the committed one, builds the segment and commits it as the next
+    * generation, with a new sorted run at its docBase. `place` names the
+    * segment and its docBase from the previous manifest. */
+  private[graft] def appendSegment(
+      files: Dataset[CodeFile],
+      indexDir: String,
+      cfg: IndexConfig)(place: Option[Manifest] => (String, Long)): Manifest = {
+    val prev = readManifest(indexDir)
+    val (segName, docBase) = place(prev)
+    prev.filter(_.segments.exists(_.name == segName)).getOrElse {
+      prev.foreach(p => require(p.indexSort == cfg.sortFields,
+        s"index sort mismatch: committed ${p.indexSort}, appending ${cfg.sortFields}"))
+      val meta = buildSegment(files, indexDir, segName, cfg, docBase)
+      val base = prev.getOrElse(Manifest(-1L, Nil))
+      val m = base.copy(generation = base.generation + 1, segments = base.segments :+ meta,
+        indexSort = cfg.sortFields, sortRuns = base.sortRuns :+ docBase)
+      writeManifest(indexDir, m)
+      m
+    }
   }
 
   /** Build + commit a single-segment index (gen 0 or gen+1 append). */
   def buildAndCommit(
       files: Dataset[CodeFile],
       indexDir: String,
-      cfg: IndexConfig = IndexConfig()): Manifest = {
-    val prev = readManifest(indexDir)
-    val gen = prev.map(_.generation + 1).getOrElse(0L)
-    val docBase = prev.map(_.maxDocId + 1).getOrElse(0L)
-    val segName = f"seg-$gen%05d"
-    val done = prev.exists(_.segments.exists(_.name == segName))
-    if (done) return prev.get
-    prev.foreach(p => require(p.indexSort == cfg.sortFields,
-      s"index sort mismatch: committed ${p.indexSort}, appending ${cfg.sortFields}"))
-    val meta = buildSegment(files, indexDir, segName, cfg, docBase)
-    val m = Manifest(gen, prev.map(_.segments).getOrElse(Nil) :+ meta,
-      prev.map(_.delGen).getOrElse(-1L),
-      cfg.sortFields,
-      prev.map(_.sortRuns).getOrElse(Nil) :+ docBase,
-      prev.map(_.dvGen).getOrElse(-1L))
-    writeManifest(indexDir, m)
-    m
-  }
+      cfg: IndexConfig = IndexConfig()): Manifest =
+    appendSegment(files, indexDir, cfg) { prev =>
+      (f"seg-${prev.fold(0L)(_.generation + 1)}%05d", prev.fold(0L)(_.maxDocId + 1))
+    }
 
   /** Tombstone docIds in the current delete generation (empty if none). */
   def readDeletes(spark: SparkSession, indexDir: String, m: Manifest): Dataset[Long] = {

@@ -34,11 +34,10 @@ object SegmentMerger {
   }
 
   /** Merge ALL committed segments into one and commit a new generation.
-    * Stage outputs are checkpointed like the build path. A SINGLE segment
-    * still rewrites when tombstones exist — Lucene's forceMerge treats a
-    * one-segment index with deletions as merge-worthy so the purge happens
-    * (IndexWriter.forceMerge → MergePolicy.findForcedMerges on segments
-    * with deletes). */
+    * A SINGLE segment still rewrites when tombstones exist — Lucene's
+    * forceMerge treats a one-segment index with deletions as merge-worthy
+    * so the purge happens (IndexWriter.forceMerge →
+    * MergePolicy.findForcedMerges on segments with deletes). */
   def mergeAll(spark: SparkSession, indexDir: String, cfg: IndexConfig = IndexConfig()): Manifest = {
     import spark.implicits._
     val m = IndexStore.readManifest(indexDir)
@@ -47,7 +46,10 @@ object SegmentMerger {
     mergeSegments(spark, indexDir, m, m.segments, cfg)
   }
 
-  /** Merge a chosen subset of segments into one; keeps the rest. */
+  /** Merge a chosen subset of segments into one; keeps the rest. The merged
+    * segment's tables go through the build's own checkpointed writer
+    * ([[IndexStore.writeSegment]]), so a restarted merge redoes only the
+    * stages it lacks. */
   def mergeSegments(
       spark: SparkSession,
       indexDir: String,
@@ -68,51 +70,27 @@ object SegmentMerger {
       s"merge group must be docId-adjacent segments, got ${toMerge.map(_.name)}")
     val gen = m.generation + 1
     val segName = f"seg-$gen%05d-merged"
-    val segDir = s"$indexDir/$segName"
-    val docsPath = s"$segDir/docmeta"
-    val blocksPath = s"$segDir/postings"
-    val statsPath = s"$segDir/termstats"
-    def done(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS"))
 
     // tombstoned docs are physically dropped while rewriting — the merge IS
     // the delete purge (Lucene: SegmentMerger honors liveDocs)
     val deletes = IndexStore.readDeletes(spark, indexDir, m).toDF("_del")
-    def purge[T](ds: Dataset[T], idCol: String): Dataset[T] =
+    def purge[T](ds: Dataset[T]): Dataset[T] =
       if (!m.hasDeletes) ds
-      else ds.join(deletes, col(idCol) === col("_del"), "left_anti").as[T](ds.encoder)
+      else ds.join(deletes, col("docId") === col("_del"), "left_anti").as[T](ds.encoder)
+    def unionOf[T: org.apache.spark.sql.Encoder](stage: String): Dataset[T] =
+      toMerge.map(s => spark.read.parquet(s"$indexDir/${s.name}/$stage").as[T]).reduce(_ union _)
 
-    if (!done(docsPath)) {
-      val docs = toMerge.map(s => spark.read.parquet(s"$indexDir/${s.name}/docmeta").as[DocRow])
-        .reduce(_ union _)
-      purge(docs, "docId").write.mode("overwrite")
-        .option("compression", "zstd").parquet(docsPath)
-    }
-    if (!done(blocksPath)) {
-      val allBlocks = toMerge.map(s => spark.read.parquet(s"$indexDir/${s.name}/postings").as[BlockRow])
-        .reduce(_ union _)
-      val postings = purge(decodeToPostings(allBlocks), "docId")
-      IndexBuilder.encodeBlocks(postings, cfg, toMerge.map(_.maxDocId).max + 1,
-          toMerge.map(_.sumTotalTermFreq).sum, forcePayloads = true)
-        .write.mode("overwrite").option("compression", "zstd").parquet(blocksPath)
-    }
-    if (!done(statsPath)) {
-      IndexBuilder.termStatsOf(spark.read.parquet(blocksPath).as[BlockRow])
-        .write.mode("overwrite").option("compression", "zstd").parquet(statsPath)
-    }
-    // term vectors merge as a purged union of the doc-keyed tables (docIds
-    // never renumber) — no decode, no shuffle beyond the docId range write
-    val tvPath = s"$segDir/termvectors"
-    if (toMerge.forall(s => done(s"$indexDir/${s.name}/termvectors")) && !done(tvPath)) {
-      val tv = toMerge.map(s =>
-          spark.read.parquet(s"$indexDir/${s.name}/termvectors").as[TermVectorRow])
-        .reduce(_ union _)
-      purge(tv, "docId")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, col("docId"))
-        .sortWithinPartitions("docId", "term")
-        .write.mode("overwrite").option("compression", "zstd").parquet(tvPath)
-    }
-    val mergedDocs = spark.read.parquet(docsPath).as[DocRow]
-    val fs = IndexBuilder.fieldStatsOf(mergedDocs)
+    // docmeta and term vectors merge as purged unions (docIds never
+    // renumber); the postings are decoded, purged and re-encoded. The encode
+    // bounds are the merged segments' own, not the purged docmeta's.
+    val fs = IndexStore.writeSegment(spark, s"$indexDir/$segName", cfg,
+      purge(unionOf[DocRow]("docmeta")),
+      if (toMerge.forall(s => IndexStore.isComplete(s"$indexDir/${s.name}/termvectors")))
+        Some(() => purge(unionOf[TermVectorRow]("termvectors")))
+      else None,
+      purge(decodeToPostings(unionOf[BlockRow]("postings"))),
+      _ => (toMerge.map(_.maxDocId).max + 1, toMerge.map(_.sumTotalTermFreq).sum),
+      forcePayloads = true)
     val merged = SegmentMeta(segName,
       toMerge.map(_.docBase).min,
       fs.docCount,
@@ -128,27 +106,6 @@ object SegmentMerger {
     val newManifest = Manifest(gen, keep :+ merged, newDelGen, m.indexSort, m.sortRuns, m.dvGen)
     IndexStore.writeManifest(indexDir, newManifest)
     newManifest
-  }
-
-  /** Simple count-based compaction: while more than `maxSegments` live
-    * segments, merge the `mergeFactor` smallest into one (the blunt loop;
-    * the size-aware policy below is the production path). */
-  def compact(
-      spark: SparkSession,
-      indexDir: String,
-      cfg: IndexConfig = IndexConfig(),
-      maxSegments: Int = 10,
-      mergeFactor: Int = 10): Manifest = {
-    var m = IndexStore.readManifest(indexDir)
-      .getOrElse(throw new IllegalStateException(s"no manifest at $indexDir"))
-    while (m.segments.size > maxSegments) {
-      // lightest CONSECUTIVE window (adjacency invariant, see mergeSegments)
-      val ordered = m.segments.sortBy(_.docBase)
-      val window = ordered.sliding(math.min(mergeFactor, ordered.size))
-        .minBy(_.map(_.docCount).sum)
-      m = mergeSegments(spark, indexDir, m, window, cfg)
-    }
-    m
   }
 
   /** On-disk byte size of a segment (all stage parquet files). */

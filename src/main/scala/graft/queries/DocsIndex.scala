@@ -503,8 +503,7 @@ object DocsIndex {
     * segment — the batch-build/merge-equivalence evidence behind
     * `ft_incr_search` (its oracle is the same SQL as `ft_search_term`). */
   val Incremental: Variant = Committed("incr",
-    mutate = (spark, dir, _) =>
-      SegmentMerger.compact(spark, dir, SimpleConfig, maxSegments = 1, mergeFactor = 2),
+    mutate = (spark, dir, _) => SegmentMerger.mergeAll(spark, dir, SimpleConfig),
     write = Some((spark, sfDir, dir) => {
       import spark.implicits._
       val all = files(spark, sfDir)

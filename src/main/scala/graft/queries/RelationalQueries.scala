@@ -21,17 +21,25 @@ object RelationalQueries {
 
   private val cents = "CAST(round(l_extendedprice * 100) AS BIGINT)"
 
-  /** Derby databases already staged this JVM (q_jdbc round-trip setup). */
-  private val jdbcStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** Landing-zone copies staged this JVM, by (sfDir, name). */
+  private val landings =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+
+  /** The path of this JVM's landing-zone copy `name` of `sfDir`'s tables
+    * (the untimed set-up of the source-format queries): a child of a fresh
+    * recorded scratch dir ([[graft.index.IndexBuilder.scratchDir]], deleted
+    * at JVM exit), written by `stage(path)` on first use. A copy is never
+    * shared across JVMs, so regenerated sf tables are never served stale. */
+  private[graft] def landing(sfDir: String, name: String)(stage: String => Unit): String =
+    landings.computeIfAbsent((sfDir, name), _ => {
+      val path = s"${graft.index.IndexBuilder.scratchDir("graft-landing-")}/$name"
+      stage(path)
+      path
+    })
 
   /** Bucketed warehouse tables already staged this JVM (q_bucketed_join). */
   private val bucketStaged =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Partitioned copies staged this JVM (q_partition_prune). */
-  private val partedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1 shape: the RollupStream / StatsComponent analog
@@ -685,11 +693,10 @@ object RelationalQueries {
     // (untimed setup, like a landing zone drop) and aggregate from the CSV
     // scan — the oracle reads the same rows from parquet
     "q_csv" -> ((spark, sfDir) => {
-      val csvPath = s"/tmp/graft-csv-nation-${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$csvPath/_SUCCESS")))
+      val csvPath = landing(sfDir, "nation.csv")(p =>
         t(spark, sfDir, "nation")
           .select("n_nationkey", "n_name", "n_regionkey")
-          .write.mode("overwrite").option("header", "true").csv(csvPath)
+          .write.option("header", "true").csv(p))
       spark.read.option("header", "true")
         .schema("n_nationkey INT, n_name STRING, n_regionkey INT")
         .csv(csvPath)
@@ -703,12 +710,11 @@ object RelationalQueries {
     // explicit schema (no sampling inference pass at scale), aggregate from
     // the JSON scan; the oracle reads the same rows from parquet.
     "q_json" -> ((spark, sfDir) => {
-      val p = s"/tmp/graft-json-docs-${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$p/_SUCCESS")))
+      val jsonPath = landing(sfDir, "documents.json")(p =>
         t(spark, sfDir, "documents")
           .select("doc_id", "lang", "n_chars")
-          .write.mode("overwrite").json(p)
-      spark.read.schema("doc_id BIGINT, lang STRING, n_chars BIGINT").json(p)
+          .write.json(p))
+      spark.read.schema("doc_id BIGINT, lang STRING, n_chars BIGINT").json(jsonPath)
         .groupBy("lang")
         .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("sum_chars"))
         .orderBy("lang")
@@ -719,19 +725,18 @@ object RelationalQueries {
     // host — Derby ships with Spark), then aggregate from the JDBC scan.
     // The oracle reads the same rows from parquet.
     "q_jdbc" -> ((spark, sfDir) => {
-      val db = s"/tmp/graft-derby-${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      System.setProperty("derby.stream.error.file", "/tmp/derby.log")
-      val url = s"jdbc:derby:$db;create=true"
+      def url(db: String) = s"jdbc:derby:$db;create=true"
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      if (!jdbcStaged.containsKey(db)) {
+      val db = landing(sfDir, "derby") { p =>
+        // Derby reads its log path once, when the first database boots
+        System.setProperty("derby.stream.error.file", s"$p.log")
         spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("lang"),
             length(col("text")).cast("long").as("text_len"))
-          .write.mode("overwrite").jdbc(url, "docs_rt", props)
-        jdbcStaged.put(db, java.lang.Boolean.TRUE)
+          .write.jdbc(url(p), "docs_rt", props)
       }
-      spark.read.jdbc(url, "docs_rt", props)
+      spark.read.jdbc(url(db), "docs_rt", props)
         .groupBy("lang")
         .agg(count(lit(1)).as("cnt"), sum(col("text_len")).as("sum_len"))
         .orderBy("lang")
@@ -1419,12 +1424,11 @@ object RelationalQueries {
     // stage the region dim as tab-separated text (untimed landing-zone
     // drop), aggregate off the TSV scan; the oracle reads parquet.
     "q_tsv" -> ((spark, sfDir) => {
-      val tsvPath = s"/tmp/graft-tsv-region-${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tsvPath/_SUCCESS")))
+      val tsvPath = landing(sfDir, "region.tsv")(p =>
         t(spark, sfDir, "region")
           .select("r_regionkey", "r_name")
-          .write.mode("overwrite").option("header", "true")
-          .option("sep", "\t").csv(tsvPath)
+          .write.option("header", "true")
+          .option("sep", "\t").csv(p))
       spark.read.option("header", "true").option("sep", "\t")
         .schema("r_regionkey INT, r_name STRING")
         .csv(tsvPath)
@@ -2438,15 +2442,9 @@ object RelationalQueries {
     // audit asserts PartitionFilters prune at planning time, so at 100 TB
     // the scan touches 1/5 of the files before any row is read).
     "q_partition_prune" -> ((spark, sfDir) => {
-      val key = s"parted#$sfDir#${System.identityHashCode(spark)}"
-      bucketStaged.computeIfAbsent(key, _ => {
-        val dir = graft.index.IndexBuilder.scratchDir("graft-parted-")
-        partedDirs.put(key, dir)
-        t(spark, sfDir, "events").write.mode("overwrite")
-          .partitionBy("event_type").parquet(dir)
-        java.lang.Boolean.TRUE
-      })
-      spark.read.parquet(partedDirs.get(key))
+      val parted = landing(sfDir, "events.parted")(p =>
+        t(spark, sfDir, "events").write.partitionBy("event_type").parquet(p))
+      spark.read.parquet(parted)
         .filter(col("event_type") === "purchase")
         .groupBy((col("user_id") % 50).as("ub"))
         .agg(count(lit(1)).as("cnt"),

@@ -888,10 +888,6 @@ final class GraftSearcher(
   def searchDouble(q0: Query, k: Int, after: ScoreDocD = null): Array[ScoreDocD] =
     searchDoubleJob(q0, k, after, 0).gather().sorted(GraftSearcher.bestFirstD).take(k)
 
-  /** DataFrame surface for the driver contract. */
-  def searchDF(queryStr: String, k: Int): DataFrame =
-    spark.createDataset(search(queryStr, k).toSeq).toDF("docId", "score")
-
   /** Index-sorted top-k with EARLY TERMINATION — Lucene's
     * `TopFieldCollector` over a congruent index sort (reference:
     * lucene/core/src/java/org/apache/lucene/search/TopFieldCollector.java:212-227

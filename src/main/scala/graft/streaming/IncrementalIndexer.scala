@@ -45,12 +45,16 @@ object IncrementalIndexer {
       .start()
   }
 
-  /** Commit one micro-batch as one segment (skips if already committed).
+  /** Commit one non-empty micro-batch as segment `seg-batch-<batchId>` at
+    * docBase `batchId * docBaseStride`, through the same append step as a
+    * batch build ([[IndexStore.appendSegment]]): a replayed batch is
+    * skipped, and a batch with another index sort than the committed one is
+    * refused.
     *
     * SINGLE-WRITER contract: the manifest read-modify-write here is not
-    * atomic against a concurrent `SegmentMerger.compact` on the same index
-    * dir — exactly Lucene's rule that one `IndexWriter` (holding write.lock)
-    * owns an index at a time (reference:
+    * atomic against a concurrent merge (`SegmentMerger.compactTiered` /
+    * `mergeAll`) on the same index dir — exactly Lucene's rule that one
+    * `IndexWriter` (holding write.lock) owns an index at a time (reference:
     * lucene/core/src/java/org/apache/lucene/index/IndexWriter.java write.lock).
     * Run compaction from the same single writer (e.g. inside foreachBatch
     * between commits), never as a parallel job. */
@@ -59,19 +63,8 @@ object IncrementalIndexer {
       batchId: Long,
       indexDir: String,
       cfg: IndexConfig,
-      docBaseStride: Long): Unit = {
-    val segName = f"seg-batch-$batchId%08d"
-    val prev = IndexStore.readManifest(indexDir)
-    if (prev.exists(_.segments.exists(_.name == segName))) return // replayed batch
-    if (batch.isEmpty) return
-    val meta = IndexStore.buildSegment(
-      batch, indexDir, segName, cfg, docBase = batchId * docBaseStride)
-    val gen = prev.map(_.generation + 1).getOrElse(0L)
-    IndexStore.writeManifest(indexDir,
-      graft.index.Manifest(gen, prev.map(_.segments).getOrElse(Nil) :+ meta,
-        prev.map(_.delGen).getOrElse(-1L),
-        cfg.sortFields,
-        prev.map(_.sortRuns).getOrElse(Nil) :+ batchId * docBaseStride,
-        prev.map(_.dvGen).getOrElse(-1L)))
-  }
+      docBaseStride: Long): Unit =
+    if (!batch.isEmpty)
+      IndexStore.appendSegment(batch, indexDir, cfg)(_ =>
+        (f"seg-batch-$batchId%08d", batchId * docBaseStride))
 }

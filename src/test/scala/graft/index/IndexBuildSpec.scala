@@ -60,19 +60,6 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(IndexBuilder.docIdBroadcastMaxRows(s2) == 5L)
   }
 
-  test("termStatsOfAnalyzed == termStatsOf(blocks) row for row (r06)") {
-    // the build now writes stats from the persisted analysis; prove it
-    // equals the blocks-derived aggregation the resume path still uses
-    val cfg = IndexConfig(numPartitions = 4)
-    val analyzed = IndexBuilder.analyze(
-      IndexBuilder.assignDocIds(spark.createDataset(tiny), cfg.numPartitions), cfg)
-    val fromAnalyzed = IndexBuilder.termStatsOfAnalyzed(analyzed)
-      .collect().map(t => t.term -> (t.docFreq, t.totalTermFreq)).toMap
-    val fromBlocks = IndexBuilder.termStatsOf(tinyIndex.blocks)
-      .collect().map(t => t.term -> (t.docFreq, t.totalTermFreq)).toMap
-    assert(fromAnalyzed == fromBlocks)
-  }
-
   test("field stats match a local recount through the same analyzer") {
     val localLens = tiny.map(f => Analyzers.standard.invert(f.content)._2.toLong)
     assert(tinyIndex.fieldStats.docCount == 64)

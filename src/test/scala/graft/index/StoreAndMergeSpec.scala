@@ -90,18 +90,25 @@ class StoreAndMergeSpec extends AnyFunSuite {
     assert(after == before)
   }
 
-  test("compaction merges down to the segment budget") {
-    val all = CodeCorpus.files(120)
-    val sortedAll = all.sortBy(f => (f.repo, f.path, f.commit))
+  test("resume adds missing term vectors without touching the other stages") {
+    val files = CodeCorpus.files(120)
     val dir = tmpDir()
-    sortedAll.grouped(30).foreach { batch =>
-      IndexStore.buildAndCommit(spark.createDataset(batch), dir, IndexConfig(numPartitions = 2))
-    }
-    assert(IndexStore.readManifest(dir).get.segments.size == 4)
-    val m = SegmentMerger.compact(spark, dir, IndexConfig(numPartitions = 2), maxSegments = 2, mergeFactor = 3)
-    assert(m.segments.size <= 2)
-    assert(m.docCount == 120)
+    IndexStore.buildAndCommit(spark.createDataset(files), dir, IndexConfig(numPartitions = 4))
+    def stamps(stage: String) = new java.io.File(s"$dir/seg-00000/$stage").listFiles()
+      .map(f => f.getName -> f.lastModified()).toMap
+    val stages = Seq("docmeta", "postings", "termstats")
+    val before = stages.map(stamps)
+    IndexStore.buildSegment(spark.createDataset(files), dir, "seg-00000",
+      IndexConfig(numPartitions = 4, storeTermVectors = true), 0L)
+    assert(stages.map(stamps) == before)
     val idx = IndexStore.open(spark, dir)
-    assert(idx.docs.count() == 120)
+    assert(idx.termVectors != null)
+    val stored = idx.termVectors.collect().map(tv => (tv.docId, tv.term, tv.tf)).toSet
+    val an = IndexConfig().analyzer
+    val expected = idx.docs.collect().flatMap { d =>
+      val f = files.find(f => f.repo == d.repo && f.path == d.path && f.commit == d.commit).get
+      an.invert(f.content)._1.map { case (t, (tf, _)) => (d.docId, t, tf) }
+    }.toSet
+    assert(stored == expected)
   }
 }

@@ -59,4 +59,16 @@ class IncrementalIndexerSpec extends AnyFunSuite {
     assert(m1 == m2)
     assert(m2.segments.size == 1 && m2.docCount == 30)
   }
+
+  test("a batch with another index sort than the committed one is refused") {
+    import spark.implicits._
+    val dir = IndexBuilder.scratchDir("graft-sort-idx")
+    val files = CodeCorpus.files(60)
+    IncrementalIndexer.commitBatch(files.take(30).toDS(), 0L, dir, IndexConfig(numPartitions = 2), 1000L)
+    val m0 = IndexStore.readManifest(dir).get
+    intercept[IllegalArgumentException](
+      IncrementalIndexer.commitBatch(files.drop(30).toDS(), 1L, dir,
+        IndexConfig(numPartitions = 2, sortFields = Seq("lang")), 1000L))
+    assert(IndexStore.readManifest(dir).get.generation == m0.generation)
+  }
 }
