@@ -1864,10 +1864,7 @@ object FulltextQueries {
     "ft_phrase_prefix" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val pq = graft.search.PrefixQ("s")
-      val exps = index.termStats
-        .filter(graft.search.Query.scanPrefilter(pq))
-        .filter(ts => ts.term.startsWith("s"))
+      val exps = searcher.dictTerms(graft.search.PrefixQ("s"))
         .map(_.term)
         .orderBy("value").limit(64)
         .collect()
@@ -1885,12 +1882,8 @@ object FulltextQueries {
     "ft_complex_phrase" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, searcher) = DocsIndex.get(spark, sfDir)
-      // expansion through the SymSpell delete band (O(variants) dictionary
-      // rows, IN-pushdown) instead of a whole-dictionary typed-lambda scan
-      // (r06; round-5 perf_weak #1) — identical term set: the band is a
-      // provable superset that fuzzyCandidateTerms exact-verifies
       val fz = graft.search.FuzzyQ("tabl", 1)
-      val exps = searcher.fuzzyCandidateTerms(fz)
+      val exps = searcher.dictTerms(fz)
         .map(_.term)
         .orderBy("value").limit(64)
         .collect()
@@ -3477,16 +3470,13 @@ object FulltextQueries {
     // apache/lucene/search/spans/SpanMultiTermQueryWrapper.java:40-98):
     // a multi-term query (prefix ta*) rewritten to a SpanOr over its
     // dictionary expansions, then composed as a clause of a SpanNear.
-    // Expansion is dictionary-first (termStats, one row per term, parquet
-    // prefix pushdown via scanPrefilter) — never the blocks table; the
+    // Expansion is dictionary-first (`dictTerms`: termStats, one row per
+    // term, parquet prefix pushdown) — never the blocks table; the
     // expanded slot rides the existing SpanOrNearScorer or-merge.
     "ft_span_prefix" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val pq = graft.search.PrefixQ("ta")
-      val exps = index.termStats
-        .filter(graft.search.Query.scanPrefilter(pq))
-        .filter(ts => ts.term.startsWith("ta"))
+      val exps = searcher.dictTerms(graft.search.PrefixQ("ta"))
         .map(_.term).orderBy("value").limit(128)
         .collect()
       val q = graft.search.SpanOrNearQ(
@@ -4117,12 +4107,10 @@ object FulltextQueries {
       import spark.implicits._
       val (index, searcher) = DocsIndex.get(spark, sfDir)
       // "fuzzy prefix 1" == FuzzyQ("tble", 1, prefixLength=1,
-      // transpositions=true): startsWith("t") is the prefix anchor and the
-      // damerau<=1 check is the exact verify — so the expansion routes
-      // through the delete band (O(variants) dictionary rows) instead of a
-      // whole-dictionary typed-lambda scan (r06; round-5 perf_weak #2)
+      // transpositions=true): startsWith("t") is the pushed prefix anchor
+      // and the damerau<=1 check is the exact decision
       val fz = graft.search.FuzzyQ("tble", 1, prefixLength = 1, transpositions = true)
-      val variants = searcher.fuzzyCandidateTerms(fz)
+      val variants = searcher.dictTerms(fz)
         .map(_.term).orderBy("value").limit(128)
         .collect()
       val q = graft.search.SpanOrNearQ(

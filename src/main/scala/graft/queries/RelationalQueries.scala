@@ -37,7 +37,7 @@ object RelationalQueries {
       path
     })
 
-  /** Bucketed warehouse tables already staged this JVM (q_bucketed_join). */
+  /** Bucketed tables already staged this JVM (q_bucketed_join). */
   private val bucketStaged =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
@@ -2496,25 +2496,16 @@ object RelationalQueries {
     "q_bucketed_join" -> ((spark, sfDir) => {
       val key = s"bucketed#$sfDir#${System.identityHashCode(spark)}"
       bucketStaged.computeIfAbsent(key, _ => {
-        // a fresh JVM has an empty in-memory metastore, but the warehouse
-        // DIRECTORY persists across runs — drop both and clear stale paths
-        Seq("g_orders_b", "g_lineitem_b").foreach { tbl =>
-          spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          val loc = java.nio.file.Paths.get(
-            spark.conf.get("spark.sql.warehouse.dir")
-              .stripPrefix("file:"), tbl)
-          if (java.nio.file.Files.exists(loc)) {
-            val s = java.nio.file.Files.walk(loc)
-            try s.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-            finally s.close()
-          }
-        }
+        // external tables under a recorded scratch dir (deleted at JVM
+        // exit), never the session's warehouse dir
+        val dir = graft.index.IndexBuilder.scratchDir("graft-bucketed-")
         t(spark, sfDir, "orders").write.mode("overwrite")
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .option("path", s"$dir/g_orders_b")
           .saveAsTable("g_orders_b")
         t(spark, sfDir, "lineitem").write.mode("overwrite")
           .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+          .option("path", s"$dir/g_lineitem_b")
           .saveAsTable("g_lineitem_b")
         java.lang.Boolean.TRUE
       })

@@ -586,93 +586,12 @@ final class GraftSearcher(
 
   def parse(s: String): Query = parser.parse(s)
 
-  /** Delete-neighborhood index per maxEdits (SymSpell banding — the role of
-    * the reference's Levenshtein automaton, LevenshteinAutomata.java:1-319,
-    * as data instead of a DFA): one (variant, term) row per <=e-char
-    * deletion of each dictionary term. Built lazily on the first fuzzy
-    * query at that e and persisted; terms longer than 32 chars are left out
-    * (their C(n,e) variant fan-out isn't worth it) and are instead caught
-    * by the exact giant-tail union in [[fuzzyCandidateTerms]]. At cluster
-    * scale this table is written once at build time bucketed by `variant`,
-    * so a fuzzy expansion is a pure bucket seek. */
-  @transient private lazy val deleteIndexes =
-    new java.util.concurrent.ConcurrentHashMap[Int, DataFrame]()
-
-  /** One shared neighborhood table, always built at e=2 (maxEdits is
-    * clamped to 2 anyway): an e=0/1 query probes it with its own smaller
-    * variant set — any extra e=2 rows it hits are discarded by the exact
-    * distance verify, so sharing is lossless and a long-lived searcher
-    * caches at most ONE delete-neighborhood table (round-4 advice). Call
-    * [[close]] to release it. */
-  private def deleteIndex(): DataFrame =
-    deleteIndexes.computeIfAbsent(2, e => {
-      import spark.implicits._
-      index.termStats
-        .filter(length($"term") <= 32)
-        .flatMap(ts => Query.deleteNeighborhood(ts.term, e).iterator
-          .map(v => (v, ts.term, ts.docFreq, ts.totalTermFreq)))
-        .toDF("variant", "term", "docFreq", "totalTermFreq")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  /** Release cached auxiliary tables (the delete-neighborhood index) and
-    * the index's resident doc-range layout, which other searchers over the
-    * same index share. The searcher stays usable — both rebuild lazily on
-    * the next query that needs them. */
-  def close(): Unit = {
-    deleteIndexes.values().forEach(df => df.unpersist(false))
-    deleteIndexes.clear()
-    index.close()
-  }
-
-  /** The dictionary rows a fuzzy clause expands to, via the delete band:
-    * IN-filter on the query term's own <=e-deletes (a few hundred variants,
-    * pushable — O(band) index rows touched), exact damerau/levenshtein +
-    * prefix-anchor verify on the surviving candidates only. Never a
-    * whole-dictionary predicate pass (round-3 `perf_weak` (a)). Outlier
-    * query terms (>30 chars) fall back to a length-banded scan — the band
-    * q±e is itself a vanishing slice of any real dictionary. */
-  private[graft] def fuzzyCandidateTerms(f: FuzzyQ): Dataset[TermStatsRow] = {
-    import spark.implicits._
-    val fB = f
-    val e = math.min(f.maxEdits, 2)
-    if (f.term.length > 30) {
-      // Spark length() counts codepoints while f.term.length counts UTF-16
-      // units; widen the lower bound like scanPrefilter so astral-plane
-      // dictionary terms (cp count as low as (len16)/2) can't be excluded
-      // before the exact verify.
-      index.termStats
-        .filter(length($"term")
-          .between((f.term.length - e + 1) / 2, f.term.length + e))
-        .filter(ts => fB.matches(ts.term))
-    } else {
-      val variants = Query.deleteNeighborhood(f.term, e).toSeq
-      val hits = deleteIndex()
-        .filter($"variant".isin(variants: _*))
-        .select("term", "docFreq", "totalTermFreq").distinct()
-        .as[TermStatsRow]
-      // giants have no delete rows; when the query's length band can reach
-      // them, union the (exact) >32 tail back in
-      val cands =
-        if (f.term.length + e > 32)
-          hits.union(index.termStats.filter(length($"term") > 32))
-        else hits
-      cands.filter(ts => fB.matches(ts.term))
-    }
-  }
-
-  /** Dictionary expansion for any multi-term clause: fuzzy goes through the
-    * delete band, everything else through the pushable scan-prefilter +
-    * exact predicate (one row per DICTIONARY TERM, never per block row). */
-  private[graft] def dictTerms(mt: MultiTermQ): Dataset[TermStatsRow] = {
-    val mtB = mt
-    mt match {
-      case f: FuzzyQ => fuzzyCandidateTerms(f)
-      case _ => index.termStats
-        .filter(Query.scanPrefilter(mt))
-        .filter(ts => mtB.matches(ts.term))
-    }
-  }
+  /** The dictionary rows a multi-term clause expands to — the one
+    * driver-side expansion, Lucene's rewrite-time `TermsEnum` walk: the
+    * pushable [[Query.scanPrefilter]] narrows the term-stats scan (one row
+    * per DICTIONARY TERM, never per block row) and `mt.matches` decides. */
+  private[graft] def dictTerms(mt: MultiTermQ): Dataset[TermStatsRow] =
+    index.termStats.filter(Query.scanPrefilter(mt)).filter(ts => mt.matches(ts.term))
 
   /** WordBreakSpellChecker.suggestWordBreaks (reference:
     * lucene/suggest/src/java/org/apache/lucene/search/spell/WordBreakSpellChecker.java:1-514,
@@ -715,52 +634,6 @@ final class GraftSearcher(
       .join(broadcast(cands), Seq("combined"))
       .select($"pos", $"w1", $"w2", $"combined", $"df")
       .orderBy("pos")
-  }
-
-  /** Every block row the query can touch — the distributed term-dictionary
-    * seek over the stored block table, independent of the resident layout
-    * (the input of [[bruteForce]]). Exact/prefix/range predicates filter
-    * the block scan directly (parquet min/max row-group pruning).
-    * Fuzzy/regexp/wildcard queries are DICTIONARY-FIRST: their predicate
-    * evaluates against `index.termStats` (ONE row per term) and the block
-    * table is narrowed by a semi-join on the matching terms — never by
-    * running `levenshtein`/regex over every block row (~128x more rows than
-    * the dictionary: one per term per 128-doc block per salt bucket). Both
-    * scans still get the cheap superset pre-filter
-    * ([[Query.blockPredicate]]) pushed down. */
-  private[graft] def filteredBlocks(q: Query): Dataset[BlockRow] = {
-    val pred = Query.blockPredicate(q)
-    if (pred.isEmpty) return spark.emptyDataset[BlockRow]
-    val mts = Query.multiTerms(q)
-    val needsDict = mts.exists {
-      case _: PrefixQ | _: TermRangeQ => false // scanPrefilter is exact
-      case _ => true // wildcard/fuzzy/regexp: prefilter is a superset
-    }
-    val scan = index.blocks.filter(pred.get).as[BlockRow]
-    val narrowed =
-      if (!needsDict) scan
-      else {
-        val exact = Query.terms(q)
-        // fuzzy clauses expand through the delete-neighborhood band
-        // (O(band) dictionary rows); everything else keeps the
-        // predicate-over-dictionary path under the pushable pre-filter
-        val (fuzzies, others) = mts.partition(_.isInstanceOf[FuzzyQ])
-        val nonFuzzy =
-          if (exact.nonEmpty || others.nonEmpty)
-            Some(index.termStats
-              .filter(pred.get) // same pushable pre-filter on the dict scan
-              .filter(ts => exact.contains(ts.term) || others.exists(_.matches(ts.term)))
-              .select("term"))
-          else None
-        val cands = fuzzies.map { case f: FuzzyQ => fuzzyCandidateTerms(f).select("term") }
-        val dict = (nonFuzzy.toSeq ++ cands).reduce(_ union _)
-        scan.join(dict, Seq("term"), "left_semi").as[BlockRow]
-      }
-    // queries that never consume positions project the payload away: the
-    // replaced column is unreferenced, so parquet column pruning skips
-    // posEnc entirely — neither read nor shuffled (Query.needsPositions)
-    if (Query.needsPositions(q)) narrowed
-    else narrowed.withColumn("posEnc", lit(Array.emptyByteArray)).as[BlockRow]
   }
 
   /** Distributed top-k. Returns hits best-first (score desc, docId asc). */
@@ -997,13 +870,18 @@ final class GraftSearcher(
   /** Driver-side exhaustive oracle: same scorer tree, zero pruning, one
     * partition over the whole doc space — the `CheckHits` / TestWANDScorer
     * differential baseline (reference:
-    * lucene/core/src/test/org/apache/lucene/search/TestWANDScorer.java:209). */
+    * lucene/core/src/test/org/apache/lucene/search/TestWANDScorer.java:209).
+    * It reads the stored block table, not the resident layout: the blocks
+    * of the query's exact terms and of its multi-term expansions
+    * ([[dictTerms]]). */
   def bruteForce(q0: Query, k: Int, after: ScoreDoc = null): Array[ScoreDoc] = {
     val (q, ctx) = plan(q0)
     if (q == MatchNoneQ) return Array.empty
     val maxDoc = fieldStats.maxDocId + 1
+    val terms = Query.terms(q) ++
+      Query.multiTerms(q).flatMap(mt => dictTerms(mt).collect().map(_.term))
     val termBlocks: Map[String, Array[BlockRow]] =
-      filteredBlocks(q).collect()
+      index.blocks.filter($"term".isin(terms.toSeq: _*)).collect()
         .groupBy(_.term).map { case (t, arr) => t -> arr.sortBy(_.firstDocId) }
     val live =
       if (!index.hasDeletes) null

@@ -107,10 +107,10 @@ final case class BoostQ(q: Query, boost: Float) extends Query
   * Expansion is DISTRIBUTED and uncapped (Lucene never truncates
   * CONSTANT_SCORE rewrites): `matches` runs inside each doc range of the
   * resident layout against that range's sorted terms, from the clause's
-  * seek key ([[Query.literalPrefix]]). Scans of the stored block table
-  * use the equivalent Column predicate ([[Query.blockPredicate]]) — there
-  * prefix/range predicates reach the parquet reader as min/max row-group
-  * pruning, regex/fuzzy evaluate in the scan stage. */
+  * seek key ([[Query.literalPrefix]]). Driver-side expansions (scoring
+  * rewrites, phrase slots, the exhaustive `bruteForce`) walk the term
+  * dictionary once (`GraftSearcher.dictTerms`): [[Query.scanPrefilter]]
+  * narrows the scan and `matches` decides. */
 sealed trait MultiTermQ extends Query {
   def matches(term: String): Boolean
 }
@@ -281,21 +281,6 @@ object Query {
     case _ => Set.empty
   }
 
-  /** Does any node consume term POSITIONS (phrase/span matching)? When not,
-    * the block scan projects the positions payload away entirely — parquet
-    * column pruning skips `posEnc` (typically the largest postings column,
-    * Lucene's separate `.pos` file that term queries never open; reference:
-    * lucene/core/src/java/org/apache/lucene/codecs/lucene84/Lucene84PostingsReader.java
-    * posIn opened only when FieldInfo has positions AND the caller asks). */
-  def needsPositions(q: Query): Boolean = q match {
-    case _: PhraseQ | _: SpanNearQ | _: SpanOrNearQ | _: SpanNotQ |
-         _: SpanContainingQ | _: SpanFirstQ | _: SpanPosRangeQ => true
-    case BoolQ(m, s, n, _) => (m ++ s ++ n).exists(needsPositions)
-    case DisMaxQ(ds, _) => ds.exists(needsPositions)
-    case BoostQ(sub, _) => needsPositions(sub)
-    case _ => false
-  }
-
   /** All multi-term (dictionary-predicate) sub-queries. */
   def multiTerms(q: Query): Seq[MultiTermQ] = q match {
     case mt: MultiTermQ => Seq(mt)
@@ -313,9 +298,6 @@ object Query {
     case c => c.toString
   }
 
-  /** Plain Levenshtein distance — same semantics as Spark's / DuckDB's
-    * `levenshtein()` (no transpositions), so fuzzy matching is
-    * oracle-recomputable. */
   /** edismax `mm` specification evaluator (reference: solr/core/src/java/
     * org/apache/solr/util/SolrPluginUtils.java calculateMinShouldMatch:
     * conditional `N<spec` segments apply their spec only when
@@ -348,6 +330,9 @@ object Query {
     }
   }
 
+  /** Plain Levenshtein distance — same semantics as Spark's / DuckDB's
+    * `levenshtein()` (no transpositions), so fuzzy matching is
+    * oracle-recomputable. */
   def levenshtein(a: String, b: String): Int = {
     if (a == b) return 0
     val n = b.length
@@ -419,6 +404,22 @@ object Query {
     * preceding char optional, so it is dropped. Conservative (may return
     * ""), used only to push a `startsWith` pre-filter into the scan. */
   private[search] def regexLiteralPrefix(pat: String): String = {
+    // a top-level alternation drops the prefix ("ab|cd" matches "cd")
+    var depth = 0
+    var inClass = false
+    var j = 0
+    while (j < pat.length) {
+      pat.charAt(j) match {
+        case '\\' => j += 1
+        case '[' => inClass = true
+        case ']' => inClass = false
+        case '(' if !inClass => depth += 1
+        case ')' if !inClass => depth -= 1
+        case '|' if !inClass && depth == 0 => return ""
+        case _ =>
+      }
+      j += 1
+    }
     val meta = "\\^$.|?*+()[]{}"
     val sb = new StringBuilder
     var i = 0
@@ -433,40 +434,6 @@ object Query {
     sb.toString
   }
 
-  /** Cheap parquet-pushable SUPERSET predicate for one multi-term query:
-    * selects candidate rows by the `term` column; the EXACT decision is
-    * always `mt.matches` (the per-partition expansion and the termStats
-    * dictionary filter in `GraftSearcher.filteredBlocks`). Prefix/range are
-    * exact and reach parquet min/max row-group pruning (the dictionary
-    * seek); wildcard/regexp contribute their literal prefix; fuzzy gets a
-    * length window widened for UTF-16 vs codepoint counting (`matches` uses
-    * Java String.length = UTF-16 units, Spark `length()` counts codepoints;
-    * a term of `cp` codepoints has UTF-16 length in [cp, 2cp], so the
-    * window below can never exclude a true match). */
-  /** All strings reachable from `s` by deleting UP TO `e` characters
-    * (including `s` itself) — the SymSpell delete neighborhood. If
-    * damerau_levenshtein(a, b) <= e then the e-neighborhoods of a and b
-    * intersect (align the edit script: drop from `a` its substituted /
-    * deleted chars, from `b` its substituted/inserted chars, and one char
-    * from each side per transposition — both sides reduce to the common
-    * aligned subsequence with <= e deletions each). So a join on delete
-    * variants is an EXACT superset band for fuzzy expansion: the automaton
-    * role of the reference's LevenshteinAutomata.java:1-319 re-expressed as
-    * an equi-join the engine can seek, never a whole-dictionary predicate
-    * scan. */
-  def deleteNeighborhood(s: String, e: Int): Set[String] = {
-    var cur = Set(s)
-    var all = cur
-    var d = 0
-    while (d < e) {
-      cur = cur.flatMap(w =>
-        w.indices.map(i => w.substring(0, i) + w.substring(i + 1)))
-      all ++= cur
-      d += 1
-    }
-    all
-  }
-
   /** The literal prefix every term `mt` matches starts with ("" = none):
     * the dictionary seek key of a prefix, wildcard, regexp or
     * prefix-anchored fuzzy clause. Term ranges seek their lower bound
@@ -479,52 +446,48 @@ object Query {
     case _: TermRangeQ => ""
   }
 
+  /** Cheap parquet-pushable SUPERSET predicate over the `term` column for
+    * one multi-term clause; the EXACT decision is always `mt.matches`.
+    * Prefix, wildcard, regexp and prefix-anchored fuzzy clauses push their
+    * literal prefix, which reaches parquet min/max row-group pruning (the
+    * dictionary seek). Fuzzy adds a length window widened for UTF-16 vs
+    * code-point counting (`matches` uses Java String.length = UTF-16 units,
+    * Spark `length()` counts code points; a term of `cp` code points has
+    * UTF-16 length in [cp, 2cp], so the window never excludes a match).
+    * Term ranges push a bound only when every char of it is below U+D800:
+    * Spark compares strings in code-point order and `matches` in UTF-16
+    * order, and the two disagree only where a surrogate meets a char in
+    * U+E000–U+FFFF. */
   def scanPrefilter(mt: MultiTermQ): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
     val term = col("term")
+    val seek = utf8Exact(literalPrefix(mt))
+    val anchor = if (seek.nonEmpty) term.startsWith(seek) else lit(true)
     mt match {
-      case PrefixQ(p) => term.startsWith(p)
-      case w: WildcardQ =>
-        val litPrefix = literalPrefix(w)
-        if (litPrefix.nonEmpty) term.startsWith(litPrefix) else lit(true)
       case f: FuzzyQ =>
         val q16 = f.term.length
-        val lenGuard =
-          (length(term) <= q16 + f.maxEdits) && (length(term) * 2 >= q16 - f.maxEdits)
-        // the exact-prefix anchor pushes down as a range seek (parquet
-        // min/max pruning on the sorted term column), like PrefixQ
-        if (f.prefixLength > 0)
-          lenGuard && term.startsWith(literalPrefix(f))
-        else lenGuard
-      case r: RegexpQ =>
-        val lp = literalPrefix(r)
-        if (lp.nonEmpty) term.startsWith(lp) else lit(true)
+        anchor && length(term) <= q16 + f.maxEdits && length(term) * 2 >= q16 - f.maxEdits
       case tr: TermRangeQ =>
+        def pushable(bound: String) = bound != null && bound.forall(_ < '\uD800')
         var c = lit(true)
-        if (tr.lower != null)
+        if (pushable(tr.lower))
           c = c && (if (tr.includeLower) term >= tr.lower else term > tr.lower)
-        if (tr.upper != null)
+        if (pushable(tr.upper))
           c = c && (if (tr.includeUpper) term <= tr.upper else term < tr.upper)
         c
+      case _ => anchor
     }
   }
 
-  /** The Column predicate selecting every block row the (rewritten) query
-    * can touch — a SUPERSET pre-filter for the scan (exact terms +
-    * [[scanPrefilter]] per multi-term query). Exact terms, prefixes and
-    * ranges push down to parquet min/max row-group pruning. Queries with
-    * fuzzy/regexp/wildcard clauses are narrowed to exactly-matching terms
-    * by the termStats semi-join in `GraftSearcher.filteredBlocks` — the
-    * expensive predicate runs once per DICTIONARY ENTRY, never per block
-    * row. None = query touches no terms (e.g. pure MatchAll). */
-  def blockPredicate(q: Query): Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions._
-    val term = col("term")
-    val parts = collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Column]
-    val exact = terms(q).toSeq.sorted
-    if (exact.nonEmpty) parts += term.isin(exact: _*)
-    multiTerms(q).foreach(mt => parts += scanPrefilter(mt))
-    parts.reduceOption(_ || _)
+  /** The longest prefix of `p` that a Spark (UTF-8) string holds exactly:
+    * a lone surrogate, such as a prefix cut inside a surrogate pair,
+    * encodes as '?'. */
+  private def utf8Exact(p: String): String = {
+    var i = 0
+    while (i < p.length && (!Character.isSurrogate(p.charAt(i)) ||
+        Character.isSupplementaryCodePoint(p.codePointAt(i))))
+      i += Character.charCount(p.codePointAt(i))
+    p.substring(0, i)
   }
 }
 

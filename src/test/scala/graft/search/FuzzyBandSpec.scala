@@ -5,35 +5,18 @@ import graft.TestSpark
 import graft.fixtures.CodeCorpus
 import graft.index._
 
-/** The SymSpell delete-neighborhood band behind fuzzy expansion
-  * (`GraftSearcher.fuzzyCandidateTerms`): the banded candidate set must
-  * equal the brute-force whole-dictionary filter for every fuzzy shape,
-  * and the plan must show the O(band) IN-filter instead of a dictionary
-  * predicate pass. */
+/** The length band behind fuzzy expansion (`Query.scanPrefilter` of a
+  * `FuzzyQ`, read by `GraftSearcher.dictTerms`): the dictionary terms left
+  * by the band's length window and literal-prefix anchor, filtered by
+  * `matches`, must equal the brute-force whole-dictionary filter for every
+  * fuzzy shape. */
 class FuzzyBandSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private lazy val files = CodeCorpus.files(1500)
   private lazy val index = IndexBuilder.build(
-    spark.createDataset(files), IndexConfig(numPartitions = 4))
+    spark.createDataset(CodeCorpus.files(1500)), IndexConfig(numPartitions = 4))
   private lazy val searcher = new GraftSearcher(index)
-
-  test("deleteNeighborhood: counts and the SymSpell intersection property") {
-    assert(Query.deleteNeighborhood("ab", 1) == Set("ab", "a", "b"))
-    assert(Query.deleteNeighborhood("abc", 2) ==
-      Set("abc", "ab", "ac", "bc", "a", "b", "c"))
-    // damerau(a, b) <= e  =>  neighborhoods intersect
-    val pairs = Seq(
-      ("sort", "sorts", 1), ("sort", "srot", 1), ("sort", "short", 1),
-      ("table", "tabel", 1), ("merge", "marge", 1), ("scan", "sncan", 1),
-      ("vector", "vectr", 1), ("vector", "vecotrs", 2), ("batch", "bcath", 2))
-    for ((a, b, e) <- pairs) {
-      assert(Query.damerauLevenshtein(a, b) <= e, s"($a,$b)")
-      assert(Query.deleteNeighborhood(a, e)
-        .intersect(Query.deleteNeighborhood(b, e)).nonEmpty, s"($a,$b,$e)")
-    }
-  }
 
   test("banded candidates == brute-force dictionary filter, all fuzzy shapes") {
     val dict = index.termStats.collect()
@@ -44,64 +27,14 @@ class FuzzyBandSpec extends AnyFunSuite {
       FuzzyQ("uniq_tok_11", 2), // underscore identifiers
       FuzzyQ("xyzzy", 2), // no matches expected
       FuzzyQ("scan", 2, prefixLength = 2, transpositions = true),
-      // the two r06 reroutes (round-5 perf_weak): ft_complex_phrase's slot
-      // and ft_span_fuzzy's prefix-anchored damerau slot
+      // ft_complex_phrase's slot and ft_span_fuzzy's prefix-anchored slot
       FuzzyQ("tabl", 1),
       FuzzyQ("tble", 1, prefixLength = 1, transpositions = true))
     for (f <- queries) {
-      val banded = searcher.fuzzyCandidateTerms(f).collect().map(_.term).toSet
+      val banded = searcher.dictTerms(f).collect().map(_.term).toSet
       val brute = dict.filter(ts => f.matches(ts.term)).map(_.term).toSet
       assert(banded == brute, s"$f: banded=$banded brute=$brute")
+      assert(brute.forall(t => t.length <= f.term.length + f.maxEdits), s"$f: $brute")
     }
-  }
-
-  test("plan shows the variant IN-filter band, not a dictionary predicate") {
-    val plan = searcher.fuzzyCandidateTerms(FuzzyQ("sort", 2))
-      .queryExecution.optimizedPlan.toString
-    val lower = plan.toLowerCase
-    assert(lower.contains("variant"), plan)
-    // Spark renders a small IN-list as `variant INSET (...)` (or In(...)
-    // before optimization) — either spelling proves the O(band) filter
-    assert(lower.contains("variant#") &&
-      (lower.contains("inset") || lower.contains("in(variant")), plan)
-  }
-
-  test("ft_span_fuzzy's old lambda predicate == FuzzyQ(tble,1,prefix=1,dl)") {
-    // the r06 reroute replaced `startsWith("t") && damerau(t,"tble")<=1`
-    // with the banded FuzzyQ — prove predicate equivalence over real terms
-    val f = FuzzyQ("tble", 1, prefixLength = 1, transpositions = true)
-    for (ts <- index.termStats.collect()) {
-      val old = ts.term.startsWith("t") &&
-        Query.damerauLevenshtein(ts.term, "tble") <= 1
-      assert(f.matches(ts.term) == old, ts.term)
-    }
-  }
-
-  test("fuzzy search through filteredBlocks still matches the oracle set") {
-    val f = FuzzyQ("tabel", 2)
-    val viaSearch = searcher.matchesDS(f).collect().toSet
-    val dict = index.termStats.collect().filter(ts => f.matches(ts.term)).map(_.term).toSet
-    val viaTerms =
-      if (dict.isEmpty) Set.empty[Long]
-      else searcher.matchesDS(BoolQ(should = dict.toSeq.sorted.map(TermQ(_))))
-        .collect().toSet
-    assert(viaSearch == viaTerms)
-  }
-
-  test("giant-term tail: >32-char dictionary terms are still reachable") {
-    val giant = "a" * 33
-    val files2 = Seq(
-      CodeFile("r", "p1", "c", "scala", s"$giant sort merge", null),
-      CodeFile("r", "p2", "c", "scala", "sort merge", null))
-    val idx2 = IndexBuilder.build(spark.createDataset(files2), IndexConfig(numPartitions = 1))
-    val s2 = new GraftSearcher(idx2)
-    // query within the band edge: length 31 query, 2 edits -> can reach 33
-    val q = FuzzyQ("a" * 31, 2)
-    val banded = s2.fuzzyCandidateTerms(q).collect().map(_.term).toSet
-    assert(banded == Set(giant))
-    // outlier-length query path (>30 chars)
-    val q2 = FuzzyQ("a" * 32, 2)
-    val banded2 = s2.fuzzyCandidateTerms(q2).collect().map(_.term).toSet
-    assert(banded2 == Set(giant))
   }
 }

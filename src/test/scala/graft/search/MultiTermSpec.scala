@@ -59,26 +59,6 @@ class MultiTermSpec extends AnyFunSuite {
       BoolQ(must = Seq(TermQ("x"), TermRangeQ("row", "sort", true, true))))
   }
 
-  test("fuzzy/regexp block narrowing is dictionary-first (termStats semi-join)") {
-    // the expensive predicate must run on the term dictionary (one row per
-    // term), narrowing the blocks scan via a semi-join — never as a
-    // levenshtein/rlike filter over every block row
-    for (q <- Seq[Query](FuzzyQ("segment", 2), RegexpQ("(index|token).*"),
-        WildcardQ("s?gment"))) {
-      val plan = searcher.filteredBlocks(q).queryExecution.optimizedPlan.toString
-      assert(plan.contains("LeftSemi"), s"$q plan lacks the dictionary semi-join:\n$plan")
-      assert(!plan.toLowerCase.contains("levenshtein"),
-        s"$q plan still runs levenshtein on the scan:\n$plan")
-      assert(!plan.contains("RLIKE"), s"$q plan still runs a regex on the scan:\n$plan")
-    }
-    // exact/prefix/range queries keep the direct pushdown path (no join)
-    for (q <- Seq[Query](TermQ("segment"), PrefixQ("uniq_tok_"),
-        TermRangeQ("if", "import", true, true))) {
-      val plan = searcher.filteredBlocks(q).queryExecution.optimizedPlan.toString
-      assert(!plan.contains("Join"), s"$q plan gained a needless join:\n$plan")
-    }
-  }
-
   test("regexLiteralPrefix is a sound pushdown prefix") {
     assert(Query.regexLiteralPrefix("s(can|ort|low)") == "s")
     assert(Query.regexLiteralPrefix("index.*") == "index")
@@ -88,6 +68,12 @@ class MultiTermSpec extends AnyFunSuite {
     assert(Query.regexLiteralPrefix("(a|b)c") == "")
     assert(Query.regexLiteralPrefix("plain") == "plain")
     assert(Query.regexLiteralPrefix("\\d+") == "")
+    // a top-level alternation has no common prefix; a nested one keeps it
+    assert(Query.regexLiteralPrefix("merge.*|segment") == "")
+    assert(Query.regexLiteralPrefix("ab[|]c|d") == "")
+    assert(Query.regexLiteralPrefix("s(can|ort)|x") == "")
+    assert(Query.regexLiteralPrefix("ab[|]c") == "ab")
+    assert(RegexpQ("merge.*|segment").matches("segment"))
   }
 
   test("prefix expansion is uncapped (>1024 matching terms, no truncation)") {

@@ -244,7 +244,7 @@ class ResidentLayoutSpec extends AnyFunSuite {
     assert(s2.search(q, 10).toSeq == hits.toSeq)
     s1.withSimilarity(ClassicSim).search(q, 10)
     assert(layoutRdds -- before == built)
-    s1.close()
+    idx.close()
     assert((layoutRdds intersect built).isEmpty, "close() left the layout persisted")
     // still answers, laying the index out again
     assert(s2.search(q, 10).toSeq == hits.toSeq)
