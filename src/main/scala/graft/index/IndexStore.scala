@@ -404,7 +404,7 @@ object IndexStore {
     val blocks = unionOf[BlockRow]("postings")
     // term stats must be re-aggregated across segments (same term appears in
     // many); a single segment reads straight through (keeps parquet term
-    // filter pushdown on the plan-time df lookup)
+    // filter pushdown on dictionary lookups and expansions)
     val termStats =
       if (m.segments.size == 1)
         spark.read.parquet(s"$indexDir/${m.segments.head.name}/termstats").as[TermStatsRow]

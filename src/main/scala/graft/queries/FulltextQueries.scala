@@ -2012,8 +2012,11 @@ object FulltextQueries {
     // with GLOBALLY merged stats, so sharded ranks equal the single-index
     // ranks; the north rule's rank-identical contract across executors):
     // the index splits into two docId-parity shards, each shard scores
-    // 'stream' with statsFrom = the global index, and the k·P merge of the
-    // shard top-10s must equal the whole-index oracle top-10 exactly.
+    // 'stream', and the k·P merge of the shard top-10s must equal the
+    // whole-index oracle top-10 exactly. A split shard carries the global
+    // stats: like the fake deletes of Lucene's MultiPassIndexSplitter, its
+    // tombstones hide the other shard's docs but leave the shared blocks
+    // and field stats, so the stats its search task sums are the parent's.
     "ft_shard_global_stats" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, searcher) = DocsIndex.get(spark, sfDir)
@@ -2022,7 +2025,7 @@ object FulltextQueries {
       val shards = graft.index.IndexStore.split(index,
         Seq(ids.filter(_ % 2 == 0), ids.filter(_ % 2 == 1)))
       shards.map { sh =>
-        new graft.search.GraftSearcher(sh, graft.analysis.Analyzers.simple, statsFrom = index)
+        new graft.search.GraftSearcher(sh, graft.analysis.Analyzers.simple)
           .searchDoubleDS(q, 10).toDF()
       }.reduce(_ unionByName _)
         .join(DocsIndex.docIdMap(index), "docId")

@@ -49,6 +49,28 @@ final class DocRange(
   }
 }
 
+object DocRange {
+
+  /** The (docFreq, totalTermFreq) of each of `terms` over `ranges`: the
+    * `count` and `blockTtf` of its blocks whose `firstDocId` lies in their
+    * range's `[lo, hi)`, so a block straddling a range edge counts once.
+    * Over every range of an index this is the term's `termstats` row
+    * ([[graft.index.IndexBuilder.termStatsOf]]), tombstoned docs included,
+    * as Lucene's statistics count deleted docs until a merge. A term with
+    * no block has no entry. */
+  def termStats(ranges: Array[DocRange], terms: Set[String]): Map[String, (Long, Long)] =
+    terms.iterator.flatMap { t =>
+      var df = 0L
+      var ttf = 0L
+      for (r <- ranges; blk <- r.blocks.getOrElse(t, Array.empty[BlockRow])
+           if blk.firstDocId >= r.lo && blk.firstDocId < r.hi) {
+        df += blk.count
+        ttf += blk.blockTtf
+      }
+      if (df > 0) Some(t -> (df, ttf)) else None
+    }.toMap
+}
+
 /** The resident doc-range layout of one index: the posting blocks laid out
   * once by docId range, one [[DocRange]] record per range, persisted
   * `MEMORY_AND_DISK` — Solr's document-partitioned shards held open
@@ -69,19 +91,22 @@ final class DocRangeLayout private (val ranges: RDD[DocRange]) {
 
   /** The search task as an RDD, for the Dataset surfaces: runs `f` over the
     * ranges in ascending docId order, inside ONE task, handing every range
-    * the task's one [[TopKFloor]] ([[DocRangeLayout.inTask]]). Every run of
-    * the job — a retry, or a Dataset collected twice — starts from an empty
-    * floor. Collecting it pays Spark's per-job parse of `RDD`'s bytecode;
+    * `ctx` completed with the statistics of `terms` and the task's one
+    * [[TopKFloor]] ([[DocRangeLayout.inTask]]). Every run of the job — a
+    * retry, or a Dataset collected twice — starts from an empty floor.
+    * Collecting it pays Spark's per-job parse of `RDD`'s bytecode;
     * driver-side gathers use [[collect]]. */
-  def serial[T: ClassTag](f: (DocRange, TopKFloor) => Iterator[T]): RDD[T] =
-    inOrder.mapPartitions(it => DocRangeLayout.inTask(it, f))
+  def serial[T: ClassTag](terms: Set[String], ctx: SearchContext)(
+      f: (DocRange, SearchContext, TopKFloor) => Iterator[T]): RDD[T] =
+    inOrder.mapPartitions(it => DocRangeLayout.inTask(it, terms, ctx, f))
 
   /** The same task as [[serial]], run as one job whose results come back to
     * the driver: one stage, one task, the ranges' output in range order. */
-  def collect[T: ClassTag](f: (DocRange, TopKFloor) => Iterator[T]): Array[T] = {
+  def collect[T: ClassTag](terms: Set[String], ctx: SearchContext)(
+      f: (DocRange, SearchContext, TopKFloor) => Iterator[T]): Array[T] = {
     var out: Array[T] = Array.empty[T]
     ranges.sparkContext.runJob(inOrder,
-      (_: TaskContext, it: Iterator[DocRange]) => DocRangeLayout.inTask(it, f).toArray,
+      (_: TaskContext, it: Iterator[DocRange]) => DocRangeLayout.inTask(it, terms, ctx, f).toArray,
       Seq(0), (_: Int, rows: Array[T]) => out = rows)
     out
   }
@@ -91,13 +116,19 @@ final class DocRangeLayout private (val ranges: RDD[DocRange]) {
 
 object DocRangeLayout {
 
-  /** The body of the one search task: one [[TopKFloor]], made inside the
-    * task, handed to `f` for every range in turn, so each range starts from
-    * the k-th score the ranges before it left. */
-  private def inTask[T](ranges: Iterator[DocRange],
-      f: (DocRange, TopKFloor) => Iterator[T]): Iterator[T] = {
+  /** The body of the one search task. It holds every range first (resident
+    * references, all in this task) and sums the statistics of `terms` over
+    * them into `ctx` ([[DocRange.termStats]]) — Lucene's per-leaf
+    * `TermStates`, summed by `IndexSearcher.termStatistics`. Then it hands
+    * `f` that context and one [[TopKFloor]], made inside the task, for
+    * every range in turn, so each range starts from the k-th score the
+    * ranges before it left. */
+  private def inTask[T](ranges: Iterator[DocRange], terms: Set[String], ctx: SearchContext,
+      f: (DocRange, SearchContext, TopKFloor) => Iterator[T]): Iterator[T] = {
+    val held = ranges.toArray
+    val full = ctx.copy(termStats = DocRange.termStats(held, terms))
     val floor = new TopKFloor
-    ranges.flatMap(f(_, floor))
+    held.iterator.flatMap(f(_, full, floor))
   }
 
   /** Groups every range of the parent into one partition, in range order. */

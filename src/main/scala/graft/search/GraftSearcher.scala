@@ -7,35 +7,34 @@ import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 import graft.index._
 
-/** Serializable per-query context shipped to executors: collection stats +
-  * per-term doc freqs (tiny — collected once at plan time, the analog of
-  * `IndexSearcher.termStatistics/collectionStatistics`,
-  * reference: lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:901-914). */
+/** Serializable per-query context shipped to executors: collection stats,
+  * scoring settings and the query terms' statistics — the analog of
+  * `IndexSearcher.collectionStatistics/termStatistics` (reference:
+  * lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:901-914).
+  * `plan` makes it without term statistics; the search task fills them in
+  * from the blocks it holds ([[DocRangeLayout]]). */
 final case class SearchContext(
     k1: Float,
     b: Float,
     stats: CollectionStats,
-    docFreq: Map[String, Long],
+    /** (docFreq, totalTermFreq) of each exact query term the index holds,
+      * summed over the doc ranges ([[DocRange.termStats]]); language-model
+      * similarities need the ttf (LMSimilarity.computeProbability). */
+    termStats: Map[String, (Long, Long)] = Map.empty,
     /** When set, term/phrase/synonym iterators also carry a
       * [[Bm25.DoubleScorer]] and top-k runs on round4'd double scores — the
       * oracle-facing scored-search family (DuckDB recomputes every score). */
     doubleMode: Boolean = false,
     /** Optional block decode/skip accumulators (pruning evidence). */
     counters: ScorerCounters = null,
-    /** Per-term collection frequencies (totalTermFreq), collected alongside
-      * docFreq; language-model similarities need them
-      * (LMSimilarity.computeProbability). Empty for BM25/Classic queries
-      * planned before the stats collect carried ttf. */
-    ttf: Map[String, Long] = Map.empty,
     /** Scoring model override — `IndexSearcher.setSimilarity` analog. null
       * = Lucene's default, BM25(k1, b). */
     simOverride: Similarity = null) extends Serializable {
   /** The active [[Similarity]]. */
   lazy val sim: Similarity = if (simOverride != null) simOverride else Bm25Sim(k1, b)
-  /** ttf lookup with a safe floor (ttf >= df always holds in a real index). */
-  def ttfOf(t: String): Long = ttf.getOrElse(t, docFreq.getOrElse(t, 1L))
-  /** (docFreq, totalTermFreq) for multi-term scorer factories. */
-  def freqsOf(t: String): (Long, Long) = (docFreq(t), ttfOf(t))
+  def has(t: String): Boolean = termStats.contains(t)
+  def docFreq(t: String): Long = termStats(t)._1
+  def ttfOf(t: String): Long = termStats(t)._2
 }
 
 /** One doc-range's contribution to a counting search: its local top-k, the
@@ -160,20 +159,22 @@ object ScorerBuilder {
         double(ctx.sim.doubleScorer(boost.toDouble, df, ttf, ctx.stats)))
 
     private def multiWeights(boost: Float, ts: Seq[String]): (SimScorer, DoubleSimScorer) = {
-      val freqs = ts.map(ctx.freqsOf)
+      val freqs = ts.map(ctx.termStats)
       (ctx.sim.multiTermScorer(boost, freqs, ctx.stats),
         double(ctx.sim.multiTermDoubleScorer(boost.toDouble, freqs, ctx.stats)))
     }
 
     /** The range holds blocks of `t` and the index has its stats. */
     private def present(t: String): Boolean =
-      termBlocks.contains(t) && ctx.docFreq.contains(t)
+      termBlocks.contains(t) && ctx.has(t)
 
     /** `t`'s postings at weight 1: the composite or constant score owning
-      * the iterator prices its matches (multi-term expansions carry no
-      * collected stats and weigh as df 1). */
-    private def unweighted(t: String, blocks: Array[BlockRow]): TermIterator =
-      postings(blocks, ctx.sim.scorer(1f, ctx.docFreq.getOrElse(t, 1L), ctx.ttfOf(t), ctx.stats))
+      * the iterator prices its matches (multi-term expansions carry no term
+      * statistics and weigh as df 1). */
+    private def unweighted(t: String, blocks: Array[BlockRow]): TermIterator = {
+      val (df, ttf) = ctx.termStats.getOrElse(t, (1L, 1L))
+      postings(blocks, ctx.sim.scorer(1f, df, ttf, ctx.stats))
+    }
 
     private def unit(t: String): Option[TermIterator] =
       if (present(t)) Some(unweighted(t, termBlocks(t))) else None
@@ -287,7 +288,7 @@ object ScorerBuilder {
         if (slotIters.exists(_.isEmpty)) EmptyScorer
         else {
           val flat = slots.flatten
-          val (s, ds) = multiWeights(boost, flat.filter(ctx.docFreq.contains))
+          val (s, ds) = multiWeights(boost, flat.filter(ctx.has))
           new SpanOrNearScorer(slotIters.map(_.toArray).toArray, slop,
             inOrder || repeats(flat), s, ds)
         }
@@ -381,10 +382,12 @@ object GraftSearcher {
   * once into P aligned docId ranges ([[DocRangeLayout]], resident and
   * shared by every searcher over the index; blocks straddling a boundary
   * sit in both ranges and are clipped). A query is one map-only job over
-  * that layout: each range picks the query's blocks from its own term
-  * dictionary and runs the pruned top-k, and the driver merges the ≤ k·P
-  * hits by (score desc, docId asc) — Solr's scatter-gather merge
-  * (`QueryComponent.mergeIds`) over document-partitioned shards.
+  * that layout: its one task sums the query terms' statistics over the
+  * blocks of all its ranges, then each range picks the query's blocks from
+  * its own term dictionary and runs the pruned top-k, and the driver
+  * merges the ≤ k·P hits by (score desc, docId asc) — Solr's
+  * scatter-gather merge (`QueryComponent.mergeIds`) over
+  * document-partitioned shards.
   */
 final class GraftSearcher(
     val index: GraftIndex,
@@ -392,21 +395,12 @@ final class GraftSearcher(
     k1: Float = Bm25.DEFAULT_K1,
     b: Float = Bm25.DEFAULT_B,
     /** Scoring model (`IndexSearcher.setSimilarity` analog); null = BM25(k1, b). */
-    sim: Similarity = null,
-    /** Distributed-IDF stats source — the ExactStatsCache analog (reference:
-      * solr/core/src/java/org/apache/solr/search/stats/ExactStatsCache.java:
-      * 60-140 — per-shard scoring uses GLOBALLY merged docFreq/collection
-      * stats so ranks are identical to a single-index search). When set,
-      * `plan` reads termStats/fieldStats from THIS index while postings
-      * still come from the local shard `index`. */
-    statsFrom: GraftIndex = null) extends Serializable {
-
-  private def statsIdx: GraftIndex = if (statsFrom != null) statsFrom else index
+    sim: Similarity = null) extends Serializable {
 
   /** A searcher over the same index scoring with `s` — cheap (shares the
     * cached index tables; only the per-query SearchContext changes). */
   def withSimilarity(s: Similarity): GraftSearcher =
-    new GraftSearcher(index, analyzer, k1, b, s, statsFrom)
+    new GraftSearcher(index, analyzer, k1, b, s)
 
   @transient private val spark = index.spark
   import spark.implicits._
@@ -530,9 +524,9 @@ final class GraftSearcher(
     * lucene/queries/src/java/org/apache/lucene/queries/CommonTermsQuery.java:123-180
     * `buildQuery`): terms whose docFreq exceeds `maxTermFrequency * docCount`
     * are demoted to SHOULD (they refine the score but cannot gate the match);
-    * the rest are MUST. The df lookup is the same plan-time termStats seek
-    * every query does — one tiny parquet-pushdown scan. Terms absent from the
-    * dictionary stay MUST (they make the query match nothing, like Lucene). */
+    * the rest are MUST. The df lookup is one tiny parquet-pushdown scan of
+    * the term dictionary. Terms absent from the dictionary stay MUST (they
+    * make the query match nothing, like Lucene). */
   def commonTermsQuery(terms: Seq[String], maxTermFrequency: Double = 0.3): Query = {
     import spark.implicits._
     val rows = index.termStats.filter($"term".isin(terms: _*)).collect()
@@ -544,45 +538,16 @@ final class GraftSearcher(
       should = high.map(TermQ.apply)))
   }
 
-  /** Per-searcher term-stats cache — the in-RAM term-dictionary structure a
-    * Lucene searcher holds open (and Solr's statsCache): the index a
-    * searcher wraps is immutable (updates open a new GraftIndex + searcher),
-    * so (docFreq, ttf) per term never changes and repeat queries skip the
-    * dictionary-lookup job entirely. Bounded LRU; ttf == -1 marks a term
-    * proven absent from the dictionary (negative lookups are cacheable too). */
-  @transient private lazy val statsCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (Long, Long)](1024, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (Long, Long)]): Boolean =
-          size() > 100000
-      })
-
-  /** Rewrite + collect per-term df stats (the `termStatistics` lookup — a
-    * few rows via parquet term pushdown). Multi-term queries are NOT
-    * expanded here: their dictionary predicate executes distributed inside
-    * each doc range, over that range's own terms (no driver-side term
-    * collection, no expansion cap). */
-  def plan(q0: Query): (Query, SearchContext) = {
-    val q = Query.rewrite(q0)
-    val terms = Query.terms(q).toSeq
-    val missing = terms.filterNot(statsCache.containsKey)
-    if (missing.nonEmpty) {
-      val fetched = statsIdx.termStats.filter($"term".isin(missing: _*)).collect()
-      fetched.foreach(t => statsCache.put(t.term, (t.docFreq, t.totalTermFreq)))
-      val found = fetched.map(_.term).toSet
-      missing.filterNot(found).foreach(t => statsCache.put(t, (0L, -1L)))
-    }
-    val present = terms.flatMap { t =>
-      Option(statsCache.get(t)).collect { case (df, ttf) if ttf >= 0 => (t, df, ttf) }
-    }
-    val dfMap: Map[String, Long] = present.map(p => p._1 -> p._2).toMap
-    val ttfMap: Map[String, Long] = present.map(p => p._1 -> p._3).toMap
-    val statsFs = statsIdx.fieldStats
-    val stats = CollectionStats(statsFs.docCount, statsFs.sumTotalTermFreq)
-    (q, SearchContext(k1, b, stats, dfMap, counters = counters,
-      ttf = ttfMap, simOverride = sim))
-  }
+  /** The rewritten query and its [[SearchContext]] without term
+    * statistics: the collection statistics and scoring settings. It runs
+    * no Spark job. The search task sums the query terms' statistics over
+    * the blocks it holds ([[DocRangeLayout]]), and multi-term clauses
+    * expand inside each doc range over that range's own terms (no
+    * driver-side term collection, no expansion cap). */
+  def plan(q0: Query): (Query, SearchContext) =
+    (Query.rewrite(q0), SearchContext(k1, b,
+      CollectionStats(fieldStats.docCount, fieldStats.sumTotalTermFreq),
+      counters = counters, simOverride = sim))
 
   def parse(s: String): Query = parser.parse(s)
 
@@ -652,38 +617,42 @@ final class GraftSearcher(
     * query rewrote to MatchNone. */
   private final class RangeJob[T: ClassTag](
       layout: DocRangeLayout,
-      f: (DocRange, TopKFloor) => Iterator[T]) {
-    def rdd: RDD[T] = if (layout == null) spark.sparkContext.emptyRDD[T] else layout.serial(f)
-    def gather(): Array[T] = if (layout == null) Array.empty[T] else layout.collect(f)
+      terms: Set[String],
+      ctx: SearchContext,
+      f: (DocRange, SearchContext, TopKFloor) => Iterator[T]) {
+    def rdd: RDD[T] =
+      if (layout == null) spark.sparkContext.emptyRDD[T] else layout.serial(terms, ctx)(f)
+    def gather(): Array[T] =
+      if (layout == null) Array.empty[T] else layout.collect(terms, ctx)(f)
   }
 
-  private def noRanges[T: ClassTag]: RangeJob[T] = new RangeJob[T](null, null)
-
-  /** The search task that runs `f` once per doc range of the index's
-    * resident layout — the one map-only job behind every search surface
-    * (Float top-k, double top-k, match set, counting and index-order
-    * collection), as a [[RangeJob]] the caller runs as an RDD or gathers to
-    * the driver. Each range hands `f`
-    * the query's blocks from its own dictionary (exact terms by lookup,
-    * multi-term clauses by `matches`), its `[lo, hi)`, its tombstones and
-    * the task's [[TopKFloor]]. Every range runs, including ranges holding
-    * none of the query's blocks (a MatchAll-anchored query such as NOT
-    * matches there; any other query builds an empty scorer). Ranges run in
-    * ascending docId order inside one task, so the floor each range starts
-    * from is the same on every run of the job. P = `numPartitions`, or
-    * `defaultParallelism` when 0. */
+  /** The search task that plans `q0` and runs `f` once per doc range of the
+    * index's resident layout — the one map-only job behind every search
+    * surface (Float top-k, double top-k, match set, counting and
+    * index-order collection), as a [[RangeJob]] the caller runs as an RDD
+    * or gathers to the driver. Each range hands `f` the rewritten query,
+    * its blocks from the range's own dictionary (exact terms by lookup,
+    * multi-term clauses by `matches`), the [[SearchContext]] the task
+    * completed with the exact terms' statistics over all its ranges, the
+    * range itself (`[lo, hi)` and tombstones) and the task's
+    * [[TopKFloor]]. Every range runs, including ranges holding none of the
+    * query's blocks (a MatchAll-anchored query such as NOT matches there;
+    * any other query builds an empty scorer). Ranges run in ascending docId
+    * order inside one task, so the floor each range starts from is the same
+    * on every run of the job. P = `numPartitions`, or `defaultParallelism`
+    * when 0. */
   private def perRange[T: ClassTag](
-      q: Query,
-      numPartitions: Int)(
-      f: (Query, Map[String, Array[BlockRow]], Long, Long, LiveDocs, TopKFloor) => Iterator[T]): RangeJob[T] = {
-    if (fieldStats.maxDocId < 0) return noRanges[T]
+      q0: Query,
+      numPartitions: Int,
+      doubleMode: Boolean = false)(
+      f: (Query, Map[String, Array[BlockRow]], SearchContext, DocRange, TopKFloor) => Iterator[T]): RangeJob[T] = {
+    val (q, ctx) = plan(q0)
+    if (q == MatchNoneQ || fieldStats.maxDocId < 0) return new RangeJob[T](null, null, null, null)
     val p = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
     val exact = Query.terms(q)
     val mts = Query.multiTerms(q)
-    val qB = q
-    val fB = f
-    new RangeJob[T](index.docRangeLayout(p), (r, floor) =>
-      fB(qB, r.select(exact, mts), r.lo, r.hi, r.live, floor))
+    new RangeJob[T](index.docRangeLayout(p), exact, ctx.copy(doubleMode = doubleMode),
+      (r, c, floor) => f(q, r.select(exact, mts), c, r, floor))
   }
 
   /** Top-k with totalHits + relation (`TopScoreDocCollector` /
@@ -702,14 +671,9 @@ final class GraftSearcher(
       k: Int,
       totalHitsThreshold: Long = 1000L,
       numPartitions: Int = 0): (Array[ScoreDoc], Long, String) = {
-    val (q, ctx) = plan(q0)
-    if (q == MatchNoneQ) return (Array.empty, 0L, "EQ")
-    val ctxB = ctx
-    val kB = k
-    val th = totalHitsThreshold
-    val ranges = perRange[RangeHits](q, numPartitions) { (qq, termBlocks, lo, hi, live, _) =>
-      val tc = new TotalCounter(th)
-      val hits = ScorerBuilder.topK(qq, termBlocks, ctxB, lo, hi, kB, null, live, tc)
+    val ranges = perRange[RangeHits](q0, numPartitions) { (q, blocks, ctx, r, _) =>
+      val tc = new TotalCounter(totalHitsThreshold)
+      val hits = ScorerBuilder.topK(q, blocks, ctx, r.lo, r.hi, k, null, r.live, tc)
       Iterator.single(RangeHits(hits, tc.seen, tc.countedEnough))
     }.gather()
     val total = ranges.map(_.seen).sum
@@ -727,16 +691,10 @@ final class GraftSearcher(
   def searchDS(q0: Query, k: Int, after: ScoreDoc = null, numPartitions: Int = 0): Dataset[ScoreDoc] =
     spark.createDataset(searchJob(q0, k, after, numPartitions).rdd)
 
-  private def searchJob(q0: Query, k: Int, after: ScoreDoc, numPartitions: Int): RangeJob[ScoreDoc] = {
-    val (q, ctx) = plan(q0)
-    if (q == MatchNoneQ) return noRanges[ScoreDoc]
-    val ctxB = ctx
-    val afterB = after
-    val kB = k
-    perRange[ScoreDoc](q, numPartitions) { (qq, termBlocks, lo, hi, live, floor) =>
-      ScorerBuilder.topK(qq, termBlocks, ctxB, lo, hi, kB, afterB, live, floor = floor).iterator
+  private def searchJob(q0: Query, k: Int, after: ScoreDoc, numPartitions: Int): RangeJob[ScoreDoc] =
+    perRange[ScoreDoc](q0, numPartitions) { (q, blocks, ctx, r, floor) =>
+      ScorerBuilder.topK(q, blocks, ctx, r.lo, r.hi, k, after, r.live, floor = floor).iterator
     }
-  }
 
   /** Double-precision per-partition top-k (oracle-facing scored family):
     * same index, same iterators, textbook double BM25 on the quantized norm
@@ -746,16 +704,10 @@ final class GraftSearcher(
     spark.createDataset(searchDoubleJob(q0, k, after, numPartitions).rdd)
 
   private def searchDoubleJob(q0: Query, k: Int, after: ScoreDocD,
-      numPartitions: Int): RangeJob[ScoreDocD] = {
-    val (q, ctx0) = plan(q0)
-    if (q == MatchNoneQ) return noRanges[ScoreDocD]
-    val ctxB = ctx0.copy(doubleMode = true)
-    val afterB = after
-    val kB = k
-    perRange[ScoreDocD](q, numPartitions) { (qq, termBlocks, lo, hi, live, _) =>
-      ScorerBuilder.topKD(qq, termBlocks, ctxB, lo, hi, kB, afterB, live).iterator
+      numPartitions: Int): RangeJob[ScoreDocD] =
+    perRange[ScoreDocD](q0, numPartitions, doubleMode = true) { (q, blocks, ctx, r, _) =>
+      ScorerBuilder.topKD(q, blocks, ctx, r.lo, r.hi, k, after, r.live).iterator
     }
-  }
 
   /** Global double-precision top-k, best-first. */
   def searchDouble(q0: Query, k: Int, after: ScoreDocD = null): Array[ScoreDocD] =
@@ -774,23 +726,19 @@ final class GraftSearcher(
   def searchByIndexOrder(q0: Query, k: Int, numPartitions: Int = 0): Dataset[Long] = {
     require(index.indexSort.nonEmpty,
       "searchByIndexOrder needs an index built with IndexConfig.sortFields")
-    val (q, ctx) = plan(q0)
-    if (q == MatchNoneQ) return spark.emptyDataset[Long]
-    val ctxB = ctx
-    val kB = k
     val bases = index.sortRunBases.toArray.sorted
-    spark.createDataset(perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live, _) =>
+    spark.createDataset(perRange[Long](q0, numPartitions) { (q, blocks, ctx, r, _) =>
       // split [lo, hi) at sorted-run boundaries: docId order equals the index
       // sort only WITHIN a run (appends/merges concatenate runs unsorted)
-      val cuts = (lo +: bases.filter(b => b > lo && b < hi).toSeq :+ hi).distinct.sorted
+      val cuts = (r.lo +: bases.filter(b => b > r.lo && b < r.hi).toSeq :+ r.hi).distinct.sorted
       cuts.sliding(2).flatMap {
         case Seq(l, h) =>
-          val root = ScorerBuilder.build(qq, 1f, termBlocks, ctxB, l, h, live)
+          val root = ScorerBuilder.build(q, 1f, blocks, ctx, l, h, r.live)
           if (root eq EmptyScorer) Iterator.empty[Long]
           else {
-            val out = new scala.collection.mutable.ArrayBuffer[Long](kB)
+            val out = new scala.collection.mutable.ArrayBuffer[Long](k)
             var d = root.nextDoc()
-            while (d != DocScorer.NO_MORE && out.size < kB) { out += d; d = root.nextDoc() }
+            while (d != DocScorer.NO_MORE && out.size < k) { out += d; d = root.nextDoc() }
             out.iterator // stopped WITHOUT exhausting the run — the ET
           }
         case _ => Iterator.empty[Long]
@@ -801,20 +749,16 @@ final class GraftSearcher(
   /** All matching docIds, unranked — the boolean match-set surface
     * (ConstantScore bulk collection). Same distributed shape as [[searchDS]]
     * but each doc-range partition emits every match instead of a top-k heap. */
-  def matchesDS(q0: Query, numPartitions: Int = 0): Dataset[Long] = {
-    val (q, ctx) = plan(q0)
-    if (q == MatchNoneQ) return spark.emptyDataset[Long]
-    val ctxB = ctx
-    spark.createDataset(perRange[Long](q, numPartitions) { (qq, termBlocks, lo, hi, live, _) =>
-      val root = ScorerBuilder.build(qq, 1f, termBlocks, ctxB, lo, hi, live)
+  def matchesDS(q0: Query, numPartitions: Int = 0): Dataset[Long] =
+    spark.createDataset(perRange[Long](q0, numPartitions) { (q, blocks, ctx, r, _) =>
+      val root = ScorerBuilder.build(q, 1f, blocks, ctx, r.lo, r.hi, r.live)
       if (root eq EmptyScorer) Iterator.empty[Long]
       else new Iterator[Long] {
         private var d = root.nextDoc()
         override def hasNext: Boolean = d != DocScorer.NO_MORE
-        override def next(): Long = { val r = d; d = root.nextDoc(); r }
+        override def next(): Long = { val out = d; d = root.nextDoc(); out }
       }
     }.rdd)
-  }
 
   /** Every match with its double-precision score, round4'd like
     * [[searchDoubleDS]] — the value surface behind rescoring and
@@ -826,33 +770,30 @@ final class GraftSearcher(
     * leapfrogs the scorer across its slice of it, so the second query's full
     * match set is never materialized. */
   def scoreAllDoubleDS(q0: Query, docFilter: Array[Long] = null): Dataset[ScoreDocD] = {
-    val (q, ctx0) = plan(q0)
-    if (q == MatchNoneQ) return spark.emptyDataset[ScoreDocD]
-    val ctxB = ctx0.copy(doubleMode = true)
     val bc =
       if (docFilter == null) null
       else spark.sparkContext.broadcast(docFilter.sorted)
-    spark.createDataset(perRange[ScoreDocD](q, 0) { (qq, termBlocks, lo, hi, live, _) =>
-      val root = ScorerBuilder.build(qq, 1f, termBlocks, ctxB, lo, hi, live)
+    spark.createDataset(perRange[ScoreDocD](q0, 0, doubleMode = true) { (q, blocks, ctx, r, _) =>
+      val root = ScorerBuilder.build(q, 1f, blocks, ctx, r.lo, r.hi, r.live)
       if (root eq EmptyScorer) Iterator.empty[ScoreDocD]
       else if (bc == null) new Iterator[ScoreDocD] {
         private var d = root.nextDoc()
         override def hasNext: Boolean = d != DocScorer.NO_MORE
         override def next(): ScoreDocD = {
-          val r = ScoreDocD(d, TopK.round4(root.scoreD()))
+          val out = ScoreDocD(d, TopK.round4(root.scoreD()))
           d = root.nextDoc()
-          r
+          out
         }
       } else {
         // leapfrog: advance the scorer to each filter doc in this range
         val ids = bc.value
-        var from = java.util.Arrays.binarySearch(ids, lo)
+        var from = java.util.Arrays.binarySearch(ids, r.lo)
         if (from < 0) from = -from - 1
         new Iterator[ScoreDocD] {
           private var i = from
           private var nextHit: ScoreDocD = fetch()
           private def fetch(): ScoreDocD = {
-            while (i < ids.length && ids(i) < hi) {
+            while (i < ids.length && ids(i) < r.hi) {
               val target = ids(i)
               i += 1
               val d = if (root.docId >= target) root.docId else root.advance(target)
@@ -861,32 +802,34 @@ final class GraftSearcher(
             null
           }
           override def hasNext: Boolean = nextHit != null
-          override def next(): ScoreDocD = { val r = nextHit; nextHit = fetch(); r }
+          override def next(): ScoreDocD = { val out = nextHit; nextHit = fetch(); out }
         }
       }
     }.rdd)
   }
 
   /** Driver-side exhaustive oracle: same scorer tree, zero pruning, one
-    * partition over the whole doc space — the `CheckHits` / TestWANDScorer
+    * doc range over the whole doc space — the `CheckHits` / TestWANDScorer
     * differential baseline (reference:
     * lucene/core/src/test/org/apache/lucene/search/TestWANDScorer.java:209).
     * It reads the stored block table, not the resident layout: the blocks
     * of the query's exact terms and of its multi-term expansions
-    * ([[dictTerms]]). */
+    * ([[dictTerms]]), as one [[DocRange]] whose [[DocRange.termStats]] are
+    * the exact terms' statistics. */
   def bruteForce(q0: Query, k: Int, after: ScoreDoc = null): Array[ScoreDoc] = {
     val (q, ctx) = plan(q0)
     if (q == MatchNoneQ) return Array.empty
-    val maxDoc = fieldStats.maxDocId + 1
-    val terms = Query.terms(q) ++
-      Query.multiTerms(q).flatMap(mt => dictTerms(mt).collect().map(_.term))
-    val termBlocks: Map[String, Array[BlockRow]] =
-      index.blocks.filter($"term".isin(terms.toSeq: _*)).collect()
-        .groupBy(_.term).map { case (t, arr) => t -> arr.sortBy(_.firstDocId) }
+    val exact = Query.terms(q)
+    val terms = exact ++ Query.multiTerms(q).flatMap(mt => dictTerms(mt).collect().map(_.term))
     val live =
       if (!index.hasDeletes) null
       else new LiveDocs(index.deletes.collect().sorted)
-    val root = ScorerBuilder.build(q, 1f, termBlocks, ctx, 0L, maxDoc, live)
+    val all = new DocRange(0L, fieldStats.maxDocId + 1,
+      index.blocks.filter($"term".isin(terms.toSeq: _*)).collect()
+        .groupBy(_.term).map { case (t, arr) => t -> arr.sortBy(_.firstDocId) },
+      live)
+    val root = ScorerBuilder.build(q, 1f, all.blocks,
+      ctx.copy(termStats = DocRange.termStats(Array(all), exact)), all.lo, all.hi, live)
     if (root eq EmptyScorer) Array.empty
     else TopK.iterate(root, k, after)
   }

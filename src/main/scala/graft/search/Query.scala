@@ -696,7 +696,9 @@ final class QueryParser(analyzer: Analyzer) extends Serializable {
         throw new IllegalArgumentException(s"unexpected token $other")
     }
     peek match {
-      case Some(Caret(b)) => pop(); BoostQ(base, b)
+      // a boosted negation excludes the same docs as the plain one: the
+      // marker stays unwrapped, so it still floats up as a mustNot clause
+      case Some(Caret(b)) => pop(); if (base.isInstanceOf[NegMarker]) base else BoostQ(base, b)
       case _ => base
     }
   }

@@ -97,10 +97,12 @@ class BlockMaxSpec extends AnyFunSuite {
     val (_, ctx) = searcher.plan(TermQ(t))
     val blocks = index.blocks.filter($"term" === t).as[BlockRow]
       .collect().sortBy(_.firstDocId)
+    // docFreq as termstats derives it: the sum of the term's block counts
+    val df = blocks.map(_.count.toLong).sum
     val maxDoc = index.fieldStats.maxDocId + 1
     def run(floor: TopKFloor): Array[ScoreDoc] = {
       val it = new TermIterator(blocks,
-        Bm25.scorer(1f, Bm25.DEFAULT_K1, Bm25.DEFAULT_B, ctx.docFreq(t), ctx.stats),
+        Bm25.scorer(1f, Bm25.DEFAULT_K1, Bm25.DEFAULT_B, df, ctx.stats),
         0L, maxDoc)
       TopK.singleTerm(it, 10, null, null, floor)
     }

@@ -25,7 +25,7 @@ class PlanSpec extends AnyFunSuite {
   private def expansionPlan(mt: MultiTermQ): String = dictScanPlan(Query.scanPrefilter(mt))
 
   test("exact term lookup pushes an In/EqualTo filter to the parquet scan") {
-    // the per-query term-statistics lookup of GraftSearcher.plan
+    // the exact-term statistics lookup of GraftSearcher.commonTermsQuery
     val plan = dictScanPlan(org.apache.spark.sql.functions.col("term").isin("indexwriter"))
     assert(plan.contains("PushedFilters"), plan.take(2000))
     assert(plan.contains("In(term") || plan.contains("EqualTo(term"),

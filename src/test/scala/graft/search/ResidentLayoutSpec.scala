@@ -181,13 +181,11 @@ class ResidentLayoutSpec extends AnyFunSuite {
     seen.toArray(Array.empty[String]).toSeq
   }
 
-  test("warm driver-side searches hand Spark's cleaner only closures declared in graft") {
-    val s = new GraftSearcher(index).withSimilarity(new StackProbeSim)
-    val q = s.parse("mergepolicy OR buffer")
-    def all(): Unit = { s.search(q, 10); s.searchWithTotal(q, 10); s.searchDouble(q, 10) }
-    all() // builds the layout and fills the stats cache
+  /** Checks that the closures Spark's cleaner is handed while `searches`
+    * runs were all declared in graft. */
+  private def cleansOnlyGraftClosures(searches: => Unit): Unit = {
     StackProbeSim.ran.clear()
-    val cleaned = cleanedClosures(all())
+    val cleaned = cleanedClosures(searches)
     val ran = StackProbeSim.ran.toArray(Array.empty[String]).toSet
     assert(cleaned.size >= 3, s"the probe saw fewer closures than jobs: $cleaned")
     // a lambda's class: the class whose frame of that method ran in the task
@@ -197,6 +195,19 @@ class ResidentLayoutSpec extends AnyFunSuite {
     }
     assert(declaredBy.forall { case (_, cls) => cls.nonEmpty && cls.forall(_.startsWith("graft.")) },
       s"closures declared outside graft: $declaredBy")
+  }
+
+  test("warm driver-side searches hand Spark's cleaner only closures declared in graft") {
+    val idx = IndexStore.open(spark, dir)
+    def all(s: GraftSearcher): Unit = {
+      val q = s.parse("mergepolicy OR buffer")
+      s.search(q, 10); s.searchWithTotal(q, 10); s.searchDouble(q, 10)
+    }
+    val s = new GraftSearcher(idx).withSimilarity(new StackProbeSim)
+    all(s) // builds the layout
+    cleansOnlyGraftClosures(all(s))
+    // a cold searcher over the laid-out index: its first searches too
+    cleansOnlyGraftClosures(all(new GraftSearcher(idx).withSimilarity(new StackProbeSim)))
   }
 
   test("a zero-doc index answers every driver-side search with no hits") {
@@ -220,15 +231,27 @@ class ResidentLayoutSpec extends AnyFunSuite {
     val idx = IndexStore.open(spark, dir)
     val s = new GraftSearcher(idx)
     val q = s.parse("if OR segment")
-    s.search(q, 10) // builds the layout and fills the stats cache
+    s.search(q, 10) // builds the layout
     val (jobs, stages, shuffled) = jobShape(s.search(q, 10))
     assert((jobs, stages, shuffled) == (1, 1, 0L))
     assert(jobShape(s.searchWithTotal(q, 10)) == (1, 1, 0L))
     assert(jobShape(s.searchDouble(q, 10)) == (1, 1, 0L))
-    val not = s.parse("NOT zebra")
-    s.plan(not) // stats cache
-    val (nJobs, nStages, nShuffled) = jobShape(s.matchesDS(not).collect())
+    val (nJobs, nStages, nShuffled) = jobShape(s.matchesDS(s.parse("NOT zebra")).collect())
     assert((nJobs, nStages, nShuffled) == (1, 1, 0L))
+  }
+
+  test("a cold searcher's first searches are one job each, and planning runs none") {
+    // the layout is built by another searcher; the index has two segments
+    // and tombstones
+    val idx = IndexStore.open(spark, dir)
+    new GraftSearcher(idx).search(TermQ("if"), 10)
+    val s = new GraftSearcher(idx)
+    val q = s.parse("mergepolicy OR zebra AND \"if return\"")
+    assert(jobShape(s.plan(q)) == (0, 0, 0L))
+    assert(jobShape(s.search(q, 10)) == (1, 1, 0L))
+    assert(jobShape(new GraftSearcher(idx).searchWithTotal(q, 10)) == (1, 1, 0L))
+    assert(jobShape(new GraftSearcher(idx).searchDouble(q, 10)) == (1, 1, 0L))
+    assert(s.search(q, 10).toSeq == s.bruteForce(q, 10).toSeq)
   }
 
   test("searchers over one index share its layout; close releases it") {

@@ -218,6 +218,26 @@ class SearchSpec extends AnyFunSuite {
     assert(notIf == (0L until 500L).toSet.diff(withIf))
   }
 
+  test("a boosted negation excludes like the plain one and leaves no parser marker") {
+    val p = searcher.parser
+    // the parser's private NOT marker must never reach the AST
+    def nodeClasses(x: Any): Iterator[String] = x match {
+      case s: Iterable[_] => s.iterator.flatMap(nodeClasses)
+      case n: Product => Iterator.single(n.getClass.getSimpleName) ++ n.productIterator.flatMap(nodeClasses)
+      case _ => Iterator.empty
+    }
+    assert(p.parse("(NOT mergepolicy)^2") == p.parse("NOT mergepolicy"))
+    assert(p.parse("return AND (NOT mergepolicy)^2") == p.parse("return AND NOT mergepolicy"))
+    for (s <- Seq("(NOT mergepolicy)^2", "return AND (NOT mergepolicy)^2",
+        "return OR (NOT mergepolicy)^2")) {
+      val q = p.parse(s)
+      assert(!nodeClasses(q).contains("NegMarker"), s"$s parsed to $q")
+      val top = searcher.bruteForce(q, 1000).toSeq
+      assert(top.nonEmpty, s)
+      assert(searcher.search(q, 1000, null).toSeq == top, s)
+    }
+  }
+
   test("empty/missing terms behave") {
     assert(searcher.search("totallyabsenttoken", 10).isEmpty)
     assert(searcher.search("totallyabsenttoken AND if", 10).isEmpty)
