@@ -12,7 +12,6 @@ final case class Impact(freq: Int, norm: Int)
 final case class DecodedBlock(
     docIds: Array[Long],
     freqs: Array[Int],
-    norms: Array[Int],
     positions: Array[Array[Int]],
     payloads: Array[Array[Int]])
 
@@ -24,16 +23,18 @@ final case class EncodedBlock(
     ttf: Long,
     docsEnc: Array[Byte],
     freqsEnc: Array[Byte],
-    normsEnc: Array[Byte],
     posEnc: Array[Byte],
     impacts: Array[Impact])
 
 /** Block codec for posting lists: 128-doc blocks (Lucene's BLOCK_SIZE,
   * reference: lucene/core/src/java/org/apache/lucene/codecs/lucene84/ForUtil.java:33),
-  * FOR-delta docIds, PFOR freqs, VInt-delta positions, norms inlined
-  * (1 byte/doc — Lucene stores norms in a separate per-field file; inlining
-  * them into the block row keeps query-time scoring join-free in Spark),
-  * plus the competitive-impacts Pareto frontier per block.
+  * FOR-delta docIds, PFOR freqs, VInt-delta positions, plus the
+  * competitive-impacts Pareto frontier per block. Norms are not in the
+  * block: like Lucene's separate per-field norms file (`Lucene80NormsFormat`)
+  * they are stored once per document, in `docmeta.norm`. The encoder takes
+  * each posting's norm only to compute the block's impact frontier; the
+  * scorers read norms by docId from the resident doc-range layout
+  * ([[graft.search.DocRange.norm]]), which loads them with the blocks.
   */
 object PostingsCodec {
   val BLOCK_SIZE = 128
@@ -62,7 +63,8 @@ object PostingsCodec {
   private val POS_WITH_PAYLOADS: Byte = 1
 
   /** Encode one term's postings (sorted by docId, strictly increasing) into
-    * a stream of blocks. `postings` items: (docId, tf, positions, normByte 0..255). */
+    * a stream of blocks. `postings` items: (docId, tf, positions, normByte
+    * 0..255); the norm feeds only the impact frontier. */
   def encodeTerm(postings: Iterator[(Long, Int, Array[Int], Int)]): Iterator[EncodedBlock] =
     encodeTermPayloads(postings.map { case (d, f, p, nm) => (d, f, p, null, nm) })
 
@@ -103,11 +105,8 @@ object PostingsCodec {
         ForDeltaUtil.encode(docBuf, n, first - 1, dw)
         val fw = new ByteWriter(64)
         PForUtil.encode(freqBuf, n, fw)
-        val nw = new Array[Byte](n)
-        var i = 0
-        while (i < n) { nw(i) = normBuf(i).toByte; i += 1 }
         var anyPay = false
-        i = 0
+        var i = 0
         while (i < n && !anyPay) {
           val pay = payBuf(i)
           if (pay != null) {
@@ -142,7 +141,7 @@ object PostingsCodec {
         var ttf = 0L
         i = 0
         while (i < n) { ttf += freqBuf(i); i += 1 }
-        EncodedBlock(n, first, last, ttf, dw.result(), fw.result(), nw, pw.result(), competitiveFrontier(pairs))
+        EncodedBlock(n, first, last, ttf, dw.result(), fw.result(), pw.result(), competitiveFrontier(pairs))
       }
     }
 
@@ -155,13 +154,6 @@ object PostingsCodec {
   def decodeFreqs(b: EncodedBlock): Array[Int] = {
     val out = new Array[Int](b.count)
     PForUtil.decode(new ByteReader(b.freqsEnc), b.count, out)
-    out
-  }
-
-  def decodeNorms(b: EncodedBlock): Array[Int] = {
-    val out = new Array[Int](b.count)
-    var i = 0
-    while (i < b.count) { out(i) = b.normsEnc(i) & 0xFF; i += 1 }
     out
   }
 
@@ -219,7 +211,6 @@ object PostingsCodec {
 
   def decodeAll(b: EncodedBlock): DecodedBlock = {
     val freqs = decodeFreqs(b)
-    DecodedBlock(decodeDocs(b), freqs, decodeNorms(b), decodePositions(b, freqs),
-      decodePayloads(b, freqs))
+    DecodedBlock(decodeDocs(b), freqs, decodePositions(b, freqs), decodePayloads(b, freqs))
   }
 }

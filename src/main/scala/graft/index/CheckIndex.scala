@@ -1,6 +1,9 @@
 package graft.index
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{collect_list, struct}
+import org.apache.spark.storage.StorageLevel
+import graft.codec.{Impact, PostingsCodec}
 
 /** Integrity report for a committed index ([[CheckIndex.check]]). */
 final case class CheckReport(
@@ -24,9 +27,12 @@ final case class CheckReport(
   *  3. per-term posting-block invariants: count > 0, firstDocId <= lastDocId,
   *     blocks docId-disjoint within a term (the iterators' seek invariant)
   *  4. full block decode: encoded headers match decoded payloads
-  *     (count, first/last docId, blockTtf vs freq sum, impact frontier
-  *     contains the block's true (freq, norm) maxima)
-  *  5. termStats table equals a re-aggregation over blocks
+  *     (count, first/last docId, blockTtf vs freq sum)
+  *  5. postings vs norms — what the scorers rely on, since blocks carry no
+  *     norms: every decoded posting's docId has a docmeta row, and each
+  *     block's impact frontier equals the one recomputed from its decoded
+  *     freqs and those docs' docmeta norms
+  *  6. termStats table equals a re-aggregation over blocks
   */
 object CheckIndex {
 
@@ -56,7 +62,7 @@ object CheckIndex {
       if (b.count <= 0) errs += s"${b.term}#${b.blockId}: count ${b.count}"
       if (b.firstDocId > b.lastDocId)
         errs += s"${b.term}#${b.blockId}: firstDocId > lastDocId"
-      val d = graft.codec.PostingsCodec.decodeAll(b.toEncodedBlock)
+      val d = PostingsCodec.decodeAll(b.toEncodedBlock)
       if (d.docIds.length != b.count)
         errs += s"${b.term}#${b.blockId}: decoded ${d.docIds.length} docs, header ${b.count}"
       else {
@@ -64,9 +70,6 @@ object CheckIndex {
           errs += s"${b.term}#${b.blockId}: decoded docId range != header"
         if (d.freqs.map(_.toLong).sum != b.blockTtf)
           errs += s"${b.term}#${b.blockId}: freq sum != blockTtf"
-        // the impact frontier must dominate the block's true maxima
-        if (b.impactFreqs.nonEmpty && d.freqs.max > b.impactFreqs.max)
-          errs += s"${b.term}#${b.blockId}: impact frontier misses max freq"
       }
       errs.iterator
     }.take(20)
@@ -83,7 +86,38 @@ object CheckIndex {
       }.take(5)
     overlapping.foreach(t => problems += s"term '$t': overlapping block docId ranges")
 
-    // 5. termStats vs re-aggregation
+    // 5. postings vs docmeta norms: (block, docId, freq) rows outer-joined
+    // with each doc's norm, then each block's frontier recomputed
+    val postings = idx.blocks.flatMap { b =>
+      val eb = b.toEncodedBlock
+      val docIds = PostingsCodec.decodeDocs(eb)
+      val freqs = PostingsCodec.decodeFreqs(eb)
+      docIds.indices.iterator.map(i => (b.term, b.firstDocId, docIds(i), freqs(i)))
+    }.toDF("term", "firstDocId", "docId", "freq")
+      .join(idx.docs.select($"docId", $"norm"), Seq("docId"), "left_outer")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val orphans = postings.filter($"norm".isNull)
+      val nOrphans = orphans.count()
+      if (nOrphans > 0) problems += s"$nOrphans postings have no docmeta row, e.g. " +
+        orphans.select($"term", $"docId").as[(String, Long)].take(3)
+          .map { case (t, d) => s"'$t' doc $d" }.mkString(", ")
+      problems ++= postings.filter($"norm".isNotNull)
+        .groupBy($"term", $"firstDocId")
+        .agg(collect_list(struct($"freq".as("_1"), $"norm".as("_2"))).as("pairs"))
+        .join(idx.blocks.select($"term", $"firstDocId", $"blockId", $"impactFreqs", $"impactNorms"),
+          Seq("term", "firstDocId"))
+        .as[(String, Long, Seq[(Int, Int)], Int, Seq[Int], Seq[Int])]
+        .flatMap { case (t, _, pairs, bid, fs, ns) =>
+          val want = PostingsCodec.competitiveFrontier(pairs)
+          val got = fs.zip(ns).map { case (f, n) => Impact(f, n) }
+          if (got == want.toSeq) None
+          else Some(s"$t#$bid: impact frontier ${got.mkString(",")} != " +
+            s"${want.mkString(",")} from its freqs and docmeta norms")
+        }.take(20)
+    } finally postings.unpersist()
+
+    // 6. termStats vs re-aggregation
     val recomputed = IndexBuilder.termStatsOf(idx.blocks)
       .withColumnRenamed("docFreq", "df2").withColumnRenamed("totalTermFreq", "ttf2")
     val mismatched = idx.termStats.toDF().join(recomputed, Seq("term"), "full_outer")

@@ -485,7 +485,7 @@ object IndexBuilder {
       PostingsCodec.encodeTermPayloads(sub).map { eb =>
         bid += 1
         BlockRow(term, bid, eb.count, eb.firstDocId, eb.lastDocId, eb.ttf,
-          eb.docsEnc, eb.freqsEnc, eb.normsEnc, eb.posEnc,
+          eb.docsEnc, eb.freqsEnc, eb.posEnc,
           eb.impacts.map(_.freq), eb.impacts.map(_.norm))
       }
     }

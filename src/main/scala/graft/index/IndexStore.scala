@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -145,6 +145,15 @@ object IndexStore {
     Manifest(gen, segs, delGen, indexSort, sortRuns, dvGen)
   }
 
+  /** A segment stage table read as `T`, projected to `T`'s columns: `.as`
+    * alone keeps columns the encoder does not know, so a table written by
+    * an older format (postings with the former per-posting `normsEnc`
+    * column) would union by position with a current one and mismatch. */
+  private[index] def readStage[T: Encoder](spark: SparkSession, path: String): Dataset[T] =
+    spark.read.parquet(path)
+      .select(implicitly[Encoder[T]].schema.fieldNames.toSeq.map(org.apache.spark.sql.functions.col): _*)
+      .as[T]
+
   /** A stage table is complete once its `_SUCCESS` marker exists. */
   private[index] def isComplete(path: String): Boolean =
     Files.exists(Paths.get(path, "_SUCCESS"))
@@ -186,7 +195,7 @@ object IndexStore {
     termVectors.foreach(tv => write("termvectors",
       tv().repartitionByRange(math.max(spark.sparkContext.defaultParallelism, cfg.numPartitions),
         col("docId")).sortWithinPartitions("docId", "term")))
-    val fs = IndexBuilder.fieldStatsOf(spark.read.parquet(s"$segDir/docmeta").as[DocRow])
+    val fs = IndexBuilder.fieldStatsOf(readStage[DocRow](spark, s"$segDir/docmeta"))
     if (!isComplete(s"$segDir/postings")) {
       val (maxDoc, sumTokens) = encodeBounds(fs)
       write("postings",
@@ -195,7 +204,7 @@ object IndexStore {
       // that skips the postings keeps the original run's records
       if (metrics != null) write("buildmetrics", spark.createDataset(metrics.value))
     }
-    write("termstats", IndexBuilder.termStatsOf(spark.read.parquet(s"$segDir/postings").as[BlockRow])
+    write("termstats", IndexBuilder.termStatsOf(readStage[BlockRow](spark, s"$segDir/postings"))
       .sortWithinPartitions("term"))
     fs
   }
@@ -398,8 +407,8 @@ object IndexStore {
   private def openManifest(spark: SparkSession, indexDir: String, m: Manifest): GraftIndex = {
     import spark.implicits._
     require(m.segments.nonEmpty, "empty index")
-    def unionOf[T: org.apache.spark.sql.Encoder](sub: String): Dataset[T] =
-      m.segments.map(s => spark.read.parquet(s"$indexDir/${s.name}/$sub").as[T]).reduce(_ union _)
+    def unionOf[T: Encoder](sub: String): Dataset[T] =
+      m.segments.map(s => readStage[T](spark, s"$indexDir/${s.name}/$sub")).reduce(_ union _)
     val docs = unionOf[DocRow]("docmeta")
     val blocks = unionOf[BlockRow]("postings")
     // term stats must be re-aggregated across segments (same term appears in

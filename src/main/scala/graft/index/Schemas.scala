@@ -15,7 +15,9 @@ final case class CodeFile(
 
 /** Per-document metadata (Lucene: norms + stored-field pointers;
   * reference norms computation: lucene/core/src/java/org/apache/lucene/index/DefaultIndexingChain.java:758-776).
-  * `norm` is the unsigned byte value (0..255) of SmallFloat.intToByte4(len). */
+  * `norm` is the unsigned byte value (0..255) of SmallFloat.intToByte4(len),
+  * the index's one copy of it: posting blocks carry none, and the scorers
+  * read it through the doc-range layout ([[graft.search.DocRange.norm]]). */
 final case class DocRow(
     docId: Long,
     repo: String,
@@ -64,7 +66,12 @@ final case class PostingRow(
   * (Lucene's FST/BlockTree is replaced by parquet/Iceberg predicate
   * pushdown on the term column's min/max stats).
   * `blockTtf` = sum of freqs in the block (lets term stats aggregate over
-  * blocks instead of re-shuffling raw postings). */
+  * blocks instead of re-shuffling raw postings). The row holds no norms:
+  * each doc's norm is stored once, in [[DocRow.norm]], and the impact
+  * frontier (`impactFreqs`/`impactNorms`) is computed from those norms at
+  * encode time ([[CheckIndex]] recomputes it). A postings table written
+  * with the former per-posting `normsEnc` column still reads: segment
+  * tables are read through the encoder's columns ([[IndexStore.readStage]]). */
 final case class BlockRow(
     term: String,
     blockId: Int,
@@ -74,7 +81,6 @@ final case class BlockRow(
     blockTtf: Long,
     docsEnc: Array[Byte],
     freqsEnc: Array[Byte],
-    normsEnc: Array[Byte],
     posEnc: Array[Byte],
     impactFreqs: Array[Int],
     impactNorms: Array[Int]) {
@@ -85,7 +91,7 @@ final case class BlockRow(
     * through here). */
   def toEncodedBlock: graft.codec.EncodedBlock =
     graft.codec.EncodedBlock(count, firstDocId, lastDocId, blockTtf,
-      docsEnc, freqsEnc, normsEnc, posEnc,
+      docsEnc, freqsEnc, posEnc,
       impactFreqs.zip(impactNorms).map { case (f, n) => graft.codec.Impact(f, n) })
 }
 

@@ -19,18 +19,23 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object SegmentMerger {
 
-  /** Decode a block table back into posting rows (streamed, not materialized). */
-  def decodeToPostings(blocks: Dataset[BlockRow]): Dataset[PostingRow] = {
+  /** Decode a block table back into posting rows (streamed, not
+    * materialized), each with its doc's norm from `docs`: blocks carry no
+    * norms, so the decoded postings join the doc metadata by docId. A
+    * posting whose doc has no row in `docs` is dropped — joined with a
+    * purged docmeta, this is the merge's delete purge. */
+  def decodeToPostings(blocks: Dataset[BlockRow], docs: Dataset[DocRow]): Dataset[PostingRow] = {
     val spark = blocks.sparkSession
     import spark.implicits._
     blocks.flatMap { b =>
-      val eb = b.toEncodedBlock
-      val d = graft.codec.PostingsCodec.decodeAll(eb)
+      val d = graft.codec.PostingsCodec.decodeAll(b.toEncodedBlock)
       (0 until b.count).iterator.map { i =>
         val pay = if (d.payloads(i).exists(_ >= 0)) d.payloads(i) else null
-        PostingRow(b.term, d.docIds(i), d.freqs(i), d.positions(i), d.norms(i), pay)
+        (b.term, d.docIds(i), d.freqs(i), d.positions(i), pay)
       }
-    }
+    }.toDF("term", "docId", "tf", "positions", "payloads")
+      .join(docs.select($"docId", $"norm"), "docId")
+      .as[PostingRow]
   }
 
   /** Merge ALL committed segments into one and commit a new generation.
@@ -78,17 +83,21 @@ object SegmentMerger {
       if (!m.hasDeletes) ds
       else ds.join(deletes, col("docId") === col("_del"), "left_anti").as[T](ds.encoder)
     def unionOf[T: org.apache.spark.sql.Encoder](stage: String): Dataset[T] =
-      toMerge.map(s => spark.read.parquet(s"$indexDir/${s.name}/$stage").as[T]).reduce(_ union _)
+      toMerge.map(s => IndexStore.readStage[T](spark, s"$indexDir/${s.name}/$stage")).reduce(_ union _)
 
     // docmeta and term vectors merge as purged unions (docIds never
-    // renumber); the postings are decoded, purged and re-encoded. The encode
-    // bounds are the merged segments' own, not the purged docmeta's.
-    val fs = IndexStore.writeSegment(spark, s"$indexDir/$segName", cfg,
+    // renumber); the postings are decoded, joined with the merged docmeta
+    // written just before them (their norms; the join drops the purged
+    // docs' postings) and re-encoded. The encode bounds are the merged
+    // segments' own, not the purged docmeta's.
+    val segDir = s"$indexDir/$segName"
+    val fs = IndexStore.writeSegment(spark, segDir, cfg,
       purge(unionOf[DocRow]("docmeta")),
       if (toMerge.forall(s => IndexStore.isComplete(s"$indexDir/${s.name}/termvectors")))
         Some(() => purge(unionOf[TermVectorRow]("termvectors")))
       else None,
-      purge(decodeToPostings(unionOf[BlockRow]("postings"))),
+      decodeToPostings(unionOf[BlockRow]("postings"),
+        IndexStore.readStage[DocRow](spark, s"$segDir/docmeta")),
       _ => (toMerge.map(_.maxDocId).max + 1, toMerge.map(_.sumTotalTermFreq).sum),
       forcePayloads = true)
     val merged = SegmentMeta(segName,

@@ -9,15 +9,31 @@ import graft.index.{BlockRow, GraftIndex}
 /** One doc range `[lo, hi)` of a [[DocRangeLayout]]: every posting block
   * overlapping the range, grouped by term and docId-sorted (a block
   * straddling a range boundary sits in every range it overlaps; the scorers
-  * clip it by `[lo, hi)`), plus the range's tombstones (null = none). */
-final class DocRange(
+  * clip it by `[lo, hi)`), the range's tombstones (null = none) and its
+  * docs' norms — Lucene's per-segment norms, read by docId
+  * ([[norm]]); the blocks carry none. */
+final class DocRange private (
     val lo: Long,
     val hi: Long,
     val blocks: Map[String, Array[BlockRow]],
-    val live: LiveDocs) extends Serializable {
+    val live: LiveDocs,
+    /** The norm byte of doc `normBase + i` at `i`, for every doc of the
+      * range; a docId without a doc (purged by a merge) holds 0 and has no
+      * postings. */
+    norms: Array[Byte],
+    normBase: Long,
+    /** The range's term dictionary, sorted: multi-term clauses seek it. */
+    terms: Array[String]) extends Serializable {
 
-  /** The range's term dictionary, sorted: multi-term clauses seek it. */
-  private val terms: Array[String] = blocks.keys.toArray.sorted
+  /** The norm of doc `doc` (unsigned byte, 0..255), for a doc in the range. */
+  @inline def norm(doc: Long): Int = norms((doc - normBase).toInt) & 0xFF
+
+  /** The docs of this range in `[l, h)`, a sub-range of it: the same blocks,
+    * tombstones and norms, for scorers that clip to a narrower window. */
+  def clip(l: Long, h: Long): DocRange = {
+    require(lo <= l && l <= h && h <= hi, s"[$l, $h) is not inside [$lo, $hi)")
+    new DocRange(l, h, blocks, live, norms, normBase, terms)
+  }
 
   /** The blocks a query touches in this range: its exact terms by lookup,
     * its multi-term clauses by `matches` over this range's terms. */
@@ -50,6 +66,22 @@ final class DocRange(
 }
 
 object DocRange {
+
+  /** The range `[lo, hi)` over `blocks` (each term's docId-sorted), with
+    * `live` tombstones (null = none) and `norms(i)` the norm of doc `lo + i`. */
+  def apply(lo: Long, hi: Long, blocks: Map[String, Array[BlockRow]], live: LiveDocs,
+      norms: Array[Byte]): DocRange = {
+    require(norms.length == hi - lo, s"${norms.length} norms for [$lo, $hi)")
+    new DocRange(lo, hi, blocks, live, norms, lo, blocks.keys.toArray.sorted)
+  }
+
+  /** The norms of docs `[lo, hi)` from their `(docId, norm)` rows, one
+    * byte per docId; a docId without a row holds 0. */
+  def normsOf(lo: Long, hi: Long, rows: Iterator[(Long, Int)]): Array[Byte] = {
+    val out = new Array[Byte]((hi - lo).toInt)
+    rows.foreach { case (d, n) => out((d - lo).toInt) = n.toByte }
+    out
+  }
 
   /** The (docFreq, totalTermFreq) of each of `terms` over `ranges`: the
     * `count` and `blockTtf` of its blocks whose `firstDocId` lies in their
@@ -148,9 +180,10 @@ object DocRangeLayout {
 
   /** Lays `index` out over `p` aligned docId ranges of `ceil(maxDoc / p)`
     * docs each, in one job: every block row is keyed by each range it
-    * overlaps, tombstones by their range, and both are cogrouped into one
-    * record per range (ranges without blocks still get an empty record, so
-    * MatchAll-anchored queries reach them). The index must hold a doc. */
+    * overlaps, the docs' `(docId, norm)` and the tombstones by their range,
+    * and the three are cogrouped into one record per range (ranges without
+    * blocks still get an empty record, so MatchAll-anchored queries reach
+    * them). The index must hold a doc. */
   def build(index: GraftIndex, p: Int): DocRangeLayout = {
     val sc = index.spark.sparkContext
     val maxDoc = index.fieldStats.maxDocId + 1
@@ -160,20 +193,25 @@ object DocRangeLayout {
     val blocks = index.blocks.rdd.flatMap { blk =>
       (blk.firstDocId / span to blk.lastDocId / span).iterator.map(pid => (pid.toInt, blk))
     }
+    import index.spark.implicits._
+    val norms = index.docs.select("docId", "norm").as[(Long, Int)].rdd
+      .map { case (d, n) => ((d / span).toInt, (d, n)) }
     val deletes: RDD[(Int, Long)] =
       if (!index.hasDeletes) sc.emptyRDD
       else index.deletes.rdd.filter(_ < maxDoc).map(d => ((d / span).toInt, d))
-    val ranges = blocks.cogroup(deletes, new ByRange(nParts)).mapPartitionsWithIndex { (pid, it) =>
+    val ranges = blocks.cogroup(norms, deletes, new ByRange(nParts)).mapPartitionsWithIndex { (pid, it) =>
       val rows = it.toArray
       val byTerm = rows.iterator.flatMap(_._2._1).toArray.groupBy(_.term)
         .map { case (t, arr) => t -> arr.sortBy(_.firstDocId) }
-      val deleted = rows.iterator.flatMap(_._2._2).toArray
+      val deleted = rows.iterator.flatMap(_._2._3).toArray
       val live = if (deleted.isEmpty) null else {
         java.util.Arrays.sort(deleted)
         new LiveDocs(deleted)
       }
       val lo = pid.toLong * span
-      Iterator.single(new DocRange(lo, math.min(lo + span, maxDoc), byTerm, live))
+      val hi = math.min(lo + span, maxDoc)
+      Iterator.single(DocRange(lo, hi, byTerm, live,
+        DocRange.normsOf(lo, hi, rows.iterator.flatMap(_._2._2))))
     }
     ranges.setName(s"graft doc-range layout ($nParts ranges)")
     ranges.persist(StorageLevel.MEMORY_AND_DISK)

@@ -69,10 +69,8 @@ object ScorerBuilder {
       boost: Float,
       termBlocks: Map[String, Array[BlockRow]],
       ctx: SearchContext,
-      lo: Long,
-      hi: Long,
-      live: LiveDocs = null): DocScorer =
-    new Clauses(termBlocks, ctx, lo, hi, live).scorer(q, boost)
+      range: DocRange): DocScorer =
+    new Clauses(termBlocks, ctx, range).scorer(q, boost)
 
   /** Root-level execution, Lucene's scorer selection by shape
     * (`Boolean2ScorerSupplier`): single terms feed the collector floor into
@@ -87,14 +85,12 @@ object ScorerBuilder {
       q: Query,
       termBlocks: Map[String, Array[BlockRow]],
       ctx: SearchContext,
-      lo: Long,
-      hi: Long,
+      range: DocRange,
       k: Int,
       after: ScoreDoc,
-      live: LiveDocs = null,
       tc: TotalCounter = null,
       floor: TopKFloor = null): Array[ScoreDoc] = {
-    val c = new Clauses(termBlocks, ctx, lo, hi, live)
+    val c = new Clauses(termBlocks, ctx, range)
     q match {
       case BoolQ(Nil, should, mustNot, msm) if msm <= 1 && should.nonEmpty =>
         TopK.disjunction(c.clauses(should, 1f).toArray, k, after, ctx.counters, tc,
@@ -127,29 +123,26 @@ object ScorerBuilder {
       q: Query,
       termBlocks: Map[String, Array[BlockRow]],
       ctx: SearchContext,
-      lo: Long,
-      hi: Long,
+      range: DocRange,
       k: Int,
-      after: ScoreDocD,
-      live: LiveDocs = null): Array[ScoreDocD] = {
-    val root = build(q, 1f, termBlocks, ctx, lo, hi, live)
+      after: ScoreDocD): Array[ScoreDocD] = {
+    val root = build(q, 1f, termBlocks, ctx, range)
     if (root eq EmptyScorer) Array.empty
     else TopK.iterateD(root, k, after)
   }
 
-  /** The scorer factory of one doc range `[lo, hi)`: every clause iterates
-    * the range's blocks through [[postings]], and every weight gets its
+  /** The scorer factory of one doc range: every clause iterates the
+    * range's blocks through [[postings]] (clipped to `[lo, hi)`, tombstones
+    * skipped, scored with the range's norms), and every weight gets its
     * double twin on the double path only. */
   private final class Clauses(
       termBlocks: Map[String, Array[BlockRow]],
       ctx: SearchContext,
-      lo: Long,
-      hi: Long,
-      live: LiveDocs) {
+      range: DocRange) {
 
     private def postings(blocks: Array[BlockRow], sim: SimScorer,
         dSim: DoubleSimScorer = null): TermIterator =
-      new TermIterator(blocks, sim, lo, hi, dSim, ctx.counters, live)
+      new TermIterator(blocks, sim, range, dSim, ctx.counters)
 
     private def double(dSim: => DoubleSimScorer): DoubleSimScorer =
       if (ctx.doubleMode) dSim else null
@@ -210,6 +203,15 @@ object ScorerBuilder {
         val df = math.min(ts.map(ctx.docFreq).sum, ctx.stats.docCount)
         val (s, ds) = weights(boost, df, ts.map(ctx.ttfOf).sum)
         make(ts.map(t => unweighted(t, termBlocks(t))).toArray, s, ds)
+      }
+
+    /** `t`'s matches with an occurrence at a position in `[start, end)`
+      * (SpanFirstQ's window starts at 0). */
+    private def spanPosRange(t: String, start: Int, end: Int, boost: Float): DocScorer =
+      if (!present(t)) EmptyScorer
+      else {
+        val (s, ds) = weights(boost, ctx.docFreq(t), ctx.ttfOf(t))
+        new SpanFirstScorer(unweighted(t, termBlocks(t)), start, end, s, ds)
       }
 
     private def constant(tis: Seq[DocScorer], boost: Float): DocScorer =
@@ -293,16 +295,8 @@ object ScorerBuilder {
             inOrder || repeats(flat), s, ds)
         }
 
-      case sq @ (_: SpanFirstQ | _: SpanPosRangeQ) =>
-        val (t, start, end) = sq match {
-          case SpanFirstQ(t0, e) => (t0, 0, e)
-          case SpanPosRangeQ(t0, s0, e) => (t0, s0, e)
-        }
-        if (!present(t)) EmptyScorer
-        else {
-          val (s, ds) = weights(boost, ctx.docFreq(t), ctx.ttfOf(t))
-          new SpanFirstScorer(unweighted(t, termBlocks(t)), start, end, s, ds)
-        }
+      case SpanFirstQ(t, end) => spanPosRange(t, 0, end, boost)
+      case SpanPosRangeQ(t, start, end) => spanPosRange(t, start, end, boost)
 
       case DisMaxQ(disjuncts, tieBreak) =>
         val subs = clauses(disjuncts, boost)
@@ -346,7 +340,7 @@ object ScorerBuilder {
 
       case bq: BoolQ => bool(bq, boost)._1
       case BoostQ(sub, bst) => scorer(sub, boost * bst)
-      case MatchAllQ => new MatchAllScorer(lo, hi, boost, live)
+      case MatchAllQ => new MatchAllScorer(range.lo, range.hi, boost, range.live)
       case MatchNoneQ => EmptyScorer
     }
   }
@@ -634,7 +628,7 @@ final class GraftSearcher(
     * its blocks from the range's own dictionary (exact terms by lookup,
     * multi-term clauses by `matches`), the [[SearchContext]] the task
     * completed with the exact terms' statistics over all its ranges, the
-    * range itself (`[lo, hi)` and tombstones) and the task's
+    * range itself (`[lo, hi)`, tombstones and norms) and the task's
     * [[TopKFloor]]. Every range runs, including ranges holding none of the
     * query's blocks (a MatchAll-anchored query such as NOT matches there;
     * any other query builds an empty scorer). Ranges run in ascending docId
@@ -673,7 +667,7 @@ final class GraftSearcher(
       numPartitions: Int = 0): (Array[ScoreDoc], Long, String) = {
     val ranges = perRange[RangeHits](q0, numPartitions) { (q, blocks, ctx, r, _) =>
       val tc = new TotalCounter(totalHitsThreshold)
-      val hits = ScorerBuilder.topK(q, blocks, ctx, r.lo, r.hi, k, null, r.live, tc)
+      val hits = ScorerBuilder.topK(q, blocks, ctx, r, k, null, tc)
       Iterator.single(RangeHits(hits, tc.seen, tc.countedEnough))
     }.gather()
     val total = ranges.map(_.seen).sum
@@ -693,7 +687,7 @@ final class GraftSearcher(
 
   private def searchJob(q0: Query, k: Int, after: ScoreDoc, numPartitions: Int): RangeJob[ScoreDoc] =
     perRange[ScoreDoc](q0, numPartitions) { (q, blocks, ctx, r, floor) =>
-      ScorerBuilder.topK(q, blocks, ctx, r.lo, r.hi, k, after, r.live, floor = floor).iterator
+      ScorerBuilder.topK(q, blocks, ctx, r, k, after, floor = floor).iterator
     }
 
   /** Double-precision per-partition top-k (oracle-facing scored family):
@@ -706,7 +700,7 @@ final class GraftSearcher(
   private def searchDoubleJob(q0: Query, k: Int, after: ScoreDocD,
       numPartitions: Int): RangeJob[ScoreDocD] =
     perRange[ScoreDocD](q0, numPartitions, doubleMode = true) { (q, blocks, ctx, r, _) =>
-      ScorerBuilder.topKD(q, blocks, ctx, r.lo, r.hi, k, after, r.live).iterator
+      ScorerBuilder.topKD(q, blocks, ctx, r, k, after).iterator
     }
 
   /** Global double-precision top-k, best-first. */
@@ -733,7 +727,7 @@ final class GraftSearcher(
       val cuts = (r.lo +: bases.filter(b => b > r.lo && b < r.hi).toSeq :+ r.hi).distinct.sorted
       cuts.sliding(2).flatMap {
         case Seq(l, h) =>
-          val root = ScorerBuilder.build(q, 1f, blocks, ctx, l, h, r.live)
+          val root = ScorerBuilder.build(q, 1f, blocks, ctx, r.clip(l, h))
           if (root eq EmptyScorer) Iterator.empty[Long]
           else {
             val out = new scala.collection.mutable.ArrayBuffer[Long](k)
@@ -751,7 +745,7 @@ final class GraftSearcher(
     * but each doc-range partition emits every match instead of a top-k heap. */
   def matchesDS(q0: Query, numPartitions: Int = 0): Dataset[Long] =
     spark.createDataset(perRange[Long](q0, numPartitions) { (q, blocks, ctx, r, _) =>
-      val root = ScorerBuilder.build(q, 1f, blocks, ctx, r.lo, r.hi, r.live)
+      val root = ScorerBuilder.build(q, 1f, blocks, ctx, r)
       if (root eq EmptyScorer) Iterator.empty[Long]
       else new Iterator[Long] {
         private var d = root.nextDoc()
@@ -774,7 +768,7 @@ final class GraftSearcher(
       if (docFilter == null) null
       else spark.sparkContext.broadcast(docFilter.sorted)
     spark.createDataset(perRange[ScoreDocD](q0, 0, doubleMode = true) { (q, blocks, ctx, r, _) =>
-      val root = ScorerBuilder.build(q, 1f, blocks, ctx, r.lo, r.hi, r.live)
+      val root = ScorerBuilder.build(q, 1f, blocks, ctx, r)
       if (root eq EmptyScorer) Iterator.empty[ScoreDocD]
       else if (bc == null) new Iterator[ScoreDocD] {
         private var d = root.nextDoc()
@@ -812,10 +806,10 @@ final class GraftSearcher(
     * doc range over the whole doc space — the `CheckHits` / TestWANDScorer
     * differential baseline (reference:
     * lucene/core/src/test/org/apache/lucene/search/TestWANDScorer.java:209).
-    * It reads the stored block table, not the resident layout: the blocks
-    * of the query's exact terms and of its multi-term expansions
-    * ([[dictTerms]]), as one [[DocRange]] whose [[DocRange.termStats]] are
-    * the exact terms' statistics. */
+    * It reads the stored tables, not the resident layout: the blocks of
+    * the query's exact terms and of its multi-term expansions
+    * ([[dictTerms]]) and every doc's norm, as one [[DocRange]] whose
+    * [[DocRange.termStats]] are the exact terms' statistics. */
   def bruteForce(q0: Query, k: Int, after: ScoreDoc = null): Array[ScoreDoc] = {
     val (q, ctx) = plan(q0)
     if (q == MatchNoneQ) return Array.empty
@@ -824,12 +818,14 @@ final class GraftSearcher(
     val live =
       if (!index.hasDeletes) null
       else new LiveDocs(index.deletes.collect().sorted)
-    val all = new DocRange(0L, fieldStats.maxDocId + 1,
+    val maxDoc = fieldStats.maxDocId + 1
+    val all = DocRange(0L, maxDoc,
       index.blocks.filter($"term".isin(terms.toSeq: _*)).collect()
         .groupBy(_.term).map { case (t, arr) => t -> arr.sortBy(_.firstDocId) },
-      live)
+      live,
+      DocRange.normsOf(0L, maxDoc, index.docs.select("docId", "norm").as[(Long, Int)].collect().iterator))
     val root = ScorerBuilder.build(q, 1f, all.blocks,
-      ctx.copy(termStats = DocRange.termStats(Array(all), exact)), all.lo, all.hi, live)
+      ctx.copy(termStats = DocRange.termStats(Array(all), exact)), all)
     if (root eq EmptyScorer) Array.empty
     else TopK.iterate(root, k, after)
   }

@@ -502,6 +502,7 @@ object Query {
   * through the analyzer; a term analyzing to multiple tokens becomes a
   * phrase, like Lucene's query-time analysis. */
 final class QueryParser(analyzer: Analyzer) extends Serializable {
+  import QueryParser.{Clause, Neg, Pos}
 
   private sealed trait Tok
   private case class Word(s: String) extends Tok
@@ -600,16 +601,31 @@ final class QueryParser(analyzer: Analyzer) extends Serializable {
   def parse(s: String): Query = {
     toks = lex(s)
     if (toks.isEmpty) return MatchNoneQ
-    val q = parseOr() match {
-      // pure negation: Lucene matches nothing unless anchored; we anchor on
-      // MatchAll so `NOT x` means "all docs except x"
-      case NegMarker(n) => BoolQ(must = Seq(MatchAllQ), mustNot = Seq(n))
-      case other => other
-    }
-    Query.rewrite(q)
+    Query.rewrite(query(parseOr()))
   }
 
-  private def parseOr(): Query = {
+  /** The query of a clause. A negation with nothing to subtract it from is
+    * anchored on MatchAll: Lucene matches nothing, we read `NOT x` as "all
+    * docs except x". */
+  private def query(c: Clause): Query = c match {
+    case Pos(q) => q
+    case Neg(n) => BoolQ(must = Seq(MatchAllQ), mustNot = Seq(n))
+  }
+
+  /** Several clauses joined by one operator: `positive` combines the plain
+    * ones, and the negations become mustNot clauses beside them. */
+  private def combine(cs: List[Clause], positive: Seq[Query] => BoolQ): Clause = cs match {
+    case single :: Nil => single
+    case _ =>
+      val pos = cs.collect { case Pos(q) => q }
+      val negs = cs.collect { case Neg(q) => q }
+      Pos(
+        if (negs.isEmpty) positive(pos)
+        else if (pos.isEmpty) BoolQ(must = Seq(MatchAllQ), mustNot = negs)
+        else positive(pos).copy(mustNot = negs))
+  }
+
+  private def parseOr(): Clause = {
     var clauses = List(parseAnd())
     var loop = true
     while (loop) peek match {
@@ -618,90 +634,93 @@ final class QueryParser(analyzer: Analyzer) extends Serializable {
         clauses ::= parseAnd() // bare juxtaposition = OR (default operator)
       case _ => loop = false
     }
-    val cs = clauses.reverse
-    if (cs.size == 1) cs.head
-    else {
-      // NOT clauses float up as mustNot
-      val (negs, pos) = cs.partition(_.isInstanceOf[NegMarker])
-      if (negs.isEmpty) BoolQ(should = cs)
-      else if (pos.isEmpty) BoolQ(must = Seq(MatchAllQ), mustNot = negs.map(_.asInstanceOf[NegMarker].q))
-      else BoolQ(should = pos, mustNot = negs.map(_.asInstanceOf[NegMarker].q))
-    }
+    combine(clauses.reverse, qs => BoolQ(should = qs))
   }
 
-  private case class NegMarker(q: Query) extends Query
-
-  private def parseAnd(): Query = {
+  private def parseAnd(): Clause = {
     var clauses = List(parseNot())
     while (peek.contains(AND)) { pop(); clauses ::= parseNot() }
-    val cs = clauses.reverse
-    if (cs.size == 1) cs.head
-    else {
-      val (negs, pos) = cs.partition(_.isInstanceOf[NegMarker])
-      if (pos.isEmpty) BoolQ(must = Seq(MatchAllQ), mustNot = negs.map(_.asInstanceOf[NegMarker].q))
-      else BoolQ(must = pos, mustNot = negs.map(_.asInstanceOf[NegMarker].q))
-    }
+    combine(clauses.reverse, qs => BoolQ(must = qs))
   }
 
-  private def parseNot(): Query = peek match {
-    case Some(NOT) => pop(); NegMarker(parseAtom())
+  private def parseNot(): Clause = peek match {
+    case Some(NOT) => pop(); Neg(query(parseAtom()))
     case _ => parseAtom()
   }
 
-  private def parseAtom(): Query = {
+  private def parseAtom(): Clause = {
     val base = pop() match {
       case LP =>
-        val q = parseOr()
+        val c = parseOr()
         if (peek.contains(RP)) pop()
-        q
-      case Phrase(text) =>
-        val slop = peek match {
-          case Some(Word(w)) if w.startsWith("~") && w.length > 1 &&
-              w.drop(1).forall(_.isDigit) =>
-            pop(); w.drop(1).toInt
-          case _ => 0
-        }
-        val toks = analyzer.analyze(text).toSeq
-        if (toks.isEmpty) MatchNoneQ
-        else if (toks.size == 1) TermQ(toks.head.term)
-        else PhraseQ(toks.map(_.term), toks.map(_.position), slop)
-      case RangeT(body, inclL, inclU) =>
-        val parts = body.split("\\s+TO\\s+", 2)
-        val lo0 = if (parts.length > 0) parts(0).trim else ""
-        val hi0 = if (parts.length > 1) parts(1).trim else ""
-        val lo = if (lo0.isEmpty || lo0 == "*") null else analyzer.lowercase(lo0)
-        val hi = if (hi0.isEmpty || hi0 == "*") null else analyzer.lowercase(hi0)
-        TermRangeQ(lo, hi, inclL, inclU)
-      case RegexT(pat) =>
-        RegexpQ(pat)
-      case Word(w) =>
-        val tilde = w.lastIndexOf('~')
-        if (tilde > 0 && !w.contains("*") && !w.contains("?") &&
-            w.substring(tilde + 1).forall(_.isDigit)) {
-          val ed = w.substring(tilde + 1)
-          FuzzyQ(analyzer.lowercase(w.substring(0, tilde)),
-            if (ed.isEmpty) 2 else math.min(ed.toInt, 2))
-        }
-        else if (w.endsWith("*") && !w.dropRight(1).contains("*") && !w.contains("?"))
-          PrefixQ(analyzer.lowercase(w.dropRight(1)))
-        else if (w.contains("*") || w.contains("?"))
-          WildcardQ(analyzer.lowercase(w))
-        else {
-          val toks = analyzer.analyze(w).toSeq
-          if (toks.isEmpty) MatchNoneQ
-          else if (toks.size == 1) TermQ(toks.head.term)
-          else PhraseQ(toks.map(_.term), toks.map(_.position))
-        }
-      case other =>
-        throw new IllegalArgumentException(s"unexpected token $other")
+        c
+      case tok => Pos(leaf(tok))
     }
     peek match {
-      // a boosted negation excludes the same docs as the plain one: the
-      // marker stays unwrapped, so it still floats up as a mustNot clause
-      case Some(Caret(b)) => pop(); if (base.isInstanceOf[NegMarker]) base else BoostQ(base, b)
+      // a boosted negation excludes the same docs as the plain one: it
+      // stays a negation, so it still floats up as a mustNot clause
+      case Some(Caret(b)) => pop(); base match {
+        case Pos(q) => Pos(BoostQ(q, b))
+        case neg => neg
+      }
       case _ => base
     }
   }
+
+  /** The query of a term, phrase, range or regexp token. */
+  private def leaf(tok: Tok): Query = tok match {
+    case Phrase(text) =>
+      val slop = peek match {
+        case Some(Word(w)) if w.startsWith("~") && w.length > 1 &&
+            w.drop(1).forall(_.isDigit) =>
+          pop(); w.drop(1).toInt
+        case _ => 0
+      }
+      val toks = analyzer.analyze(text).toSeq
+      if (toks.isEmpty) MatchNoneQ
+      else if (toks.size == 1) TermQ(toks.head.term)
+      else PhraseQ(toks.map(_.term), toks.map(_.position), slop)
+    case RangeT(body, inclL, inclU) =>
+      val parts = body.split("\\s+TO\\s+", 2)
+      val lo0 = if (parts.length > 0) parts(0).trim else ""
+      val hi0 = if (parts.length > 1) parts(1).trim else ""
+      val lo = if (lo0.isEmpty || lo0 == "*") null else analyzer.lowercase(lo0)
+      val hi = if (hi0.isEmpty || hi0 == "*") null else analyzer.lowercase(hi0)
+      TermRangeQ(lo, hi, inclL, inclU)
+    case RegexT(pat) =>
+      RegexpQ(pat)
+    case Word(w) =>
+      val tilde = w.lastIndexOf('~')
+      if (tilde > 0 && !w.contains("*") && !w.contains("?") &&
+          w.substring(tilde + 1).forall(_.isDigit)) {
+        val ed = w.substring(tilde + 1)
+        FuzzyQ(analyzer.lowercase(w.substring(0, tilde)),
+          if (ed.isEmpty) 2 else math.min(ed.toInt, 2))
+      }
+      else if (w.endsWith("*") && !w.dropRight(1).contains("*") && !w.contains("?"))
+        PrefixQ(analyzer.lowercase(w.dropRight(1)))
+      else if (w.contains("*") || w.contains("?"))
+        WildcardQ(analyzer.lowercase(w))
+      else {
+        val toks = analyzer.analyze(w).toSeq
+        if (toks.isEmpty) MatchNoneQ
+        else if (toks.size == 1) TermQ(toks.head.term)
+        else PhraseQ(toks.map(_.term), toks.map(_.position))
+      }
+    case other =>
+      throw new IllegalArgumentException(s"unexpected token $other")
+  }
+}
+
+private object QueryParser {
+
+  /** A parsed clause: a query, or a negated one (`NOT x`), which floats up
+    * into its enclosing boolean as a mustNot clause. It is not a [[Query]]:
+    * only the parser's `query` turns one into a query, so no negation
+    * marker can reach the AST or the scorers. */
+  sealed trait Clause
+  final case class Pos(q: Query) extends Clause
+  final case class Neg(q: Query) extends Clause
 }
 
 /** Minimal surround-query-language parser (reference: lucene/queryparser/

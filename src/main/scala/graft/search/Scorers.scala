@@ -67,18 +67,21 @@ object DocScorer {
 }
 
 /** Postings iterator over a term's encoded blocks (sorted by firstDocId,
-  * non-overlapping), clipped to the partition's doc range [lo, hi).
+  * non-overlapping), clipped to the doc range `range` ([lo, hi)), skipping
+  * its tombstones and scoring with its per-doc norms ([[DocRange.norm]]).
   * Blocks are decoded lazily — `advance` skips whole non-matching blocks by
   * metadata only (the skip-list analog), and position payloads are decoded
   * only if `positionsOfCurrent` is called (two-phase phrase matching). */
 final class TermIterator(
     blocks: Array[BlockRow],
     val scorer: SimScorer,
-    lo: Long,
-    hi: Long,
+    range: DocRange,
     dScorer: DoubleSimScorer = null,
-    counters: ScorerCounters = null,
-    liveDocs: LiveDocs = null) extends DocScorer {
+    counters: ScorerCounters = null) extends DocScorer {
+
+  private val lo = range.lo
+  private val hi = range.hi
+  private val liveDocs = range.live
 
   /** Collector-fed score floor (Lucene `setMinCompetitiveScore` pushed into
     * `ImpactsDISI`): advance() skips — without decoding — any block whose
@@ -92,7 +95,6 @@ final class TermIterator(
   private var blockIdx = -1
   private var docs: Array[Long] = null
   private var freqs: Array[Int] = null
-  private var norms: Array[Int] = null
   private var positions: Array[Array[Int]] = null // lazy
   private var pos = -1
   private var cur: Long = -1L
@@ -176,9 +178,6 @@ final class TermIterator(
     ForDeltaUtil.decode(new ByteReader(b.docsEnc), b.count, b.firstDocId - 1, docs)
     freqs = new Array[Int](b.count)
     PForUtil.decode(new ByteReader(b.freqsEnc), b.count, freqs)
-    norms = new Array[Int](b.count)
-    var j = 0
-    while (j < b.count) { norms(j) = b.normsEnc(j) & 0xFF; j += 1 }
     positions = null
   }
 
@@ -228,11 +227,11 @@ final class TermIterator(
   }
 
   def freq: Int = freqs(pos)
-  def norm: Int = norms(pos)
+  def norm: Int = range.norm(cur)
 
-  override def score(): Float = scorer.score(freqs(pos).toFloat, norms(pos))
+  override def score(): Float = scorer.score(freqs(pos).toFloat, norm)
   override def scoreD(): Double =
-    if (dScorer != null) dScorer.score(freqs(pos).toDouble, norms(pos))
+    if (dScorer != null) dScorer.score(freqs(pos).toDouble, norm)
     else score().toDouble
 
   def positionsOfCurrent(): Array[Int] = {

@@ -170,17 +170,19 @@ class PostingsCodecSpec extends AnyFunSuite {
     assert(blocks(0).count == 128 && blocks(2).count == 44)
     val decoded = blocks.flatMap { b =>
       val d = PostingsCodec.decodeAll(b)
-      (0 until b.count).map(i => (d.docIds(i), d.freqs(i), d.positions(i).toSeq, d.norms(i)))
+      (0 until b.count).map(i => (d.docIds(i), d.freqs(i), d.positions(i).toSeq))
     }
-    assert(decoded.toSeq == postings.map(p => (p._1, p._2, p._3.toSeq, p._4)))
+    assert(decoded.toSeq == postings.map(p => (p._1, p._2, p._3.toSeq)))
     // block boundaries
     assert(blocks(0).firstDocId == postings.head._1)
     assert(blocks(2).lastDocId == postings.last._1)
-    // impacts: every (freq,norm) in block is dominated by some frontier entry
+    // impacts: every input (freq, norm) of a block is dominated by some
+    // frontier entry (the block stores no norms; they are the input's)
+    val normOf = postings.map(p => p._1 -> p._4).toMap
     for (b <- blocks) {
       val d = PostingsCodec.decodeAll(b)
       for (i <- 0 until b.count) {
-        assert(b.impacts.exists(imp => imp.freq >= d.freqs(i) && imp.norm <= d.norms(i)))
+        assert(b.impacts.exists(imp => imp.freq >= d.freqs(i) && imp.norm <= normOf(d.docIds(i))))
       }
     }
   }
@@ -201,9 +203,16 @@ class PostingsCodecSpec extends AnyFunSuite {
       val blocks = PostingsCodec.encodeTerm(postings.iterator).toArray
       val decoded = blocks.flatMap { b =>
         val dd = PostingsCodec.decodeAll(b)
-        (0 until b.count).map(i => (dd.docIds(i), dd.freqs(i), dd.positions(i).toSeq, dd.norms(i)))
+        (0 until b.count).map(i => (dd.docIds(i), dd.freqs(i), dd.positions(i).toSeq))
       }
-      assert(decoded.toSeq == postings.map(p => (p._1, p._2, p._3.toSeq, p._4)))
+      assert(decoded.toSeq == postings.map(p => (p._1, p._2, p._3.toSeq)))
+      // the frontier dominates every input (freq, norm) of its block
+      val normOf = postings.map(p => p._1 -> p._4).toMap
+      for (b <- blocks) {
+        val dd = PostingsCodec.decodeAll(b)
+        for (i <- 0 until b.count)
+          assert(b.impacts.exists(imp => imp.freq >= dd.freqs(i) && imp.norm <= normOf(dd.docIds(i))))
+      }
     }
   }
 }

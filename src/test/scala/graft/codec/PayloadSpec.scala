@@ -66,7 +66,7 @@ class PayloadSpec extends AnyFunSuite {
     assert(before.forall { case (_, p) => p(1) == 7 })
     // round-trip through decodeToPostings (the merge path)
     val rows = graft.index.SegmentMerger.decodeToPostings(
-      idx.blocks.filter($"term" === "merge").as[graft.index.BlockRow]).collect()
+      idx.blocks.filter($"term" === "merge").as[graft.index.BlockRow], idx.docs).collect()
     assert(rows.forall(r => r.payloads != null && r.payloads.last == 7))
   }
 }

@@ -51,4 +51,33 @@ class CheckIndexSpec extends AnyFunSuite {
     assert(!r.clean)
     assert(r.problems.exists(p => p.contains("blockTtf") || p.contains("termStats")))
   }
+
+  /** The CheckIndex report of a fresh 30-doc index whose docmeta rows are
+    * rewritten by `tamper`, which also gets the docId it should alter. */
+  private def withDocmeta(tamper: (Seq[DocRow], Long) => Seq[DocRow]): CheckReport = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-check-norms-").toString
+    IndexStore.buildAndCommit(
+      spark.createDataset(CodeCorpus.files(30)), dir, IndexConfig(analyzer = Analyzers.simple))
+    val path = s"$dir/${IndexStore.readManifest(dir).get.segments.head.name}/docmeta"
+    val docs = spark.read.parquet(path).as[DocRow].collect().toSeq.sortBy(_.docId)
+    // a doc with postings: every doc of the corpus has some
+    assert(docs.forall(_.len > 0))
+    spark.createDataset(tamper(docs, docs(7).docId)).write.mode("overwrite").parquet(path)
+    CheckIndex.check(spark, dir)
+  }
+
+  test("a posting whose doc lost its docmeta row is reported") {
+    val r = withDocmeta((docs, victim) => docs.filterNot(_.docId == victim))
+    assert(r.problems.exists(p => p.contains("no docmeta row") && p.contains("doc 7")),
+      r.problems.mkString("; "))
+  }
+
+  test("a docmeta norm the impact frontiers were not computed from is reported") {
+    // norm 0 (an empty field) sits on the frontier of every block holding
+    // the doc, since every other doc of the corpus has norm >= 1
+    val r = withDocmeta((docs, victim) =>
+      docs.map(d => if (d.docId == victim) d.copy(norm = 0) else d))
+    assert(!r.problems.exists(_.contains("no docmeta row")))
+    assert(r.problems.exists(_.contains("impact frontier")), r.problems.mkString("; "))
+  }
 }

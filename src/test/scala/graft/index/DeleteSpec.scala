@@ -76,7 +76,7 @@ class DeleteSpec extends AnyFunSuite {
     val idx = IndexStore.open(spark, dir)
     assert(!idx.hasDeletes)
     // postings physically gone
-    val decoded = SegmentMerger.decodeToPostings(idx.blocks)
+    val decoded = SegmentMerger.decodeToPostings(idx.blocks, idx.docs)
       .map(_.docId).collect().toSet
     assert(decoded.intersect(victims).isEmpty)
     // docmeta purged, stats shrank

@@ -93,7 +93,7 @@ class IndexBuildSpec extends AnyFunSuite {
         expected(t) = (d.docId, tf, pos.toSeq, d.norm) :: expected.getOrElse(t, Nil)
       }
     }
-    val decoded = SegmentMerger.decodeToPostings(tinyIndex.blocks).collect()
+    val decoded = SegmentMerger.decodeToPostings(tinyIndex.blocks, tinyIndex.docs).collect()
       .groupBy(_.term)
     for (term <- Seq("if", "indexwriter", "foo.bar", "中")) {
       val exp = expected(term).map(x => (x._1, x._2, x._3, x._4)).sortBy(_._1)
@@ -147,7 +147,7 @@ class IndexBuildSpec extends AnyFunSuite {
     }
     // same decoded postings as unsalted build
     val idx2 = IndexBuilder.build(spark.createDataset(files), IndexConfig(numPartitions = 4, saltSpan = 1L << 20))
-    def decode(ix: GraftIndex) = SegmentMerger.decodeToPostings(ix.blocks)
+    def decode(ix: GraftIndex) = SegmentMerger.decodeToPostings(ix.blocks, ix.docs)
       .filter(_.term == "if").collect().map(p => (p.docId, p.tf)).toSet
     assert(decode(idx) == decode(idx2))
   }

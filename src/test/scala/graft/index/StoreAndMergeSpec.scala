@@ -50,9 +50,9 @@ class StoreAndMergeSpec extends AnyFunSuite {
     val tsB = single.termStats.collect().map(t => (t.term, t.docFreq, t.totalTermFreq)).toSet
     assert(tsA == tsB)
     // identical postings
-    val pA = SegmentMerger.decodeToPostings(mergedIdx.blocks).collect()
+    val pA = SegmentMerger.decodeToPostings(mergedIdx.blocks, mergedIdx.docs).collect()
       .map(p => (p.term, p.docId, p.tf, p.positions.toSeq, p.norm)).toSet
-    val pB = SegmentMerger.decodeToPostings(single.blocks).collect()
+    val pB = SegmentMerger.decodeToPostings(single.blocks, single.docs).collect()
       .map(p => (p.term, p.docId, p.tf, p.positions.toSeq, p.norm)).toSet
     assert(pA == pB)
     // identical search

@@ -100,10 +100,11 @@ class BlockMaxSpec extends AnyFunSuite {
     // docFreq as termstats derives it: the sum of the term's block counts
     val df = blocks.map(_.count.toLong).sum
     val maxDoc = index.fieldStats.maxDocId + 1
+    val all = DocRange(0L, maxDoc, Map(t -> blocks), null,
+      DocRange.normsOf(0L, maxDoc, index.docs.collect().iterator.map(d => (d.docId, d.norm))))
     def run(floor: TopKFloor): Array[ScoreDoc] = {
       val it = new TermIterator(blocks,
-        Bm25.scorer(1f, Bm25.DEFAULT_K1, Bm25.DEFAULT_B, df, ctx.stats),
-        0L, maxDoc)
+        Bm25.scorer(1f, Bm25.DEFAULT_K1, Bm25.DEFAULT_B, df, ctx.stats), all)
       TopK.singleTerm(it, 10, null, null, floor)
     }
     def floorAt(score: Float): TopKFloor = {
