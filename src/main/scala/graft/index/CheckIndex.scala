@@ -1,8 +1,6 @@
 package graft.index
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{collect_list, struct}
-import org.apache.spark.storage.StorageLevel
 import graft.codec.{Impact, PostingsCodec}
 
 /** Integrity report for a committed index ([[CheckIndex.check]]). */
@@ -27,12 +25,12 @@ final case class CheckReport(
   *  3. per-term posting-block invariants: count > 0, firstDocId <= lastDocId,
   *     blocks docId-disjoint within a term (the iterators' seek invariant)
   *  4. full block decode: encoded headers match decoded payloads
-  *     (count, first/last docId, blockTtf vs freq sum)
-  *  5. postings vs norms — what the scorers rely on, since blocks carry no
-  *     norms: every decoded posting's docId has a docmeta row, and each
-  *     block's impact frontier equals the one recomputed from its decoded
-  *     freqs and those docs' docmeta norms
-  *  6. termStats table equals a re-aggregation over blocks
+  *     (count, first/last docId, blockTtf vs freq sum), and — what the
+  *     scorers rely on, since blocks carry no norms — every decoded
+  *     posting's docId has a docmeta row, and the block's impact frontier
+  *     equals the one recomputed from its decoded freqs and those docs'
+  *     docmeta norms
+  *  5. termStats table equals a re-aggregation over blocks
   */
 object CheckIndex {
 
@@ -56,6 +54,14 @@ object CheckIndex {
     val dupIds = idx.docs.groupBy($"docId").count().filter($"count" > 1).count()
     if (dupIds > 0) problems += s"$dupIds duplicate docIds across segments"
 
+    // each doc's norm by docId, -1 where docmeta has no row
+    val normOf = {
+      val a = Array.fill[Short]((fs.maxDocId + 1).toInt)(-1)
+      idx.docs.select($"docId", $"norm").as[(Long, Int)].collect()
+        .foreach { case (d, n) => a(d.toInt) = n.toShort }
+      spark.sparkContext.broadcast(a)
+    }
+
     // 3 + 4. block invariants + full decode cross-check (one pass)
     val badBlocks = idx.blocks.flatMap { b =>
       val errs = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -70,9 +76,23 @@ object CheckIndex {
           errs += s"${b.term}#${b.blockId}: decoded docId range != header"
         if (d.freqs.map(_.toLong).sum != b.blockTtf)
           errs += s"${b.term}#${b.blockId}: freq sum != blockTtf"
+        val norms = normOf.value
+        val orphans = d.docIds.filter(id => id < 0 || id >= norms.length || norms(id.toInt) < 0)
+        if (orphans.nonEmpty)
+          errs += s"${b.term}#${b.blockId}: ${orphans.length} postings have no docmeta row, " +
+            s"e.g. doc ${orphans.head}"
+        else {
+          val want = PostingsCodec.competitiveFrontier(
+            d.freqs.indices.map(i => (d.freqs(i), norms(d.docIds(i).toInt).toInt))).toSeq
+          val got = b.impactFreqs.zip(b.impactNorms).map { case (f, n) => Impact(f, n) }.toSeq
+          if (got != want)
+            errs += s"${b.term}#${b.blockId}: impact frontier ${got.mkString(",")} != " +
+              s"${want.mkString(",")} from its freqs and docmeta norms"
+        }
       }
       errs.iterator
     }.take(20)
+    normOf.destroy()
     problems ++= badBlocks
 
     // 3b. per-term block disjointness (sorted ranges may not overlap)
@@ -86,38 +106,7 @@ object CheckIndex {
       }.take(5)
     overlapping.foreach(t => problems += s"term '$t': overlapping block docId ranges")
 
-    // 5. postings vs docmeta norms: (block, docId, freq) rows outer-joined
-    // with each doc's norm, then each block's frontier recomputed
-    val postings = idx.blocks.flatMap { b =>
-      val eb = b.toEncodedBlock
-      val docIds = PostingsCodec.decodeDocs(eb)
-      val freqs = PostingsCodec.decodeFreqs(eb)
-      docIds.indices.iterator.map(i => (b.term, b.firstDocId, docIds(i), freqs(i)))
-    }.toDF("term", "firstDocId", "docId", "freq")
-      .join(idx.docs.select($"docId", $"norm"), Seq("docId"), "left_outer")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val orphans = postings.filter($"norm".isNull)
-      val nOrphans = orphans.count()
-      if (nOrphans > 0) problems += s"$nOrphans postings have no docmeta row, e.g. " +
-        orphans.select($"term", $"docId").as[(String, Long)].take(3)
-          .map { case (t, d) => s"'$t' doc $d" }.mkString(", ")
-      problems ++= postings.filter($"norm".isNotNull)
-        .groupBy($"term", $"firstDocId")
-        .agg(collect_list(struct($"freq".as("_1"), $"norm".as("_2"))).as("pairs"))
-        .join(idx.blocks.select($"term", $"firstDocId", $"blockId", $"impactFreqs", $"impactNorms"),
-          Seq("term", "firstDocId"))
-        .as[(String, Long, Seq[(Int, Int)], Int, Seq[Int], Seq[Int])]
-        .flatMap { case (t, _, pairs, bid, fs, ns) =>
-          val want = PostingsCodec.competitiveFrontier(pairs)
-          val got = fs.zip(ns).map { case (f, n) => Impact(f, n) }
-          if (got == want.toSeq) None
-          else Some(s"$t#$bid: impact frontier ${got.mkString(",")} != " +
-            s"${want.mkString(",")} from its freqs and docmeta norms")
-        }.take(20)
-    } finally postings.unpersist()
-
-    // 6. termStats vs re-aggregation
+    // 5. termStats vs re-aggregation
     val recomputed = IndexBuilder.termStatsOf(idx.blocks)
       .withColumnRenamed("docFreq", "df2").withColumnRenamed("totalTermFreq", "ttf2")
     val mismatched = idx.termStats.toDF().join(recomputed, Seq("term"), "full_outer")

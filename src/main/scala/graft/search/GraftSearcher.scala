@@ -205,15 +205,6 @@ object ScorerBuilder {
         make(ts.map(t => unweighted(t, termBlocks(t))).toArray, s, ds)
       }
 
-    /** `t`'s matches with an occurrence at a position in `[start, end)`
-      * (SpanFirstQ's window starts at 0). */
-    private def spanPosRange(t: String, start: Int, end: Int, boost: Float): DocScorer =
-      if (!present(t)) EmptyScorer
-      else {
-        val (s, ds) = weights(boost, ctx.docFreq(t), ctx.ttfOf(t))
-        new SpanFirstScorer(unweighted(t, termBlocks(t)), start, end, s, ds)
-      }
-
     private def constant(tis: Seq[DocScorer], boost: Float): DocScorer =
       if (tis.isEmpty) EmptyScorer
       else new ConstantScoreScorer(new DisjunctionSumScorer(tis.toArray), boost)
@@ -295,8 +286,16 @@ object ScorerBuilder {
             inOrder || repeats(flat), s, ds)
         }
 
-      case SpanFirstQ(t, end) => spanPosRange(t, 0, end, boost)
-      case SpanPosRangeQ(t, start, end) => spanPosRange(t, start, end, boost)
+      case sq @ (_: SpanFirstQ | _: SpanPosRangeQ) =>
+        val (t, start, end) = sq match {
+          case SpanFirstQ(t0, e) => (t0, 0, e)
+          case SpanPosRangeQ(t0, s0, e) => (t0, s0, e)
+        }
+        if (!present(t)) EmptyScorer
+        else {
+          val (s, ds) = weights(boost, ctx.docFreq(t), ctx.ttfOf(t))
+          new SpanFirstScorer(unweighted(t, termBlocks(t)), start, end, s, ds)
+        }
 
       case DisMaxQ(disjuncts, tieBreak) =>
         val subs = clauses(disjuncts, boost)

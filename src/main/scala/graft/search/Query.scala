@@ -654,7 +654,48 @@ final class QueryParser(analyzer: Analyzer) extends Serializable {
         val c = parseOr()
         if (peek.contains(RP)) pop()
         c
-      case tok => Pos(leaf(tok))
+      case Phrase(text) =>
+        val slop = peek match {
+          case Some(Word(w)) if w.startsWith("~") && w.length > 1 &&
+              w.drop(1).forall(_.isDigit) =>
+            pop(); w.drop(1).toInt
+          case _ => 0
+        }
+        val toks = analyzer.analyze(text).toSeq
+        Pos(
+          if (toks.isEmpty) MatchNoneQ
+          else if (toks.size == 1) TermQ(toks.head.term)
+          else PhraseQ(toks.map(_.term), toks.map(_.position), slop))
+      case RangeT(body, inclL, inclU) =>
+        val parts = body.split("\\s+TO\\s+", 2)
+        val lo0 = if (parts.length > 0) parts(0).trim else ""
+        val hi0 = if (parts.length > 1) parts(1).trim else ""
+        val lo = if (lo0.isEmpty || lo0 == "*") null else analyzer.lowercase(lo0)
+        val hi = if (hi0.isEmpty || hi0 == "*") null else analyzer.lowercase(hi0)
+        Pos(TermRangeQ(lo, hi, inclL, inclU))
+      case RegexT(pat) =>
+        Pos(RegexpQ(pat))
+      case Word(w) =>
+        val tilde = w.lastIndexOf('~')
+        Pos(
+          if (tilde > 0 && !w.contains("*") && !w.contains("?") &&
+              w.substring(tilde + 1).forall(_.isDigit)) {
+            val ed = w.substring(tilde + 1)
+            FuzzyQ(analyzer.lowercase(w.substring(0, tilde)),
+              if (ed.isEmpty) 2 else math.min(ed.toInt, 2))
+          }
+          else if (w.endsWith("*") && !w.dropRight(1).contains("*") && !w.contains("?"))
+            PrefixQ(analyzer.lowercase(w.dropRight(1)))
+          else if (w.contains("*") || w.contains("?"))
+            WildcardQ(analyzer.lowercase(w))
+          else {
+            val toks = analyzer.analyze(w).toSeq
+            if (toks.isEmpty) MatchNoneQ
+            else if (toks.size == 1) TermQ(toks.head.term)
+            else PhraseQ(toks.map(_.term), toks.map(_.position))
+          })
+      case other =>
+        throw new IllegalArgumentException(s"unexpected token $other")
     }
     peek match {
       // a boosted negation excludes the same docs as the plain one: it
@@ -665,50 +706,6 @@ final class QueryParser(analyzer: Analyzer) extends Serializable {
       }
       case _ => base
     }
-  }
-
-  /** The query of a term, phrase, range or regexp token. */
-  private def leaf(tok: Tok): Query = tok match {
-    case Phrase(text) =>
-      val slop = peek match {
-        case Some(Word(w)) if w.startsWith("~") && w.length > 1 &&
-            w.drop(1).forall(_.isDigit) =>
-          pop(); w.drop(1).toInt
-        case _ => 0
-      }
-      val toks = analyzer.analyze(text).toSeq
-      if (toks.isEmpty) MatchNoneQ
-      else if (toks.size == 1) TermQ(toks.head.term)
-      else PhraseQ(toks.map(_.term), toks.map(_.position), slop)
-    case RangeT(body, inclL, inclU) =>
-      val parts = body.split("\\s+TO\\s+", 2)
-      val lo0 = if (parts.length > 0) parts(0).trim else ""
-      val hi0 = if (parts.length > 1) parts(1).trim else ""
-      val lo = if (lo0.isEmpty || lo0 == "*") null else analyzer.lowercase(lo0)
-      val hi = if (hi0.isEmpty || hi0 == "*") null else analyzer.lowercase(hi0)
-      TermRangeQ(lo, hi, inclL, inclU)
-    case RegexT(pat) =>
-      RegexpQ(pat)
-    case Word(w) =>
-      val tilde = w.lastIndexOf('~')
-      if (tilde > 0 && !w.contains("*") && !w.contains("?") &&
-          w.substring(tilde + 1).forall(_.isDigit)) {
-        val ed = w.substring(tilde + 1)
-        FuzzyQ(analyzer.lowercase(w.substring(0, tilde)),
-          if (ed.isEmpty) 2 else math.min(ed.toInt, 2))
-      }
-      else if (w.endsWith("*") && !w.dropRight(1).contains("*") && !w.contains("?"))
-        PrefixQ(analyzer.lowercase(w.dropRight(1)))
-      else if (w.contains("*") || w.contains("?"))
-        WildcardQ(analyzer.lowercase(w))
-      else {
-        val toks = analyzer.analyze(w).toSeq
-        if (toks.isEmpty) MatchNoneQ
-        else if (toks.size == 1) TermQ(toks.head.term)
-        else PhraseQ(toks.map(_.term), toks.map(_.position))
-      }
-    case other =>
-      throw new IllegalArgumentException(s"unexpected token $other")
   }
 }
 

@@ -75,10 +75,13 @@ class DeleteSpec extends AnyFunSuite {
     assert(m.delGen == -1L, "full merge must clear tombstones")
     val idx = IndexStore.open(spark, dir)
     assert(!idx.hasDeletes)
-    // postings physically gone
-    val decoded = SegmentMerger.decodeToPostings(idx.blocks, idx.docs)
-      .map(_.docId).collect().toSet
+    // postings physically gone: the stored blocks' own docIds, not a join
+    // with docmeta (which would hide any the merge left behind)
+    val decoded = idx.blocks
+      .flatMap(b => graft.codec.PostingsCodec.decodeDocs(b.toEncodedBlock))
+      .collect().toSet
     assert(decoded.intersect(victims).isEmpty)
+    assert(CheckIndex.check(spark, dir).clean)
     // docmeta purged, stats shrank
     assert(idx.docs.filter($"docId".isInCollection(victims)).count() == 0)
     assert(idx.fieldStats.docCount == 300 - victims.size)
